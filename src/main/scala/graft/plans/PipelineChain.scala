@@ -56,6 +56,9 @@ object PipelineChain {
     // deterministic per sf, so rows/sec moves only with the box/code).
     val totalRows = etlCounts.map(_._2).sum
     def rps(a: Long, b: Long): String = f"${totalRows / ((b - a) / 1e9)}%.0f"
+    // stages_sec: the wall of each lake write, plus the whole load. The
+    // ETL writes run concurrently (OsmEtlJob.runTimed), so their seconds
+    // overlap and do not sum to etl_sec.
     val stagesJson = (etlStages :+ ("load" -> (t2 - t1) / 1e9))
       .map { case (n, s) => f""""$n":$s%.3f""" }.mkString("{", ",", "}")
     val line =

@@ -1,8 +1,8 @@
 package graft.plans
 
 import graft.operators.JdbcIO
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.{ArrayType, MapType, StringType, StructType}
 
 /** The terminal Postgres/PostGIS load (the reference's dump-and-reload,
@@ -21,9 +21,12 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StringType, StructType}
   *
   * Scale: each lake table loads with one `df.write.jdbc` — per-partition
   * connections, batched inserts; fact-sized tables inherit the lake's
-  * partitioning (a 1000-executor load opens 1000 connections, which is a
-  * server-side knob, not an engine limit — repartition(n) before calling
-  * if the serving DB wants fewer writers).
+  * partitioning. The tables load concurrently, yet the open connections
+  * stay bounded by the executors' task slots, because each connection
+  * belongs to a running task (plus one short-lived driver connection per
+  * table for the slice delete). A 1000-slot cluster can therefore open
+  * 1000 connections — a server-side knob, not an engine limit;
+  * repartition(n) before calling if the serving DB wants fewer writers.
   *
   * Usage: PostgisLoadJob <lakeDir> <jdbcUrl|derby:embedded> [region] [tablePrefix]
   */
@@ -166,8 +169,11 @@ object PostgisLoadJob {
   val SliceColumn = "load_region"
 
   /** Load every lake table present under `lakeDir` into `url`; returns
-    * (table -> rows loaded this run). Factored out of main so JdbcSpec
-    * drives the identical path against embedded Derby.
+    * (table -> rows loaded this run), counted by the load itself. Factored
+    * out of main so JdbcSpec drives the identical path against embedded
+    * Derby. The tables load concurrently ([[Concurrent.all]]), each under
+    * the job description `postgis_load <target>`; if one fails, the others
+    * still run to their end before its error is thrown.
     *
     * Two idempotency modes, both safe under Airflow retries:
     *  - `region = Some(label)` — UNIFIED tables (the reference's
@@ -188,33 +194,32 @@ object PostgisLoadJob {
   def load(spark: SparkSession, lakeDir: String, url: String,
            tablePrefix: String = "osm_", region: Option[String] = None,
            creds: Option[(String, String)] = None): Seq[(String, Long)] = {
-    val loaded = LakeTables.flatMap { t =>
-      val path = s"$lakeDir/$t"
-      val exists = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(path))
-      if (!exists) None
-      else {
-        val raw = relational(spark.read.parquet(path))
-        val target = s"$tablePrefix$t"
-        region match {
-          case Some(label) =>
-            val rel = raw.withColumn(SliceColumn, org.apache.spark.sql.functions.lit(label))
-            JdbcIO.deleteSlice(url, target, SliceColumn, label, creds)
-            JdbcIO.writeTable(rel, url, target,
-              columnTypes = columnTypePins(rel, url), creds = creds) // append creates on first load
-            Some(t -> raw.count())
-          case None =>
-            JdbcIO.writeTable(raw, url, target,
-              columnTypes = columnTypePins(raw, url), overwrite = true, creds = creds)
-            Some(t -> raw.count())
-        }
-      }
+    val present = LakeTables.filter { t =>
+      val path = new org.apache.hadoop.fs.Path(s"$lakeDir/$t")
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
     }
-    require(loaded.nonEmpty,
+    require(present.nonEmpty,
       s"PostgisLoadJob: no lake tables (${LakeTables.mkString("/")}) under $lakeDir — " +
         "is the lake dir mispointed? (ETL writes per-region subdirs)")
-    loaded
+    Concurrent.all(present.map { t => () =>
+      val target = s"$tablePrefix$t"
+      Concurrent.described(spark, s"postgis_load $target") {
+        val raw = relational(spark.read.parquet(s"$lakeDir/$t"))
+        val (rel, overwrite) = region match {
+          case Some(label) =>
+            JdbcIO.deleteSlice(url, target, SliceColumn, label, creds)
+            (raw.withColumn(SliceColumn, lit(label)), false) // append creates on first load
+          case None => (raw, true)
+        }
+        // counted in the load's own result stage (a retried task counts
+        // once), not by a second lake scan; `get` is reached only after the
+        // write returned, since a failed write never completes the observation
+        val rows = Observation()
+        JdbcIO.writeTable(rel.observe(rows, count(lit(1)).as("rows")), url, target,
+          columnTypes = columnTypePins(rel, url), overwrite = overwrite, creds = creds)
+        t -> rows.get("rows").asInstanceOf[Long]
+      }
+    }: _*)
   }
 
   /** SQL literal for one Spark row value, for the wire-protocol leg —

@@ -136,6 +136,51 @@ class JdbcSpec extends GraftSuite {
     assert(back.where(col("bbox_minx") === 1L).count() === 25L)
   }
 
+  test("PostgisLoadJob: a failing table fails the load only after every other table has loaded") {
+    // The four tables load concurrently. A table that cannot be read, or
+    // whose rows the database rejects mid-write (the observed count then
+    // never completes), must fail the load with its own error, without
+    // hanging and without leaving a sibling load still running.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    def lakeWith(relations: String => Unit): String = {
+      val lake = java.nio.file.Files.createTempDirectory("graft_pg_fail").toString
+      T.nation(spark, sf).select(col("n_nationkey").as("way_id"), col("n_name").as("name"))
+        .write.parquet(s"$lake/ways")
+      T.nation(spark, sf).select(col("n_nationkey").as("way_id"), lit(1.5).as("area"))
+        .write.parquet(s"$lake/areas")
+      T.region(spark, sf).select(col("r_regionkey").as("node_id"), col("r_name").as("layer"))
+        .write.parquet(s"$lake/layers")
+      relations(s"$lake/relations")
+      lake
+    }
+    val unreadable = lakeWith { dir =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/part-00000.parquet"),
+        "not a parquet file".getBytes("UTF-8"))
+    }
+    // longer than the VARCHAR(512) pin: Derby rejects the row inside the write
+    val rejected = lakeWith { dir =>
+      T.region(spark, sf).select(col("r_regionkey").as("relation_id"),
+        concat(lit("relations-"), repeat(lit("x"), 600)).as("name"))
+        .write.parquet(dir)
+    }
+    for ((lake, cause) <- Seq(unreadable -> "part-00000.parquet", rejected -> "truncation")) {
+      val url = JdbcIO.freshEmbeddedDerby("graft_spec_pg_fail")
+      val load = Future(graft.plans.PostgisLoadJob.load(spark, lake, url))(
+        scala.concurrent.ExecutionContext.global)
+      val err = intercept[Exception](Await.result(load, 3.minutes))
+      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(_.toString).mkString("\n")
+      assert(chain.contains(cause), chain)
+      // every sibling branch ran to its end before the error surfaced
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+      assert(JdbcIO.readTable(spark, url, "osm_ways").count() === 25L)
+      assert(JdbcIO.readTable(spark, url, "osm_areas").count() === 25L)
+      assert(JdbcIO.readTable(spark, url, "osm_layers").count() === 5L)
+    }
+  }
+
   test("unified tables: two regions slice-replace-load into one table, idempotently") {
     // The reference loads every region into ONE PostGIS `osm` database
     // (`/root/reference/osm_etl.py:69-91`); here two per-region lake dirs

@@ -8,6 +8,19 @@ import org.apache.spark.sql.functions._
   */
 class OsmEtlJobSpec extends GraftSuite {
 
+  /** Two lakes hold the same rows, table by table (WKB bytes and doubles
+    * included): sorted columns, `exceptAll` both ways. */
+  private def assertSameLake(expected: String, actual: String, what: String): Unit =
+    for (t <- Seq("ways", "relations", "areas", "layers")) {
+      val e = spark.read.parquet(s"$expected/$t")
+      val a = spark.read.parquet(s"$actual/$t")
+      val cols = e.columns.sorted.map(col(_))
+      assert(a.select(cols: _*).exceptAll(e.select(cols: _*)).count() === 0,
+             s"$t: $what rows not in the expected lake")
+      assert(e.select(cols: _*).exceptAll(a.select(cols: _*)).count() === 0,
+             s"$t: expected rows not in the $what lake")
+    }
+
   test("OsmEtlJob writes a partition-pruned, reconcilable lake") {
     val out = java.nio.file.Files.createTempDirectory("graft_etl").toString
     // run the stages in-process (main would spawn its own session)
@@ -179,15 +192,7 @@ class OsmEtlJobSpec extends GraftSuite {
     val incCounts = plans.OsmEtlJob
       .runIncremental(spark, prevDir, sf, prevOut, incOut, "2024-08-01").toMap
     assert(incCounts === fullCounts)
-    for (t <- Seq("ways", "relations", "areas", "layers")) {
-      val f = spark.read.parquet(s"$fullOut/$t")
-      val i = spark.read.parquet(s"$incOut/$t")
-      val cols = f.columns.sorted.map(col(_))
-      assert(i.select(cols: _*).exceptAll(f.select(cols: _*)).count() === 0,
-             s"$t: incremental rows not in full rebuild")
-      assert(f.select(cols: _*).exceptAll(i.select(cols: _*)).count() === 0,
-             s"$t: full-rebuild rows not in incremental")
-    }
+    assertSameLake(fullOut, incOut, "incremental")
     // the deleted way is really gone, the added ways really arrived
     val incWays = spark.read.parquet(s"$incOut/ways")
     assert(incWays.where(col("way_id") === ghost).count() === 0)
@@ -249,14 +254,83 @@ class OsmEtlJobSpec extends GraftSuite {
     val fullCounts = plans.OsmEtlJob.run(spark, sf, fullOut, "2024-08-01").toMap
     val oscCounts = plans.OsmEtlJob.run(spark, recon, oscOut, "2024-08-01").toMap
     assert(oscCounts === fullCounts)
-    for (t <- Seq("ways", "relations", "areas", "layers")) {
-      val f = spark.read.parquet(s"$fullOut/$t")
-      val o = spark.read.parquet(s"$oscOut/$t")
-      val cols = f.columns.sorted.map(col(_))
-      assert(o.select(cols: _*).exceptAll(f.select(cols: _*)).count() === 0,
-             s"$t: osc-fed rows not in full rebuild")
-      assert(f.select(cols: _*).exceptAll(o.select(cols: _*)).count() === 0,
-             s"$t: full-rebuild rows not in osc-fed lake")
-    }
+    assertSameLake(fullOut, oscOut, "osc-fed")
+  }
+
+  test("runTimed lake == per-table assembly over the assembled ways; counts come from the writes") {
+    // runTimed assembles ways once and derives relations and areas from
+    // the written ways table. The reference composes the assemblies
+    // directly over the in-memory ways, one write per table, and goes
+    // through the same parquet round trip.
+    val tmp = java.nio.file.Files.createTempDirectory("graft_etl_eq").toString
+    val date = "2024-08-01"
+    val (counts, stages) = plans.OsmEtlJob.runTimed(spark, sf, s"$tmp/lake", date)
+    assert(stages.map(_._1).toSet === Set("ways", "relations", "areas", "layers"))
+    val (refs, nodes, orders) = plans.OsmEtlJob.stores(spark, sf)
+    val ways = plans.OsmEtlJob.assembleWays(refs, nodes)
+    val members = orders.select(col("o_custkey").as("relation_id"), col("o_orderkey").as("member_way"))
+    val regions = plans.OsmEtlJob.regionOfWay(
+      orders, T.customer(spark, sf), T.nation(spark, sf), T.region(spark, sf))
+    def ref(t: String, df: org.apache.spark.sql.DataFrame, partitionBy: String*): Unit =
+      df.withColumn("pgosm_date", lit(date))
+        .write.partitionBy(partitionBy: _*).parquet(s"$tmp/ref/$t")
+    ref("ways", ways.join(regions, "way_id"), "region", "subregion", "pgosm_date")
+    ref("relations", plans.OsmEtlJob.assembleRelations(members, ways), "pgosm_date")
+    ref("areas", plans.OsmEtlJob.assembleAreas(ways), "pgosm_date")
+    ref("layers", plans.OsmEtlJob.layerRows(nodes, None), "layer", "pgosm_date")
+    assertSameLake(s"$tmp/ref", s"$tmp/lake", "runTimed")
+    // the observed counts are the lake's row counts
+    assert(counts.map(_._1) === Seq("ways", "relations", "areas", "layers"))
+    for ((t, n) <- counts)
+      assert(n === spark.read.parquet(s"$tmp/lake/$t").count(), s"$t: observed count")
+  }
+
+  test("incremental == full rebuild when a way routes to no region") {
+    // One order's customer is missing from the current snapshot's
+    // customer table, so its way routes to no region. Both modes must
+    // then leave it out of ways, areas and every relation's stats alike.
+    val tmp = java.nio.file.Files.createTempDirectory("graft_inc_unrouted").toString
+    val curr = s"$tmp/curr"
+    val lost = T.lineitem(spark, sf).agg(min("l_orderkey")).head.getLong(0)
+    T.orders(spark, sf)
+      .withColumn("o_custkey",
+        when(col("o_orderkey") === lost, lit(-1L)).otherwise(col("o_custkey")))
+      .write.parquet(s"$curr/orders.parquet")
+    for (t <- Seq("lineitem", "part", "customer", "nation", "region"))
+      T(spark, sf, t).write.parquet(s"$curr/$t.parquet")
+    val (prevOut, fullOut, incOut) = (s"$tmp/prevlake", s"$tmp/full", s"$tmp/inc")
+    plans.OsmEtlJob.run(spark, sf, prevOut, "2024-07-25")
+    val fullCounts = plans.OsmEtlJob.run(spark, curr, fullOut, "2024-08-01").toMap
+    val incCounts = plans.OsmEtlJob
+      .runIncremental(spark, sf, curr, prevOut, incOut, "2024-08-01").toMap
+    for (t <- Seq("ways", "areas"))
+      assert(spark.read.parquet(s"$fullOut/$t").where(col("way_id") === lost).count() === 0,
+             s"$t: the unrouted way must not be in the lake")
+    assert(spark.read.parquet(s"$prevOut/ways").where(col("way_id") === lost).count() === 1)
+    assert(incCounts === fullCounts)
+    assertSameLake(fullOut, incOut, "incremental")
+  }
+
+  test("a failing ETL branch fails runTimed only after every other write has finished") {
+    // A style whose rule casts the non-numeric brand tag to int fails at
+    // run time (ANSI cast) inside the `layers` write, which runs beside
+    // the ways -> relations/areas branch.
+    val tmp = java.nio.file.Files.createTempDirectory("graft_etl_fail").toString
+    val style = java.nio.file.Paths.get(s"$tmp/bad_style.json")
+    java.nio.file.Files.write(style,
+      """{"layers":[{"name":"bad","where":{"tag":"brand","type":"int","op":">=","value":"25"}}]}"""
+        .getBytes("UTF-8"))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    val err = try intercept[Exception] {
+      plans.OsmEtlJob.runTimed(spark, sf, s"$tmp/lake", "2024-08-01", Some(style.toString))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(_.toString).mkString("\n")
+    assert(chain.contains("CAST_INVALID_INPUT"), chain)
+    for (t <- Seq("ways", "relations", "areas"))
+      assert(new java.io.File(s"$tmp/lake/$t/_SUCCESS").exists(), s"$t write did not finish")
+    assert(!new java.io.File(s"$tmp/lake/layers/_SUCCESS").exists())
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
   }
 }
