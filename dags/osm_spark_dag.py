@@ -20,6 +20,9 @@ Mapping to the reference, task for task:
   schedule_interval='@weekly' + pgosm_date pin (osm_etl.py:13,45) are
       kept verbatim; the snapshot date flows through as a job argument.
 
+Each task's `--master` (the `spark_master` Variable) decides where it runs:
+the job mains configure no master of their own (`graft.Sessions`).
+
 Docs-only artifact: this file is not executed by the test suite (Airflow
 is not a dependency of the engine); it documents the deployment shape.
 """

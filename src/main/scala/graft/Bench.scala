@@ -2,8 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Headline benchmark: runs every registered query against
-  * SPARK_GRAFT_SF_DIR (driver: sf0.1) on local[32] and emits machine-
-  * readable timings.
+  * SPARK_GRAFT_SF_DIR (default sf0.1) in a [[Sessions]] session and
+  * emits machine-readable timings.
   *
   * Output contract (driver tail-captures ~2000 chars of stdout, so the
   * record is made robust to that):
@@ -50,7 +50,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Constant-shape CPU sentinel: ~0.1–0.3 s of pure codegen'd arithmetic
-    * on an unloaded local[32]; no IO, no shuffle, no caching — its only
+    * on an unloaded local[n]; no IO, no shuffle, no caching — its only
     * variable is how much CPU the box is actually giving this JVM. */
   private[graft] def sentinelSec(spark: SparkSession): Double = {
     val t0 = System.nanoTime()
@@ -67,26 +67,17 @@ object Bench {
     catch { case _: Throwable => Seq.empty }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // local A/B profiling aid (optimization rounds): extra session confs
-    // as "k=v;k2=v2". The driver never sets it, so the recorded bench
-    // always runs the committed configuration above. A run with extras
-    // is self-labelling (ADVICE r19): it lands in BENCH_FILTERED.json,
-    // never the canonical BENCH_FULL.json, and the override string is
-    // stamped into the emitted record.
+    val spark = Sessions.get()
+    // local A/B profiling aid (optimization rounds): extra runtime SQL
+    // confs as "k=v;k2=v2", set on the session after it starts (a static
+    // key fails loudly). Unset, the bench runs the committed
+    // configuration. A run with extras is self-labelling (ADVICE r19):
+    // it lands in BENCH_FILTERED.json, never the canonical
+    // BENCH_FULL.json, and the override string is stamped into the
+    // emitted record.
     val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").filter(_.nonEmpty)
     extraConf.foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
     // local profiling aid: SPARK_GRAFT_ONLY=q1,q2 restricts the run;
     // the driver never sets it, so the recorded bench is always complete.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

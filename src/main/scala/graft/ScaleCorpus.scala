@@ -109,14 +109,7 @@ object ScaleCorpus {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleCorpus <srcDir> <outDir> [factor=10]")
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.get()
     try write(spark, args(0), args(1), factor)
     finally spark.stop()
   }

@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Dev measurement tool (optimization rounds, guide §1.2/§7.1): runs ONE
-  * registered query under the bench session configs and prints a
-  * per-stage breakdown — wall duration, task count, executor run time,
-  * input / shuffle-read / shuffle-write bytes, and the first call-site
-  * line — so "where do the barrier jobs spend" claims in
+/** Dev measurement tool (optimization rounds): runs ONE registered
+  * query in a [[Sessions]] session, materialized in full by a `noop`
+  * write as the benchmark does (a `count()` would let Catalyst prune
+  * sorts, windows, joins and fused kernels, profiling a plan no user
+  * runs), and prints a per-stage breakdown — wall duration, task count,
+  * executor run time, input / shuffle-read / shuffle-write bytes, and the
+  * first call-site line — so "where do the barrier jobs spend" claims in
   * OPTIMIZATION_*.md rest on stage numbers, not assertion.
   *
   * Usage: runMain graft.StageProfile <key> [sfDir] [runs]
@@ -17,17 +19,7 @@ object StageProfile {
     val key = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.get()
 
     case class St(id: Int, name: String, wallMs: Long, tasks: Int,
                   execMs: Long, inMB: Double, srMB: Double, swMB: Double,
@@ -55,7 +47,7 @@ object StageProfile {
     for (r <- 1 to runs) {
       stages.clear(); jobs.clear()
       val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       graft.Caches.drain()
       spark.catalog.clearCache()

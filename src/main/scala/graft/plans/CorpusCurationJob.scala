@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.T
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The training-corpus counterpart of [[OsmEtlJob]]: one Airflow-invokable
@@ -182,15 +182,7 @@ object CorpusCurationJob {
     val sfDir = args(0)
     val outDir = args(1)
     val snapshotDate = if (args.length > 2) args(2) else "2024-07-25"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .appName(s"corpus-curation-$snapshotDate")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get(s"corpus-curation-$snapshotDate")
 
     val raw = normalize(T.documents(spark, sfDir))
     val (kept, quarantined) = {

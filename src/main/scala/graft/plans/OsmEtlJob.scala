@@ -348,15 +348,7 @@ object OsmEtlJob {
     val sfDir = positional(0)
     val outDir = positional(1)
     val pgosmDate = if (positional.length > 2) positional(2) else "2024-07-25" // osm_etl.py:13
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .appName(s"osm-etl-$pgosmDate")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get(s"osm-etl-$pgosmDate")
     val counts = incremental match {
       case Some((prevSf, prevLake)) =>
         runIncremental(spark, prevSf, sfDir, prevLake, outDir, pgosmDate, layerSpecPath).toMap

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end check of the Spark→Postgres WIRE write leg against a real
@@ -25,13 +24,7 @@ object PgWireLoadCheck {
   def main(args: Array[String]): Unit = {
     val Array(host, portS, user, db) = args.take(4)
     val port = portS.toInt
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get()
     import spark.implicits._
     try {
       // 300 ways across 4 partitions; every 10th row NULL-dated so the

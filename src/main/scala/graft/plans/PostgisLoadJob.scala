@@ -283,14 +283,7 @@ object PostgisLoadJob {
     val prefix = if (args.length > 3) args(3) else "osm_"
     val creds = for (u <- sys.env.get("GRAFT_PG_USER"); p <- sys.env.get("GRAFT_PG_PASSWORD"))
       yield (u, p)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .appName("postgis-load")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get("postgis-load")
     val loaded = load(spark, lakeDir, url, prefix, region, creds)
     println(loaded.map { case (t, n) => s""""$t":$n""" }
       .mkString("""{"job":"postgis_load",""", ",", "}"))

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.T
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer training as the driver loop the
@@ -90,14 +90,7 @@ object TokenizerBpeTrainJob {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val nMerges = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .appName(s"bpe-train-$nMerges")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get(s"bpe-train-$nMerges")
     val (merges, sym) = train(T.documents(spark, sfDir), nMerges)
     val vocab = sym.select(explode(split(col("sym"), " ")).as("s")).distinct().count()
     val mj = merges.map { case (a, b, c) => s"""["$a","$b",$c]""" }.mkString("[", ",", "]")

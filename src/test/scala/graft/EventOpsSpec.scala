@@ -217,18 +217,11 @@ class EventOpsSpec extends GraftSuite {
     // fixture size selects), so pin the equivalence engine-side by
     // forcing BOTH and diffing row-for-row.
     val key = "spark.sql.graft.ntileDriverGateRows"
-    val prev = spark.conf.getOption(key)
     def rows() = SparkEntry.queries("event_rfm")(spark, sf)
       .collect().map(_.toSeq).toSeq
-    try {
-      spark.conf.set(key, "0") // force the distributed arm
-      val dist = rows()
-      spark.conf.set(key, s"${Long.MaxValue}") // force the driver arm
-      val drv = rows()
-      assert(dist.nonEmpty && dist == drv,
-        "both globalNtileMulti arms must produce identical rows, schema order included")
-    } finally {
-      prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
-    }
+    val dist = withConf(key -> "0")(rows()) // force the distributed arm
+    val drv = withConf(key -> s"${Long.MaxValue}")(rows()) // force the driver arm
+    assert(dist.nonEmpty && dist == drv,
+      "both globalNtileMulti arms must produce identical rows, schema order included")
   }
 }

@@ -86,16 +86,12 @@ class OsmEtlJobSpec extends GraftSuite {
     val under = plans.OsmEtlJob.assembleWays(refs, nodes)
     assert(under.queryExecution.executedPlan.toString().contains("BroadcastHashJoin"),
            "under the budget the node resolve must broadcast")
-    spark.conf.set("spark.sql.graft.broadcastGateBytes", "1")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.graft.broadcastGateBytes" -> "1",
+             "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val over = plans.OsmEtlJob.assembleWays(refs, nodes)
       assert(!over.queryExecution.executedPlan.toString().contains("BroadcastHashJoin"),
              "above the budget the node resolve must shuffle, not broadcast")
       assert(over.count() === under.count(), "gate must never change results")
-    } finally {
-      spark.conf.unset("spark.sql.graft.broadcastGateBytes")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
@@ -109,17 +105,13 @@ class OsmEtlJobSpec extends GraftSuite {
     assert(underPlan.contains("BroadcastHashJoin") &&
            !underPlan.contains("SortMergeJoin") && !underPlan.contains("ShuffledHashJoin"),
            "under the budget all three dim joins must broadcast")
-    spark.conf.set("spark.sql.graft.broadcastGateBytes", "1")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.graft.broadcastGateBytes" -> "1",
+             "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val over = plans.OsmEtlJob.regionOfWay(o, c, n, r)
       val overPlan = over.queryExecution.executedPlan.toString()
       assert(overPlan.contains("SortMergeJoin") || overPlan.contains("ShuffledHashJoin"),
              "above the budget the customer join must shuffle, not broadcast")
       assert(over.count() === under.count(), "gate must never change results")
-    } finally {
-      spark.conf.unset("spark.sql.graft.broadcastGateBytes")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
@@ -320,11 +312,11 @@ class OsmEtlJobSpec extends GraftSuite {
     java.nio.file.Files.write(style,
       """{"layers":[{"name":"bad","where":{"tag":"brand","type":"int","op":">=","value":"25"}}]}"""
         .getBytes("UTF-8"))
-    val ansi = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    val err = try intercept[Exception] {
-      plans.OsmEtlJob.runTimed(spark, sf, s"$tmp/lake", "2024-08-01", Some(style.toString))
-    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    val err = withConf("spark.sql.ansi.enabled" -> "true") {
+      intercept[Exception] {
+        plans.OsmEtlJob.runTimed(spark, sf, s"$tmp/lake", "2024-08-01", Some(style.toString))
+      }
+    }
     val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .map(_.toString).mkString("\n")
     assert(chain.contains("CAST_INVALID_INPUT"), chain)

@@ -133,21 +133,17 @@ class PlanSpec extends GraftSuite {
     val withBcast = run(spark, sf)
     assert(withBcast.queryExecution.executedPlan.toString().contains("BroadcastHashJoin"),
            "under the budget the dictionary join must broadcast")
-    spark.conf.set("spark.sql.graft.broadcastGateBytes", "1")
     // the planner may still choose to broadcast on its own estimates; the
     // gate's job is only to stop FORCING it — so also floor Spark's
     // auto-broadcast to prove the shuffle path exists and agrees.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.graft.broadcastGateBytes" -> "1",
+             "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val sheared = run(spark, sf)
       assert(!sheared.queryExecution.executedPlan.toString().contains("BroadcastHashJoin"),
              "above the budget the dictionary join must not broadcast")
       val a = withBcast.collect().map(_.toSeq)
       val b = sheared.collect().map(_.toSeq)
       assert(a.toSeq === b.toSeq, "gate must never change results")
-    } finally {
-      spark.conf.unset("spark.sql.graft.broadcastGateBytes")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 

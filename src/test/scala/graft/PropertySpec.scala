@@ -317,8 +317,7 @@ class PropertySpec extends GraftSuite {
     // force the DISTRIBUTED contraction arm — this test pins its round
     // bound, which the size-gated driver union-find (gate=0 disables it)
     // would trivially satisfy without exercising the contraction at all
-    spark.conf.set("spark.sql.graft.ccDriverGateEdges", "0")
-    try {
+    withConf("spark.sql.graft.ccDriverGateEdges" -> "0") {
       val (labels, rounds) = operators.LlmOps.connectedComponents(verts, edges)
       assert(rounds <= 15, s"O(log n) contraction expected ≤15 rounds on a $n-chain, took $rounds")
       assert(labels.where($"lbl" =!= 0L).isEmpty, "one chain component, min label 0")
@@ -331,7 +330,7 @@ class PropertySpec extends GraftSuite {
       intercept[IllegalArgumentException] {
         operators.LlmOps.connectedComponents(verts, edges, maxIters = 1)
       }
-    } finally spark.conf.unset("spark.sql.graft.ccDriverGateEdges")
+    }
   }
 
   test("connectedComponents driver union-find arm is bit-interchangeable with the contraction") {
@@ -348,13 +347,12 @@ class PropertySpec extends GraftSuite {
     val edges = es.toDF("src", "dst")
     val (driver, dr) = operators.LlmOps.connectedComponents(verts, edges)
     assert(dr === 0, "under the default gate the driver arm must answer")
-    spark.conf.set("spark.sql.graft.ccDriverGateEdges", "0")
-    try {
+    withConf("spark.sql.graft.ccDriverGateEdges" -> "0") {
       val (dist, dd) = operators.LlmOps.connectedComponents(verts, edges)
       assert(dd > 0, "gate=0 must run the distributed contraction")
       assert(driver.exceptAll(dist).isEmpty && dist.exceptAll(driver).isEmpty,
         "driver and distributed labels must be identical")
-    } finally spark.conf.unset("spark.sql.graft.ccDriverGateEdges")
+    }
   }
 
   test("asof-join emulation picks the latest quote at or before each trade") {

@@ -20,14 +20,11 @@ class Round13OpsSpec extends GraftSuite {
     // Force the DISTRIBUTED arm: at fixture scale the size gate would
     // pick the driver fast path, and this pin exists precisely to hold
     // the scale path to the textbook formula.
-    val gateKey = "spark.sql.graft.ntileDriverGateRows"
-    val prevGate = spark.conf.getOption(gateKey)
-    spark.conf.set(gateKey, "0")
-    val got =
-      try SparkEntry.queries("event_rfm")(spark, sf).collect()
+    val got = withConf("spark.sql.graft.ntileDriverGateRows" -> "0") {
+      SparkEntry.queries("event_rfm")(spark, sf).collect()
         .map(r => r.getLong(0) -> ((r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))))
         .toMap
-      finally prevGate.fold(spark.conf.unset(gateKey))(v => spark.conf.set(gateKey, v))
+    }
     val u = T.events(spark, sf)
       .groupBy(col("user_id"))
       .agg(max(unix_millis(col("ts"))).as("last_ms"),

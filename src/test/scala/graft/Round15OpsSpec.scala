@@ -237,13 +237,12 @@ class Round15OpsSpec extends GraftSuite {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got.size == 11, "all 11 chain nodes reached")
     assert((0L to 10L).forall(i => got(i) == 2.5 * i), "weighted distances exact")
-    spark.conf.set("spark.sql.graft.routeDriverGateEdges", "0") // force the distributed arm
-    try {
+    withConf("spark.sql.graft.routeDriverGateEdges" -> "0") { // force the distributed arm
       val boom = intercept[IllegalStateException] {
         operators.OsmKernels.relaxConverged(und, source = 0L, maxRounds = 2)
       }
       assert(boom.getMessage.contains("frontier still live"), "budget overflow is loud")
-    } finally spark.conf.unset("spark.sql.graft.routeDriverGateEdges")
+    }
   }
 
   test("relaxConverged: driver Dijkstra arm ≡ distributed relaxation, bit-for-bit") {
@@ -258,10 +257,10 @@ class Round15OpsSpec extends GraftSuite {
     val und = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v"), col("w")))
     val fast = operators.OsmKernels.relaxConverged(und, source = 1L)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    spark.conf.set("spark.sql.graft.routeDriverGateEdges", "0")
-    val slow = try operators.OsmKernels.relaxConverged(und, source = 1L)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    finally spark.conf.unset("spark.sql.graft.routeDriverGateEdges")
+    val slow = withConf("spark.sql.graft.routeDriverGateEdges" -> "0") {
+      operators.OsmKernels.relaxConverged(und, source = 1L)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    }
     assert(fast.keySet == slow.keySet, "both arms reach the same node set")
     val diff = fast.keys.filter(k => fast(k) != slow(k))
     assert(diff.isEmpty, s"arms diverged on nodes $diff — path sums must be bit-identical")

@@ -98,19 +98,20 @@ class StreamingSpec extends GraftSuite {
       java.nio.file.Paths.get(sf, "events.parquet"), src.resolve("events.parquet"))
     // events.ts physical type varies by fixture generation (nanos-long /
     // NTZ micros) → same schema-driven normalization as the batch loader
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(src.toString).schema
-    val stream = T.normalizeEventTs(
-      spark.readStream.schema(rawSchema).parquet(src.toString))
-    val q = StreamingOps.tumbling(stream)
-      .writeStream.format("memory").queryName("twin_tumbling")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("twin_tumbling")
-      .orderBy(col("window_start"), col("event_type")).collect().toSeq
-    val batch = StreamingOps.tumbling(T.events(spark, sf))
-      .orderBy(col("window_start"), col("event_type")).collect().toSeq
-    assert(streamed == batch)
+    withConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      val rawSchema = spark.read.parquet(src.toString).schema
+      val stream = T.normalizeEventTs(
+        spark.readStream.schema(rawSchema).parquet(src.toString))
+      val q = StreamingOps.tumbling(stream)
+        .writeStream.format("memory").queryName("twin_tumbling")
+        .outputMode("complete").start()
+      try q.processAllAvailable() finally q.stop()
+      val streamed = spark.table("twin_tumbling")
+        .orderBy(col("window_start"), col("event_type")).collect().toSeq
+      val batch = StreamingOps.tumbling(T.events(spark, sf))
+        .orderBy(col("window_start"), col("event_type")).collect().toSeq
+      assert(streamed == batch)
+    }
   }
 
   test("stream_osm_upsert: continuous replication apply reaches the hand-computed lake state") {

@@ -7,17 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite fast; tests must not depend on session-level mutable state).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.get("graft-test", n = 4)
   val sf: String = "/root/testdata/sf0.001"
 }
 
@@ -35,4 +25,14 @@ object Heavy extends org.scalatest.Tag("graft.Heavy")
 abstract class GraftSuite extends AnyFunSuite {
   protected lazy val spark: SparkSession = TestSpark.spark
   protected val sf: String = TestSpark.sf
+
+  /** Runs `body` with the given session confs set, then puts each key
+    * back to its previous value (unset only if it had none), so a test
+    * never leaks a conf into, or strips a default from, later suites. */
+  protected def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.reverse.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }

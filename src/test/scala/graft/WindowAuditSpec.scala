@@ -72,13 +72,19 @@ class WindowAuditSpec extends GraftSuite {
 
   test("every unpartitioned window rides a documented bounded source", Heavy) {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    // a key whose plan fails to build hides its windows from the audit,
+    // so each such key is collected and reported, never skipped
+    val unplanned = scala.collection.mutable.LinkedHashMap[String, String]()
     val offenders = SparkEntry.registry.flatMap { q =>
       try {
         val plan = q.run(spark, sf).queryExecution.optimizedPlan
         val globals = plan.collect { case w: LWindow if w.partitionSpec.isEmpty => w }
         if (globals.isEmpty) None else Some(q.key)
-      } catch { case _: Throwable => None } // execution failures are EntrySpec's job
+      } catch {
+        case scala.util.control.NonFatal(t) => unplanned(q.key) = t.toString.take(200); None
+      }
     }.toSet
+    assert(unplanned.isEmpty, s"plans the window audit could not build: $unplanned")
     val undocumented = offenders -- boundedGlobalWindows.keySet
     val stale = boundedGlobalWindows.keySet -- offenders
     assert(undocumented.isEmpty && stale.isEmpty,

@@ -242,11 +242,15 @@ def check() -> int:
             bad(f"dependency edge {e[0]} >> {e[1]} missing (chain mirrors "
                 f"osm_etl.py:93); found {sorted(edges)}")
 
-    # every task is a spark-submit of an engine job class
+    # every task is a spark-submit of an engine job class, and names its
+    # --master: the jobs set no master of their own (graft.Sessions), so
+    # the flag is what places them on the cluster
     for t in list(tasks.values()) + [t for g in groups.values() for t in g.tasks]:
         if "spark-submit" not in t.bash_command or "graft.plans." not in t.bash_command:
             bad(f"{t.task_id}: bash_command is not a spark-submit of a graft job: "
                 f"{t.bash_command[:120]!r}")
+        elif "--master " not in t.bash_command:
+            bad(f"{t.task_id}: spark-submit without --master: {t.bash_command[:120]!r}")
 
     # credentials discipline: the load tasks pass Postgres creds through
     # env, never the command line (which leaks via logs / Spark UI)
