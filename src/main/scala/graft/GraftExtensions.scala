@@ -25,10 +25,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach { case (ident, info, builder) =>
       e.injectFunction((ident, info, builder))
     }
-    // the whole-operator extension (org.apache.spark.sql.graft.AsofJoin):
-    // cluster-wide deployments get the planner strategy with the same
-    // one-liner; Asof.join also installs it per-session for live use
+    // the whole-operator extensions (org.apache.spark.sql.graft.AsofJoin,
+    // RangeJoin): cluster-wide deployments get their planner strategies
+    // with the same one-liner; Asof.join and Ranged.join also install
+    // theirs per-session for live use
     e.injectPlannerStrategy(_ => org.apache.spark.sql.graft.AsofJoinStrategy)
+    e.injectPlannerStrategy(_ => org.apache.spark.sql.graft.RangeJoinStrategy)
   }
 }
 

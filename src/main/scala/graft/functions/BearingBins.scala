@@ -2,10 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -20,20 +17,10 @@ import org.apache.spark.sql.types._
   * exact BIGINTs, identical to the in-fold rule it replaces:
   * zero-length segments skipped; 12·|dy| < 5·|dx| → E-W;
   * 5·|dy| > 12·|dx| → N-S; else dx·dy > 0 → NE-SW else NW-SE.
+  * Nulls follow [[PointFold]]'s rule (NULL result). The lambda did not
+  * null-propagate here: its IF chain sent a null segment to NW-SE.
   */
-case class BearingBins(child: Expression) extends UnaryExpression {
-
-  // containsNull=true rejected (ADVICE r19) — see RingShoe: the loop's
-  // getStruct().getLong() would NPE on a null element instead of the
-  // lambda's null-propagation; producers here are containsNull=false.
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(st: StructType, false) if st.length == 4 &&
-      st(2).dataType == LongType && st(3).dataType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<struct<_,_,lon_c:bigint,lat_c:bigint>> " +
-        s"with non-null elements, got ${other.simpleString}")
-  }
+case class BearingBins(child: Expression) extends PointFold(Seq(2, 3), pairwise = true) {
 
   override def dataType: DataType = StructType(Seq(
     StructField("ew", LongType, nullable = false),
@@ -42,8 +29,16 @@ case class BearingBins(child: Expression) extends UnaryExpression {
     StructField("nw", LongType, nullable = false)))
   override def prettyName: String = "bearing_bins"
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
+  override protected def fold(a: ArrayData): Any = BearingBins.bins(a)
+  override protected def foldCall(a: String): String =
+    s"graft.functions.BearingBins.bins($a)"
+
+  override protected def withNewChildInternal(newChild: Expression): BearingBins =
+    copy(child = newChild)
+}
+
+object BearingBins {
+  def bins(a: ArrayData): GenericInternalRow = {
     val n = a.numElements()
     var ew = 0L; var ns = 0L; var ne = 0L; var nw = 0L
     var i = 1
@@ -66,46 +61,6 @@ case class BearingBins(child: Expression) extends UnaryExpression {
     new GenericInternalRow(Array[Any](ew, ns, ne, nw))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val ew = ctx.freshName("ew"); val ns = ctx.freshName("ns")
-      val ne = ctx.freshName("ne"); val nw = ctx.freshName("nw")
-      val px = ctx.freshName("px"); val py = ctx.freshName("py")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val dx = ctx.freshName("dx"); val dy = ctx.freshName("dy")
-      val adx = ctx.freshName("adx"); val ady = ctx.freshName("ady")
-      val r = ctx.freshName("r")
-      val gir = classOf[GenericInternalRow].getName
-      s"""
-         |int $n = $a.numElements();
-         |long $ew = 0L, $ns = 0L, $ne = 0L, $nw = 0L;
-         |long $px = $n > 0 ? $a.getStruct(0, 4).getLong(2) : 0L;
-         |long $py = $n > 0 ? $a.getStruct(0, 4).getLong(3) : 0L;
-         |for (int $i = 1; $i < $n; $i++) {
-         |  InternalRow $r = $a.getStruct($i, 4);
-         |  long $x = $r.getLong(2); long $y = $r.getLong(3);
-         |  long $dx = $x - $px; long $dy = $y - $py;
-         |  if (!($dx == 0L && $dy == 0L)) {
-         |    long $adx = java.lang.Math.abs($dx); long $ady = java.lang.Math.abs($dy);
-         |    if (12L * $ady < 5L * $adx) $ew++;
-         |    else if (5L * $ady > 12L * $adx) $ns++;
-         |    else if ($dx * $dy > 0L) $ne++;
-         |    else $nw++;
-         |  }
-         |  $px = $x; $py = $y;
-         |}
-         |${ev.value} = new $gir(new Object[]{
-         |  java.lang.Long.valueOf($ew), java.lang.Long.valueOf($ns),
-         |  java.lang.Long.valueOf($ne), java.lang.Long.valueOf($nw)});
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): BearingBins =
-    copy(child = newChild)
-}
-
-object BearingBins {
   def apply(pts: Column): Column =
     GraftColumnBridge.column(new BearingBins(GraftColumnBridge.expression(pts)))
 }

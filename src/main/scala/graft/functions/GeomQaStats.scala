@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -25,20 +23,12 @@ import org.apache.spark.sql.types._
   *
   * All counts are set-cardinality/equality logic on exact BIGINTs, so
   * equivalence is algebraic, not order- or IEEE-dependent.
-  * containsNull=true arrays are rejected (same null-hygiene rule as the
-  * other fused kernels — ADVICE r19).
+  * Nulls follow [[PointFold]]'s rule: a null element, node_ref, lon_c or
+  * lat_c gives a NULL struct. (The lambdas it replaced did not
+  * null-propagate: array_distinct counts a null as one value, and a
+  * null ref comparison left is_ring NULL beside non-null counts.)
   */
-case class GeomQaStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(st: StructType, false) if st.length == 4 &&
-      st(1).dataType == LongType &&
-      st(2).dataType == LongType && st(3).dataType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<struct<_,node_ref:bigint,lon_c:bigint,lat_c:bigint>> " +
-        s"with non-null elements, got ${other.simpleString}")
-  }
+case class GeomQaStats(child: Expression) extends PointFold(Seq(1, 2, 3), pairwise = false) {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_pts", LongType, nullable = false),
@@ -48,12 +38,9 @@ case class GeomQaStats(child: Expression) extends UnaryExpression {
     StructField("n_distinct_pts", LongType, nullable = false)))
   override def prettyName: String = "geom_qa_stats"
 
-  override def nullSafeEval(v: Any): Any =
-    GeomQaStats.compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.GeomQaStats.compute($a);")
+  override protected def fold(a: ArrayData): Any = GeomQaStats.compute(a)
+  override protected def foldCall(a: String): String =
+    s"graft.functions.GeomQaStats.compute($a)"
 
   override protected def withNewChildInternal(newChild: Expression): GeomQaStats =
     copy(child = newChild)

@@ -3,12 +3,12 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
-/** Fused per-way path folds — the codegen replacements for the remaining
+/* Fused per-way path folds — the codegen replacements for the remaining
   * zip_with + aggregate() segment lambdas of the geometry family
   * (higher-order lambdas never enter whole-stage codegen; the
   * JlSignProject/RingShoe r19 lesson). Each expression walks one way's
@@ -28,53 +28,32 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   *    op mirrored in the template's association (cast sites, Horner
   *    chains, f1 = cos·nf formed BEFORE the Δlon multiply) so the fold
   *    is bit-identical to the lambda's and the oracle's
-  *    (osm_way_length_geodesic, over struct<pos,node_ref,lon_c,vlat_c>).
+  *    (osm_way_length_geodesic, whose lat_c is the ±90°-banded latitude).
   *
-  * Null hygiene (ADVICE r19): the producers here are
-  * array_sort(collect_list(...)) arrays, whose element type carries
-  * containsNull=false — checkInputDataTypes REJECTS containsNull=true
-  * arrays outright, so a future caller whose elements can be null gets
-  * an analysis error instead of silently diverging from the lambda's
-  * null-poisoning semantics.
+  * Nulls follow PointFold's rule, which is the lambdas' own.
   */
-abstract class PathFoldBase extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(st: StructType, false) if st.length == 4 &&
-      st(2).dataType == LongType && st(3).dataType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<struct<_,_,lon:bigint,lat:bigint>> with " +
-        s"non-null elements, got ${other.simpleString}")
-  }
-}
 
 /** Σ |Δlon| + |Δlat| over consecutive points — exact BIGINT. */
-case class PathManhattan(child: Expression) extends PathFoldBase {
+case class PathManhattan(child: Expression) extends PointFold(Seq(2, 3), pairwise = true) {
   override def dataType: DataType = LongType
   override def prettyName: String = "path_manhattan"
 
-  override def nullSafeEval(v: Any): Any =
-    PathFolds.manhattan(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.PathFolds.manhattan($a);")
+  override protected def fold(a: ArrayData): Any = PathFolds.manhattan(a)
+  override protected def foldCall(a: String): String =
+    s"graft.functions.PathFolds.manhattan($a)"
 
   override protected def withNewChildInternal(newChild: Expression): PathManhattan =
     copy(child = newChild)
 }
 
 /** Σ sqrt(double(Δlon² + Δlat²)), left-associated double accumulation. */
-case class PathEuclid(child: Expression) extends PathFoldBase {
+case class PathEuclid(child: Expression) extends PointFold(Seq(2, 3), pairwise = true) {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "path_euclid"
 
-  override def nullSafeEval(v: Any): Any =
-    PathFolds.euclid(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.PathFolds.euclid($a);")
+  override protected def fold(a: ArrayData): Any = PathFolds.euclid(a)
+  override protected def foldCall(a: String): String =
+    s"graft.functions.PathFolds.euclid($a)"
 
   override protected def withNewChildInternal(newChild: Expression): PathEuclid =
     copy(child = newChild)
@@ -83,36 +62,30 @@ case class PathEuclid(child: Expression) extends PathFoldBase {
 /** Σ geoSeg(Δlon, Δlat, latSum) — the WGS84-corrected equirectangular
   * segment polynomial, bit-mirrored from OsmKernels.geoSeg/geoFactors.
   */
-case class PathGeodesic(child: Expression) extends PathFoldBase {
+case class PathGeodesic(child: Expression) extends PointFold(Seq(2, 3), pairwise = true) {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "path_geodesic"
 
-  override def nullSafeEval(v: Any): Any =
-    PathFolds.geodesic(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.PathFolds.geodesic($a);")
+  override protected def fold(a: ArrayData): Any = PathFolds.geodesic(a)
+  override protected def foldCall(a: String): String =
+    s"graft.functions.PathFolds.geodesic($a)"
 
   override protected def withNewChildInternal(newChild: Expression): PathGeodesic =
     copy(child = newChild)
 }
 
 /** Exact-BIGINT sum of the ordinal-3 struct field over the point array —
-  * replaces `aggregate(transform(pts, p -> p.vlat_c), 0L, +)` (two
+  * replaces `aggregate(transform(pts, p -> p.lat_c), 0L, +)` (two
   * interpreted lambdas) for osm_way_area_geodesic's latitude mean.
   * Algebraic equivalence: exact long addition is order-free.
   */
-case class StructLongSum3(child: Expression) extends PathFoldBase {
+case class StructLongSum3(child: Expression) extends PointFold(Seq(3), pairwise = false) {
   override def dataType: DataType = LongType
   override def prettyName: String = "struct_long_sum3"
 
-  override def nullSafeEval(v: Any): Any =
-    PathFolds.fieldSum3(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.PathFolds.fieldSum3($a);")
+  override protected def fold(a: ArrayData): Any = PathFolds.fieldSum3(a)
+  override protected def foldCall(a: String): String =
+    s"graft.functions.PathFolds.fieldSum3($a)"
 
   override protected def withNewChildInternal(newChild: Expression): StructLongSum3 =
     copy(child = newChild)
@@ -160,7 +133,7 @@ case class GeoAreaScale(latSum: Expression, n: Expression)
 }
 
 object PathFolds {
-  /** Exact-BIGINT Σ of struct ordinal 3 (vlat_c). */
+  /** Exact-BIGINT Σ of struct ordinal 3 (lat_c). */
   def fieldSum3(a: ArrayData): Long = {
     val n = a.numElements()
     var acc = 0L

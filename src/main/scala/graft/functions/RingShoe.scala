@@ -2,49 +2,42 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Fused shoelace sum over a closed ring's point array — the codegen
-  * replacement for wayRings' zip_with + aggregate lambda (higher-order
-  * lambdas evaluate interpreted): Σ over consecutive pairs of
+  * replacement for the zip_with + aggregate lambda (higher-order lambdas
+  * evaluate interpreted): Σ over consecutive pairs of
   * a.lon_c·b.lat_c − b.lon_c·a.lat_c, exact BIGINT, identical to the
   * fold it replaces term-for-term (integer ops have no rounding, so
-  * equivalence is algebraic, not IEEE-order-dependent).
+  * equivalence is algebraic, not IEEE-order-dependent). The one shoelace
+  * of the area keys and of the ETL job's `areas` table
+  * (OsmKernels.wayRings).
   *
-  * Input: array<struct<..., lon_c: bigint, lat_c: bigint>> with lon_c
-  * and lat_c at ordinals 2 and 3 (the wayRings `ring` element).
+  * Input: the `ring` element, lon_c and lat_c at ordinals 2 and 3; nulls
+  * follow [[PointFold]]'s rule.
   */
-case class RingShoe(child: Expression) extends UnaryExpression {
-
-  // containsNull=true is REJECTED (ADVICE r19): the loop reads elements
-  // with getStruct().getLong(), which would NPE on a null element where
-  // the aggregate() lambda it replaces null-propagated — a future caller
-  // with nullable elements gets an analysis error instead of a crash.
-  // Current producers (array_sort(collect_list), concat, IF) all carry
-  // containsNull=false.
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(st: StructType, false) if st.length == 4 &&
-      st(2).dataType == LongType && st(3).dataType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<struct<_,_,lon_c:bigint,lat_c:bigint>> " +
-        s"with non-null elements, got ${other.simpleString}")
-  }
+case class RingShoe(child: Expression) extends PointFold(Seq(2, 3), pairwise = true) {
   override def dataType: DataType = LongType
   override def prettyName: String = "ring_shoe"
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
+  override protected def fold(a: ArrayData): Any = RingShoe.shoelace(a)
+  override protected def foldCall(a: String): String =
+    s"graft.functions.RingShoe.shoelace($a)"
+
+  override protected def withNewChildInternal(newChild: Expression): RingShoe =
+    copy(child = newChild)
+}
+
+object RingShoe {
+  def shoelace(a: ArrayData): Long = {
     val n = a.numElements()
     var acc = 0L
-    var i = 1
     if (n > 0) {
       var px = a.getStruct(0, 4).getLong(2)
       var py = a.getStruct(0, 4).getLong(3)
+      var i = 1
       while (i < n) {
         val r = a.getStruct(i, 4)
         val x = r.getLong(2); val y = r.getLong(3)
@@ -56,35 +49,6 @@ case class RingShoe(child: Expression) extends UnaryExpression {
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val px = ctx.freshName("px"); val py = ctx.freshName("py")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val r = ctx.freshName("r")
-      s"""
-         |int $n = $a.numElements();
-         |long $acc = 0L;
-         |if ($n > 0) {
-         |  long $px = $a.getStruct(0, 4).getLong(2);
-         |  long $py = $a.getStruct(0, 4).getLong(3);
-         |  for (int $i = 1; $i < $n; $i++) {
-         |    InternalRow $r = $a.getStruct($i, 4);
-         |    long $x = $r.getLong(2); long $y = $r.getLong(3);
-         |    $acc += $px * $y - $x * $py;
-         |    $px = $x; $py = $y;
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): RingShoe =
-    copy(child = newChild)
-}
-
-object RingShoe {
   def apply(ring: Column): Column =
     GraftColumnBridge.column(new RingShoe(GraftColumnBridge.expression(ring)))
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Caches, Gate, Q, T}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.J — the reference's actual ETL, re-expressed as Spark
@@ -25,17 +26,98 @@ import org.apache.spark.sql.functions._
   */
 object OsmKernels {
 
+  /** Way membership (way_id, pos, node_ref): `lineitem` under the
+    * FIXTURES.md isomorphism. */
+  private[graft] def wayRefs(s: SparkSession, d: String): DataFrame =
+    T.lineitem(s, d).select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
+                            col("l_partkey").as("node_ref"))
+
+  /** Node store (node_id, lon_c, lat_c, `extra`…): `part`, with the
+    * coordinates as integer centi-units. The one reader of the node
+    * coordinates, for the keys and for OsmEtlJob. */
+  private[graft] def nodeStore(s: SparkSession, d: String, extra: String*): DataFrame =
+    T.part(s, d).select(Seq(
+      col("p_partkey").as("node_id"),
+      (col("p_size").cast("long") * 100).as("lon_c"),
+      round(col("p_retailprice") * 100).cast("long").as("lat_c")) ++ extra.map(col): _*)
+
   // Node store: dim-sized in the fixture (grows with distinct parts) so
   // it broadcasts and the fact-sized ref table never shuffles for the
   // resolve — but a REAL planet node store is itself fact-sized, so the
   // broadcast is size-GATED (graft.Gate): above budget the resolve
   // degrades to a shuffle join on node_id (same result; at planet scale
   // it would ride the bucketed layout, join_bucketed).
-  private def nodes(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.Gate.bcast(T.part(s, d).select(
-      col("p_partkey").as("node_id"),
-      (col("p_size").cast("long") * 100).as("lon_c"),
-      round(col("p_retailprice") * 100).cast("long").as("lat_c")))
+  private def nodes(s: SparkSession, d: String) = Gate.bcast(nodeStore(s, d))
+
+  /** A way's members as an array of struct(pos, node_ref, fields…) in
+    * member order. collect_list has no post-shuffle order guarantee;
+    * sorting on the leading (pos, node_ref) pins it (§7.3). */
+  private def inMemberOrder(fields: String*): Column =
+    expr(s"array_sort(collect_list(struct(pos, node_ref${fields.map(", " + _).mkString})))")
+
+  /** Each way's points in member order: (way_id, pts), with pts =
+    * array<struct<pos, node_ref, lon_c, lat_c>>. The refs resolve against
+    * the node store through the size-gated [[Gate.bcast]] (broadcast
+    * while the node store fits the budget, a shuffle join beyond it — a
+    * planet-scale node store must never be driver-collected), then one
+    * regroup shuffle. The one way assembly of the geometry keys and of
+    * OsmEtlJob.assembleWays: the same code, not a copy. */
+  private[graft] def wayPoints(refs: DataFrame, nodes: DataFrame): DataFrame =
+    refs
+      .join(Gate.bcast(nodes.select("node_id", "lon_c", "lat_c")),
+            col("node_ref") === col("node_id"))
+      .groupBy(col("way_id"))
+      .agg(inMemberOrder("lon_c", "lat_c").as("pts"))
+
+  private def wayPoints(s: SparkSession, d: String): DataFrame =
+    wayPoints(wayRefs(s, d), nodeStore(s, d))
+
+  /** The node store with lat_c folded into the valid ±90° band
+    * ((lat_c % 18000) − 9000), for the geodesic keys: the fixture's
+    * synthetic latitudes overflow ±90°. */
+  private def bandedNodes(s: SparkSession, d: String): DataFrame =
+    nodeStore(s, d).withColumn("lat_c", col("lat_c") % 18000 - 9000)
+
+  /** Per-way CLOSED ring + exact shoelace sum over [[wayPoints]]'s
+    * `pts` — the one ring and the one shoelace of the area keys
+    * (`osm_way_polygon_wkb`, `osm_relation_multipolygon_wkb`, …) and of
+    * OsmEtlJob.assembleAreas. osm2pgsql's area rule: a way whose first
+    * and last refs coincide is ring-shaped; here every way is treated as
+    * an area candidate and the ring is closed by appending the first
+    * point when needed — no new shuffle. `shoe` is the signed shoelace
+    * sum in integer centi-units (= 2·area·10⁴, positive = CCW): exact
+    * long arithmetic, so winding and area are partition-order invariant
+    * AND bit-identical to the DuckDB oracle's fold. It runs as the fused
+    * functions/RingShoe, which needs no interpreted lambda and no array
+    * slices, and takes the nullable `pts` of a parquet read.
+    */
+  private[graft] def wayRings(points: DataFrame): DataFrame =
+    points
+      .withColumn("ring",
+        expr("""IF(element_at(pts, 1).lon_c = element_at(pts, -1).lon_c
+               |   AND element_at(pts, 1).lat_c = element_at(pts, -1).lat_c,
+               |   pts, concat(pts, slice(pts, 1, 1)))""".stripMargin))
+      .withColumn("shoe", graft.functions.RingShoe(col("ring")))
+
+  private def wayRings(s: SparkSession, d: String): DataFrame = wayRings(wayPoints(s, d))
+
+  /** The OGC shell of a [[wayRings]] row: the ring, reversed when it
+    * winds clockwise (negative `shoe`). */
+  private[graft] def ccwShell: Column = expr("IF(shoe < 0, reverse(ring), ring)")
+
+  /** `arr`'s lon_c or lat_c field in degrees — the coordinate arrays of
+    * every WKB encoder here. */
+  private def degrees(arr: String, field: String): String =
+    s"transform($arr, p -> CAST(p.$field AS DOUBLE) / 100.0D)"
+
+  /** OGC WKB LineString of the point array in column `pts`. */
+  private[graft] def lineStringWkb(pts: String): Column =
+    graft.functions.WkbLineString(expr(degrees(pts, "lon_c")), expr(degrees(pts, "lat_c")))
+
+  /** OGC WKB Polygon with the single ring in column `shell`. */
+  private[graft] def polygonWkb(shell: String): Column =
+    graft.functions.WkbPolygon(expr(s"array(${degrees(shell, "lon_c")})"),
+                               expr(s"array(${degrees(shell, "lat_c")})"))
 
   /** One xy2d Hilbert bit-walk stage at plane size `s` (Wikipedia's
     * public-domain formulation), as (x', y', d') SQL over columns
@@ -116,37 +198,6 @@ object OsmKernels {
     // dedup exchange is dim-table cost, not corpus cost.
     (closure.distinct(), unresolved)
   }
-
-  /** Per-way CLOSED ring + exact shoelace sum — the shared assembly step
-    * of the area operators (`osm_way_polygon_wkb`,
-    * `osm_relation_multipolygon_wkb`). osm2pgsql's area rule: a way whose
-    * first and last refs coincide is ring-shaped; here every way is
-    * treated as an area candidate and the ring is closed by appending the
-    * first point when needed (same regroup as `osm_way_geometry` — no new
-    * shuffle). `shoe` is the signed shoelace sum in integer centi-units
-    * (= 2·area·10⁴, positive = CCW): exact long arithmetic, so winding
-    * and area are partition-order invariant AND bit-identical to the
-    * DuckDB oracle's fold.
-    */
-  private def wayRings(s: org.apache.spark.sql.SparkSession, d: String) =
-    T.lineitem(s, d)
-      .select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-              col("l_partkey").as("node_ref"))
-      .join(nodes(s, d), col("node_ref") === col("node_id"))
-      .groupBy(col("way_id"))
-      .agg(expr("array_sort(collect_list(struct(pos, node_ref, lon_c, lat_c)))").as("pts"))
-      .withColumn("ring",
-        expr("""IF(element_at(pts, 1).lon_c = element_at(pts, -1).lon_c
-               |   AND element_at(pts, 1).lat_c = element_at(pts, -1).lat_c,
-               |   pts, concat(pts, slice(pts, 1, 1)))""".stripMargin))
-      // r19 opt: the shoelace fold ran as a zip_with + aggregate lambda
-      // — interpreted per ring point for every wayRings consumer.
-      // functions/RingShoe is the same exact-BIGINT sum fused into one
-      // codegen'd pass (integer ops — equivalence is algebraic; family
-      // A/B measured a wash at sf0.1, the regroup dominates — kept
-      // because it strictly removes interpreted work and two array
-      // slices per ring).
-      .withColumn("shoe", graft.functions.RingShoe(col("ring")))
 
   /** cos(x) as an 8th-order Maclaurin polynomial — the geodesic keys'
     * latitude scale factor, deliberately NOT the engine's `cos`:
@@ -470,15 +521,9 @@ object OsmKernels {
         |FROM ways
         |ORDER BY way_id""".stripMargin
     ) { (s, d) =>
-      // resolve ordered refs → points → regroup → fold to a linestring
-      // summary. collect_list has NO post-shuffle order guarantee: the
-      // array_sort(struct(pos, …)) idiom pins member order (§7.3).
-      T.lineitem(s, d)
-        .select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-                col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
-        .groupBy(col("way_id"))
-        .agg(expr("array_sort(collect_list(struct(pos, node_ref, lon_c, lat_c)))").as("pts"))
+      // resolve ordered refs → points → regroup (wayPoints) → fold to a
+      // linestring summary.
+      wayPoints(s, d)
         .select(
           col("way_id"),
           size(col("pts")).cast("long").as("n_points"),
@@ -527,12 +572,7 @@ object OsmKernels {
       // (0.01° ≈ 1.1132 km at the equator) is one literal multiply, and
       // only the FINAL value rounds. Same single regroup shuffle as
       // osm_way_geometry — length is a per-row array fold, codegen'd.
-      T.lineitem(s, d)
-        .select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-                col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
-        .groupBy(col("way_id"))
-        .agg(expr("array_sort(collect_list(struct(pos, node_ref, lon_c, lat_c)))").as("pts"))
+      wayPoints(s, d)
         .select(
           col("way_id"),
           size(col("pts")).cast("long").as("n_points"),
@@ -581,12 +621,7 @@ object OsmKernels {
       // partitioning-invariant, divided once at output. Same single
       // regroup as the length kernel; the class tag joins broadcast;
       // the rollup aggregates |ways| rows on a bounded key.
-      val lens = T.lineitem(s, d)
-        .select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-                col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
-        .groupBy(col("way_id"))
-        .agg(expr("array_sort(collect_list(struct(pos, node_ref, lon_c, lat_c)))").as("pts"))
+      val lens = wayPoints(s, d)
         .select(col("way_id"),
           // r20 opt: same fused euclid fold as osm_way_length_m
           round(graft.functions.PathFolds.euclid(col("pts")) * 1113.2, 1)
@@ -668,12 +703,7 @@ object OsmKernels {
       // folded ndx > 0 test reduces to dx·dy > 0.
       val cls = T.orders(s, d)
         .select(col("o_orderkey").as("way_id"), col("o_orderpriority").as("highway_class"))
-      val perWay = T.lineitem(s, d)
-        .select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-                col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
-        .groupBy(col("way_id"))
-        .agg(expr("array_sort(collect_list(struct(pos, node_ref, lon_c, lat_c)))").as("pts"))
+      val perWay = wayPoints(s, d)
         // r19 opt: the 4-bin segment classification ran as a zip_with +
         // aggregate() lambda — interpreted per segment (higher-order
         // lambdas never enter codegen). functions/BearingBins is the
@@ -740,12 +770,7 @@ object OsmKernels {
       // ways (chord = 0 — loops are routine OSM data) are REPORTED as
       // their own class, never divided through. Same single way-regroup
       // as every length kernel; everything after is per-row arithmetic.
-      T.lineitem(s, d)
-        .select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-                col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
-        .groupBy(col("way_id"))
-        .agg(expr("array_sort(collect_list(struct(pos, node_ref, lon_c, lat_c)))").as("pts"))
+      wayPoints(s, d)
         .withColumn("n_segments", (size(col("pts")) - 1).cast("long"))
         // r20 opt: same fused euclid fold as osm_way_length_m
         .withColumn("path", graft.functions.PathFolds.euclid(col("pts")))
@@ -803,13 +828,7 @@ object OsmKernels {
       // measuring — same exact integer map in both engines. Same single
       // regroup shuffle as osm_way_length_m; the per-segment polynomial
       // is codegen'd arithmetic inside one whole-stage span.
-      T.lineitem(s, d)
-        .select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-                col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
-        .withColumn("vlat_c", col("lat_c") % 18000 - 9000)
-        .groupBy(col("way_id"))
-        .agg(expr("array_sort(collect_list(struct(pos, node_ref, lon_c, vlat_c)))").as("pts"))
+      wayPoints(wayRefs(s, d), bandedNodes(s, d))
         .select(
           col("way_id"),
           size(col("pts")).cast("long").as("n_points"),
@@ -876,23 +895,10 @@ object OsmKernels {
       // GeoAreaScale carries the whole polynomial (same literals, same
       // association — bit-identical, see the kernel's scaladoc), so the
       // mean latitude is computed ONCE per ring.
-      T.lineitem(s, d)
-        .select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-                col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
-        .withColumn("vlat_c", col("lat_c") % 18000 - 9000)
-        .groupBy(col("way_id"))
-        .agg(expr("array_sort(collect_list(struct(pos, node_ref, lon_c, vlat_c)))").as("pts"))
+      // Ring and shoelace are wayRings' over the banded latitude.
+      wayRings(wayPoints(wayRefs(s, d), bandedNodes(s, d))
         .withColumn("vlatsum", graft.functions.PathFolds.fieldSum3(col("pts")))
-        .withColumn("nv", size(col("pts")))
-        .withColumn("ring",
-          expr("""IF(element_at(pts, 1).lon_c = element_at(pts, -1).lon_c
-                 |   AND element_at(pts, 1).vlat_c = element_at(pts, -1).vlat_c,
-                 |   pts, concat(pts, slice(pts, 1, 1)))""".stripMargin))
-        // the shoelace lambda here is term-for-term RingShoe's
-        // exact-BIGINT sum (ordinals 2/3 = lon_c/vlat_c) — reuse the
-        // fused kernel instead of the interpreted zip_with + aggregate.
-        .withColumn("shoe", graft.functions.RingShoe(col("ring")))
+        .withColumn("nv", size(col("pts"))))
         .select(
           col("way_id"),
           size(col("ring")).cast("long").as("n_ring_points"),
@@ -1341,16 +1347,9 @@ object OsmKernels {
       // graft.functions.WkbLineString. The oracle pins the structure
       // (9+16n length, NDR+type header read back out of the bytes);
       // WkbSpec round-trips the coordinate payload bit-exactly.
-      T.lineitem(s, d)
-        .select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-                col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
-        .groupBy(col("way_id"))
-        .agg(expr("array_sort(collect_list(struct(pos, node_ref, lon_c, lat_c)))").as("pts"))
+      wayPoints(s, d)
         .select(col("way_id"), size(col("pts")).cast("long").as("n_points"),
-          graft.functions.WkbLineString(
-            expr("transform(pts, p -> CAST(p.lon_c AS DOUBLE) / 100.0D)"),
-            expr("transform(pts, p -> CAST(p.lat_c AS DOUBLE) / 100.0D)")).as("wkb"))
+          lineStringWkb("pts").as("wkb"))
         .select(col("way_id"), col("n_points"),
                 octet_length(col("wkb")).cast("long").as("wkb_len"),
                 substring(hex(col("wkb")), 1, 10).as("wkb_header"))
@@ -1377,12 +1376,7 @@ object OsmKernels {
       // beyond osm_relation_geometry's. Oracle pins the structure
       // (Σ member sizes, 9+Σ(9+16nᵢ) length, NDR+type header);
       // WkbSpec round-trips member coordinates bit-exactly.
-      val ways = T.lineitem(s, d)
-        .select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-                col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
-        .groupBy(col("way_id"))
-        .agg(expr("array_sort(collect_list(struct(pos, node_ref, lon_c, lat_c)))").as("pts"))
+      val ways = wayPoints(s, d)
       T.orders(s, d)
         .select(col("o_custkey").as("relation_id"), col("o_orderkey"))
         .join(ways, col("o_orderkey") === col("way_id"))
@@ -1392,8 +1386,8 @@ object OsmKernels {
           size(col("ways")).cast("long").as("n_ways"),
           expr("aggregate(ways, 0L, (acc, w) -> acc + size(w.pts))").as("n_points"),
           graft.functions.WkbMultiLineString(
-            expr("transform(ways, w -> transform(w.pts, p -> CAST(p.lon_c AS DOUBLE) / 100.0D))"),
-            expr("transform(ways, w -> transform(w.pts, p -> CAST(p.lat_c AS DOUBLE) / 100.0D))")).as("wkb"))
+            expr(s"transform(ways, w -> ${degrees("w.pts", "lon_c")})"),
+            expr(s"transform(ways, w -> ${degrees("w.pts", "lat_c")})")).as("wkb"))
         .select(col("relation_id"), col("n_ways"), col("n_points"),
                 octet_length(col("wkb")).cast("long").as("wkb_len"),
                 substring(hex(col("wkb")), 1, 10).as("wkb_header"))
@@ -1520,15 +1514,13 @@ object OsmKernels {
       // out of the bytes; WkbSpec round-trips coordinates and asserts
       // closure + CCW on the decoded shell.
       wayRings(s, d)
-        .withColumn("shell", expr("IF(shoe < 0, reverse(ring), ring)"))
+        .withColumn("shell", ccwShell)
         .select(col("way_id"),
           size(col("ring")).cast("long").as("n_ring_points"),
           (abs(col("shoe")).cast("double") / 20000.0).as("area"),
           when(col("shoe") > 0, "CCW").when(col("shoe") < 0, "CW")
             .otherwise("DEGENERATE").as("winding"),
-          graft.functions.WkbPolygon(
-            expr("array(transform(shell, p -> CAST(p.lon_c AS DOUBLE) / 100.0D))"),
-            expr("array(transform(shell, p -> CAST(p.lat_c AS DOUBLE) / 100.0D))")).as("wkb"))
+          polygonWkb("shell").as("wkb"))
         .select(col("way_id"), col("n_ring_points"), col("area"), col("winding"),
                 octet_length(col("wkb")).cast("long").as("wkb_len"),
                 substring(hex(col("wkb")), 1, 10).as("wkb_header"))
@@ -1604,8 +1596,8 @@ object OsmKernels {
           expr("rs[0].role").as("outer_role"),
           (abs(expr("rs[0].shoe")).cast("double") / 20000.0).as("outer_area"),
           graft.functions.WkbMultiPolygon(
-            expr("transform(norm, ring -> transform(ring, p -> CAST(p.lon_c AS DOUBLE) / 100.0D))"),
-            expr("transform(norm, ring -> transform(ring, p -> CAST(p.lat_c AS DOUBLE) / 100.0D))"),
+            expr(s"transform(norm, ring -> ${degrees("ring", "lon_c")})"),
+            expr(s"transform(norm, ring -> ${degrees("ring", "lat_c")})"),
             array(lit(0))).as("wkb"))
         .select(col("relation_id"), col("n_rings"), col("n_holes"), col("n_points"),
                 col("outer_way"), col("outer_role"), col("outer_area"),
@@ -2052,12 +2044,9 @@ object OsmKernels {
       // element per row); StructLongCsv/LongsCsv render the identical
       // bytes (CAST(bigint AS STRING) = Long.toString) in one fused
       // pass. array_sort stays outside — it is codegen-native.
-      T.lineitem(s, d)
-        .select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-                col("l_partkey").as("node_ref"))
+      wayRefs(s, d)
         .groupBy(col("way_id"))
-        .agg(graft.functions.CsvJoins.structCsv(
-          expr("array_sort(collect_list(struct(pos, node_ref)))")).as("sig"))
+        .agg(graft.functions.CsvJoins.structCsv(inMemberOrder()).as("sig"))
         .groupBy(col("sig"))
         .agg(count(lit(1)).as("n_ways"),
              min(col("way_id")).as("canonical_id"),
@@ -2250,12 +2239,7 @@ object OsmKernels {
     // force, and idempotence.
     Q.smoke("osm_way_simplify") { (s, d) =>
       val tol = 20000L // 200 units: meaningful reduction on this corpus
-      T.lineitem(s, d)
-        .select(col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-                col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
-        .groupBy(col("way_id"))
-        .agg(expr("array_sort(collect_list(struct(pos, node_ref, lon_c, lat_c)))").as("pts"))
+      wayPoints(s, d)
         .withColumn("rlons", expr("transform(pts, p -> p.lon_c)"))
         .withColumn("rlats", expr("transform(pts, p -> p.lat_c)"))
         .withColumn("keep",
@@ -3105,22 +3089,16 @@ object OsmKernels {
       // BIGINT key (lon·10⁸ + lat, lat < 10⁸ by fixture construction),
       // so no float epsilon to disagree cross-engine. Scale shape: the
       // one ordered regroup every geometry kernel already pays
-      // (sort_array(collect_list)), then a map-only per-way projection —
-      // flags compute in-row, nothing re-shuffles.
-      val memb = T.lineitem(s, d).select(
-        col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-        col("l_partkey").as("node_ref"))
+      // (wayPoints), then a map-only per-way projection — flags compute
+      // in-row, nothing re-shuffles.
       // r20 opt: the flags ran as two transform() + one filter() lambdas
       // plus two array_distinct passes per way — all interpreted.
       // GeomQaStats is the same exact-integer logic (consecutive pk
       // equality, ring test, distinct cardinalities) as ONE codegen'd
       // walk per row; equivalence is algebraic (FusedFoldsSpec pins it
       // expression-equal on adversarial ways + the oracle hash).
-      memb.join(nodes(s, d), col("node_ref") === col("node_id"))
-        .groupBy(col("way_id"))
-        .agg(sort_array(collect_list(struct(col("pos"), col("node_ref"),
-             col("lon_c"), col("lat_c")))).as("a"))
-        .select(col("way_id"), graft.functions.GeomQaStats(col("a")).as("q"))
+      wayPoints(s, d)
+        .select(col("way_id"), graft.functions.GeomQaStats(col("pts")).as("q"))
         .select(col("way_id"),
           col("q.n_pts").as("n_pts"),
           col("q.n_zero_len").as("n_zero_len"),
@@ -3445,9 +3423,7 @@ object OsmKernels {
     * junction-split way edges with way_id / edge_seq / from / to /
     * n_pts and the bit-deterministic metric length. */
   private def roadGraph(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val memb = T.lineitem(s, d).select(
-      col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-      col("l_partkey").as("node_ref"))
+    val memb = wayRefs(s, d)
     val junc = memb.groupBy(col("node_ref"))
       .agg(countDistinct(col("way_id")).as("nways"))
       .where(col("nways") >= 2).select(col("node_ref").as("jnode"))

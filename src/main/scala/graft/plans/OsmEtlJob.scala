@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.T
+import graft.operators.OsmKernels
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,27 +25,17 @@ import org.apache.spark.sql.functions._
   */
 object OsmEtlJob {
 
-  /** Ordered member resolve + regroup (the osm_way_geometry kernel,
-    * producing the assembled-way table rather than the oracle summary).
-    *
-    * The node store is the corpus of this pipeline (osm2pgsql's node
-    * location store is its central scaling problem), so the resolve join
-    * goes through the size-gated [[graft.Gate.bcast]]: broadcast while the
-    * node table fits the budget, shuffle join (same result, one exchange)
-    * beyond it — a planet-scale node store must never be driver-collected.
+  /** The `ways` lake table: [[OsmKernels.wayPoints]] (ordered member
+    * resolve + regroup, with the size-gated node-store broadcast) plus the
+    * point count, the PostGIS-equivalent geometry artifact (SURVEY §1.2:
+    * "WKB as BinaryType + bbox struct", README.md:80-82) and the bbox.
+    * The same code as the `osm_way_*` geometry keys, not a copy of it.
     */
   def assembleWays(refs: DataFrame, nodes: DataFrame): DataFrame =
-    refs
-      .join(graft.Gate.bcast(nodes), refs("node_ref") === nodes("node_id"))
-      .groupBy(col("way_id"))
-      .agg(expr("array_sort(collect_list(struct(pos, node_ref, lon_c, lat_c)))").as("pts"))
+    OsmKernels.wayPoints(refs, nodes)
       .select(col("way_id"), col("pts"),
               size(col("pts")).as("n_points"),
-              // the PostGIS-equivalent geometry artifact (SURVEY §1.2:
-              // "WKB as BinaryType + bbox struct", README.md:80-82)
-              graft.functions.WkbLineString(
-                expr("transform(pts, p -> CAST(p.lon_c AS DOUBLE) / 100.0D)"),
-                expr("transform(pts, p -> CAST(p.lat_c AS DOUBLE) / 100.0D)")).as("wkb"),
+              OsmKernels.lineStringWkb("pts").as("wkb"),
               struct(
                 expr("array_min(transform(pts, p -> p.lon_c))").as("minx"),
                 expr("array_min(transform(pts, p -> p.lat_c))").as("miny"),
@@ -53,29 +44,20 @@ object OsmEtlJob {
 
   /** Area assembly over assembled ways (round-4 surface: the majority of
     * PgOSM Flex layers are area-shaped — buildings/water/landuse,
-    * README.md:80-82): ring closure, exact integer shoelace area +
-    * winding, CCW-normalized OGC WKB Polygon. Same semantics as the
-    * `osm_way_polygon_wkb` operator, producing the lake table rather
-    * than the oracle summary — all transforms stay inside the row over
-    * the already-assembled `pts`, no additional shuffle.
+    * README.md:80-82): [[OsmKernels.wayRings]]' ring closure and exact
+    * integer shoelace, the CCW-normalized shell and its OGC WKB Polygon.
+    * The same code as the `osm_way_polygon_wkb` operator, producing the
+    * lake table rather than the oracle summary — all transforms stay
+    * inside the row over the already-assembled `pts`, no additional
+    * shuffle. `pts` read back from the lake is nullable; the shoelace
+    * then null-propagates (functions.PointFold).
     */
   def assembleAreas(ways: DataFrame): DataFrame =
-    ways
-      .withColumn("ring",
-        expr("""IF(element_at(pts, 1).lon_c = element_at(pts, -1).lon_c
-               |   AND element_at(pts, 1).lat_c = element_at(pts, -1).lat_c,
-               |   pts, concat(pts, slice(pts, 1, 1)))""".stripMargin))
-      .withColumn("shoe",
-        expr("""aggregate(
-               |  zip_with(slice(ring, 1, size(ring) - 1), slice(ring, 2, size(ring) - 1),
-               |           (a, b) -> a.lon_c * b.lat_c - b.lon_c * a.lat_c),
-               |  CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin))
-      .withColumn("shell", expr("IF(shoe < 0, reverse(ring), ring)"))
+    OsmKernels.wayRings(ways)
+      .withColumn("shell", OsmKernels.ccwShell)
       .select(col("way_id"),
         (abs(col("shoe")).cast("double") / 20000.0).as("area"),
-        graft.functions.WkbPolygon(
-          expr("array(transform(shell, p -> CAST(p.lon_c AS DOUBLE) / 100.0D))"),
-          expr("array(transform(shell, p -> CAST(p.lat_c AS DOUBLE) / 100.0D))")).as("polygon_wkb"))
+        OsmKernels.polygonWkb("shell").as("polygon_wkb"))
 
   /** Two-level relation resolve over assembled ways. */
   def assembleRelations(members: DataFrame, ways: DataFrame): DataFrame =
@@ -127,17 +109,10 @@ object OsmEtlJob {
     * (FIXTURES.md): refs(way_id,pos,node_ref), tagged nodes, raw orders
     * (the relation-membership + region-routing store). */
   private[graft] def stores(spark: SparkSession, sfDir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val refs = T.lineitem(spark, sfDir).select(
-      col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
-      col("l_partkey").as("node_ref"))
-    val nodes = T.part(spark, sfDir).select(
-      col("p_partkey").as("node_id"),
-      (col("p_size").cast("long") * 100).as("lon_c"),
-      round(col("p_retailprice") * 100).cast("long").as("lat_c"),
-      col("p_brand"), col("p_type"))
-    (refs, nodes, T.orders(spark, sfDir))
-  }
+      : (DataFrame, DataFrame, DataFrame) =
+    (OsmKernels.wayRefs(spark, sfDir),
+     OsmKernels.nodeStore(spark, sfDir, "p_brand", "p_type"),
+     T.orders(spark, sfDir))
 
   private def members(orders: DataFrame): DataFrame =
     orders.select(col("o_custkey").as("relation_id"), col("o_orderkey").as("member_way"))

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.types._
+
 /** Driver-contract invariants (SURVEY.md §7.1). */
 class EntrySpec extends GraftSuite {
 
@@ -50,11 +52,25 @@ class EntrySpec extends GraftSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every registered query executes at sf0.001", Heavy) {
-    val failures = SparkEntry.registry.flatMap { q =>
-      try { q.run(spark, sf).count(); None }
-      catch { case e: Throwable => Some(q.key -> e.getMessage.take(120)) }
+  /** One pass over the registry, shared by the two sweeps below: each
+    * key is built once, its schema kept, and its result materialized with
+    * a `noop` write. Under count() Catalyst prunes final Sorts, Windows,
+    * joins and fused kernels; the write runs the whole plan. A key whose
+    * build fails has no schema; a failure keeps the key and its message. */
+  private lazy val sweep: Seq[(String, Option[StructType], Option[String])] =
+    SparkEntry.registry.map { q =>
+      def msg(e: Throwable) = Option(e.getMessage).getOrElse(e.toString).take(120)
+      try {
+        val df = q.run(spark, sf)
+        val error =
+          try { df.write.format("noop").mode("overwrite").save(); None }
+          catch { case e: Throwable => Some(msg(e)) }
+        (q.key, Some(df.schema), error)
+      } catch { case e: Throwable => (q.key, None, Some(msg(e))) }
     }
+
+  test("every registered query executes at sf0.001", Heavy) {
+    val failures = sweep.collect { case (key, _, Some(e)) => key -> e }
     assert(failures.isEmpty, s"queries failed: $failures")
   }
 
@@ -65,7 +81,6 @@ class EntrySpec extends GraftSuite {
   // contract: no registered query may emit a float/double array column
   // at any nesting depth — posexplode to (id, pos, value) rows instead.
   test("no registered query emits a float/double array column", Heavy) {
-    import org.apache.spark.sql.types._
     def hasFloatArray(dt: DataType): Boolean = dt match {
       case ArrayType(FloatType | DoubleType, _) => true
       case ArrayType(e, _)                      => hasFloatArray(e)
@@ -73,11 +88,10 @@ class EntrySpec extends GraftSuite {
       case MapType(k, v, _)                     => hasFloatArray(k) || hasFloatArray(v)
       case _                                    => false
     }
-    val offenders = SparkEntry.registry.flatMap { q =>
-      try {
-        val bad = q.run(spark, sf).schema.fields.filter(f => hasFloatArray(f.dataType))
-        if (bad.isEmpty) None else Some(q.key -> bad.map(_.name).toSeq)
-      } catch { case _: Throwable => None } // execution failures are the previous test's job
+    // a key whose build failed has no schema: the previous test reports it
+    val offenders = sweep.flatMap { case (key, schema, _) =>
+      val bad = schema.toSeq.flatMap(_.fields.filter(f => hasFloatArray(f.dataType)))
+      if (bad.isEmpty) None else Some(key -> bad.map(_.name))
     }
     assert(offenders.isEmpty,
            s"driver-uncanonicalizable float-array output columns: $offenders")

@@ -78,4 +78,10 @@ class ExtensionsSpec extends GraftSuite {
     assert(wkb.length == 9 + 2 * 16)
     assert(wkb(0) == 1 && wkb(1) == 2, "little-endian LineString header")
   }
+
+  test("a session built with GraftExtensions carries the AsofJoin and RangeJoin strategies") {
+    val strategies = org.apache.spark.sql.GraftExtensionsProbe.plannerStrategies(spark)
+    assert(strategies.contains(org.apache.spark.sql.graft.AsofJoinStrategy), strategies)
+    assert(strategies.contains(org.apache.spark.sql.graft.RangeJoinStrategy), strategies)
+  }
 }

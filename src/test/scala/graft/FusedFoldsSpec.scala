@@ -12,6 +12,20 @@ import org.apache.spark.sql.functions._
   */
 class FusedFoldsSpec extends GraftSuite {
 
+  /** `df` plus two ways in the point-array layout: 901 with a null
+    * element, 902 with a null lon_c. The union makes the array
+    * containsNull=true and its fields nullable (the shape of a parquet
+    * read), so every row goes through the kernels' null rule. */
+  private def withNullRows(df: org.apache.spark.sql.DataFrame, arr: String,
+                           lat: String = "lat_c"): org.apache.spark.sql.DataFrame = {
+    def pt(pos: Int, lon: String, la: Long) =
+      s"named_struct('pos', $pos, 'node_ref', ${pos}L, 'lon_c', $lon, '$lat', ${la}L)"
+    df.unionByName(spark.range(1).selectExpr(
+      s"901L AS way_id", s"array(${pt(1, "0L", 0L)}, NULL, ${pt(3, "4L", 3L)}) AS $arr"))
+      .unionByName(spark.range(1).selectExpr(
+        s"902L AS way_id", s"array(${pt(1, "CAST(NULL AS BIGINT)", 2L)}, ${pt(2, "6L", 8L)}) AS $arr"))
+  }
+
   test("JlSignProject matches the transform+aggregate lambda bit-for-bit") {
     import spark.implicits._
     val masks: IndexedSeq[Long] = for (j <- 0 until 16; w <- 0 until 2) yield {
@@ -101,6 +115,15 @@ class FusedFoldsSpec extends GraftSuite {
       .selectExpr("way_id", "c.ew", "c.ns", "c.ne", "c.nw")
     assert(fused.orderBy("way_id").collect().toSeq ===
            lambda.orderBy("way_id").collect().toSeq)
+    // null rule: the lambda sends a null segment to NW-SE (its IF chain
+    // falls through), so the null rows are checked against NULL instead
+    val nulls = withNullRows(pts, "pts")
+      .select(col("way_id"), graft.functions.BearingBins(col("pts")).as("c"))
+      .selectExpr("way_id", "c.ew", "c.ns", "c.ne", "c.nw")
+    val byWay = nulls.collect().map(r => r.getLong(0) -> r).toMap
+    assert(Seq(901L, 902L).forall(w => (1 to 4).forall(byWay(w).isNullAt)))
+    assert(nulls.where(col("way_id") < 900).orderBy("way_id").collect().toSeq ===
+           lambda.orderBy("way_id").collect().toSeq)
   }
 
   test("RingShoe matches the zip_with+aggregate shoelace fold exactly") {
@@ -115,6 +138,7 @@ class FusedFoldsSpec extends GraftSuite {
       .select(col("way_id"), expr(
         "transform(raw, r -> struct(r._1 AS pos, r._2 AS node_ref, r._3 AS lon_c, r._4 AS lat_c))")
         .as("ring"))
+      .transform(withNullRows(_, "ring"))
     val fused = rows.select(col("way_id"), graft.functions.RingShoe(col("ring")).as("shoe"))
     val lambda = rows.select(col("way_id"), expr(
       """aggregate(
@@ -141,18 +165,21 @@ class FusedFoldsSpec extends GraftSuite {
       .select(col("way_id"), expr(
         "transform(raw, r -> struct(r._1 AS pos, r._2 AS node_ref, r._3 AS lon_c, r._4 AS vlat_c))")
         .as("pts"))
+      .transform(withNullRows(_, "pts", lat = "vlat_c"))
   }
 
   private def assertBitEqual(fused: org.apache.spark.sql.DataFrame,
                              lambda: org.apache.spark.sql.DataFrame): Unit = {
-    val f = fused.orderBy("way_id").collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val l = lambda.orderBy("way_id").collect().map(r => (r.getLong(0), r.getDouble(1)))
+    // raw bits, or None for a NULL result (the null rows)
+    def bits(df: org.apache.spark.sql.DataFrame) = df.orderBy("way_id").collect().map(r =>
+      (r.getLong(0), Option(r.get(1)).map(v => java.lang.Double.doubleToRawLongBits(
+        v.asInstanceOf[Double]))))
+    val f = bits(fused)
+    val l = bits(lambda)
     assert(f.length === l.length)
     f.zip(l).foreach { case ((wa, sa), (wb, sb)) =>
       assert(wa === wb)
-      assert(java.lang.Double.doubleToRawLongBits(sa) ===
-             java.lang.Double.doubleToRawLongBits(sb),
-        s"way $wa: fused $sa != lambda $sb (bit-level)")
+      assert(sa === sb, s"way $wa: fused $sa != lambda $sb (bit-level)")
     }
   }
 
@@ -241,6 +268,15 @@ class FusedFoldsSpec extends GraftSuite {
         size(array_distinct(col("pk"))).cast("long").as("n_distinct_pts"))
     assert(fused.orderBy("way_id").collect().toSeq ===
            lambda.orderBy("way_id").collect().toSeq)
+    // null rule: the lambdas count a null as a distinct value, so the
+    // null rows are checked against a NULL struct instead
+    val nulls = withNullRows(ways, "a")
+      .select(col("way_id"), graft.functions.GeomQaStats(col("a")).as("q"))
+    assert(nulls.where(col("way_id") > 900 && col("q").isNotNull).count() === 0)
+    assert(nulls.where(col("way_id") < 900)
+      .selectExpr("way_id", "q.n_pts", "q.n_zero_len", "q.is_ring",
+        "q.n_illegal_repeats", "q.n_distinct_pts")
+      .orderBy("way_id").collect().toSeq === lambda.orderBy("way_id").collect().toSeq)
   }
 
   test("StructLongCsv/LongsCsv render the exact CAST-AS-STRING join bytes") {

@@ -21,6 +21,14 @@ class OsmEtlJobSpec extends GraftSuite {
              s"$t: expected rows not in the $what lake")
     }
 
+  test("source guard: one way regroup and no shoelace lambda in src/main") {
+    def hits(needle: String) = SourceLines.hits("src/main", needle)
+    val regroup = "collect_list(struct(pos, " + "node_ref"
+    val shoelace = "a.lon_c * " + "b.lat_c"
+    assert(hits(regroup).size == 1, hits(regroup))
+    assert(hits(shoelace).isEmpty, hits(shoelace))
+  }
+
   test("OsmEtlJob writes a partition-pruned, reconcilable lake") {
     val out = java.nio.file.Files.createTempDirectory("graft_etl").toString
     // run the stages in-process (main would spawn its own session)

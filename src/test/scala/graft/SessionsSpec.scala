@@ -40,17 +40,7 @@ class SessionsSpec extends AnyFunSuite {
   }
 
   test("source guard: one session builder in src/main, none in src/test, no master env knob") {
-    import java.nio.file.{Files, Path, Paths}
-    import scala.jdk.CollectionConverters._
-    def hits(dir: String, needle: String): Seq[String] = {
-      val files = Files.walk(Paths.get(dir)).iterator().asScala
-        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
-      files.flatMap { p: Path =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains(needle) => s"$p:${i + 1}"
-        }
-      }
-    }
+    import SourceLines.hits
     // split literals, so this file does not match its own needles
     val builder = "SparkSession" + ".builder"
     val masterEnv = "SPARK_" + "MASTER"

@@ -22,6 +22,23 @@ object TestSpark {
   */
 object Heavy extends org.scalatest.Tag("graft.Heavy")
 
+/** Source guards: the `file:line` of every line under `dir` (Scala
+  * sources) that contains `needle`. Guards split their needle literals so
+  * the guarding spec does not match itself. */
+object SourceLines {
+  def hits(dir: String, needle: String): Seq[String] = {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(Paths.get(dir)).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+    files.flatMap { p: Path =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains(needle) => s"$p:${i + 1}"
+      }
+    }
+  }
+}
+
 abstract class GraftSuite extends AnyFunSuite {
   protected lazy val spark: SparkSession = TestSpark.spark
   protected val sf: String = TestSpark.sf
