@@ -145,9 +145,9 @@ object Bench {
           val dt = (System.nanoTime() - t0) / 1e9
           // operators may cache small intermediates; drop them so queries
           // don't compete for executor memory across the run. Bucket
-          // tables are NOT dropped: join_bucketed's layout write is
-          // conf-keyed one-time (like the IVF index), so the bench
-          // measures the zero-Exchange steady-state read.
+          // tables are NOT dropped: join_bucketed's layout write is a
+          // one-time Scratch.layout, so the bench measures the
+          // zero-Exchange steady-state read.
           graft.Caches.drain()
           spark.catalog.clearCache()
           if (ok) Some(dt) else None

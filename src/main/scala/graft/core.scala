@@ -62,15 +62,25 @@ object Gate {
   }
 }
 
-/** Per-(JVM, dataset) scratch roots for layout operators (lake_compact,
-  * osm_region_partition_write). A fixed java.io.tmpdir path races when a
-  * bench and a test run share one box; the per-process nonce isolates
-  * runs while the operator and its spec — same JVM — still agree on the
-  * path, and the dataset hash keeps two data dirs apart within a run.
+/** Every scratch directory the engine writes lives under
+  * java.io.tmpdir as `graft_<tag>_<run nonce>_…` and is deleted when
+  * the JVM exits. The per-process nonce isolates runs that share a box.
+  *
+  *  - [[layout]]: the ONE rule for build-once operator layouts (indexes,
+  *    the road graph, bucketed and z-ordered lakes, staged ORC/XML/PBF/
+  *    WAV/PNG files): build once per (session, dataset), memoized in the
+  *    session conf under `spark.sql.graft.<tag>dir:<dataset>`. A dataset
+  *    dir is treated as immutable for the session (lake snapshots are);
+  *    a caller that rewrites one in place must unset the key.
+  *  - [[fresh]]: a new directory per call, for work that must not see an
+  *    earlier call's files (streaming checkpoints, per-run lakes).
+  *  - [[dir]]: a fixed per-(run, dataset) path that each call
+  *    overwrites, so the operator and its spec agree on it.
   */
 object Scratch {
   private val runNonce = java.lang.Long.toHexString(
     java.util.concurrent.ThreadLocalRandom.current().nextLong())
+  private val tmp = new java.io.File(sys.props("java.io.tmpdir"))
 
   private def rmTree(root: java.io.File): Unit = {
     val kids = root.listFiles()
@@ -85,7 +95,6 @@ object Scratch {
   // a concurrently running bench/test on the same box is never touched.
   private val staleMs = 6L * 3600 * 1000
   locally {
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
     val old = tmp.listFiles()
     if (old != null) old.filter(f => f.isDirectory && f.getName.startsWith("graft_")
         && System.currentTimeMillis() - f.lastModified() > staleMs)
@@ -98,22 +107,28 @@ object Scratch {
   }
 
   def dir(tag: String, d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${tag}_${runNonce}_${math.abs(d.hashCode).toHexString}"
+    s"$tmp/graft_${tag}_${runNonce}_${math.abs(d.hashCode).toHexString}"
 
-  /** Conf-keyed ONE-TIME layout build (ADVICE r16 scan_dpp hygiene): the
-    * session conf is the per-(session, dataset) memo, but two threads
-    * hitting the same un-built key would both run `build` and race the
-    * write — the whole check-build-set sequence is serialized here. Use
-    * with a [[dir]]-rooted path so the layout is swept at JVM exit
-    * instead of leaking under java.io.tmpdir.
+  def fresh(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tmp.toPath, s"graft_${tag}_${runNonce}_").toString
+
+  /** The layout root for (`s`, `tag`, `d`): `build` runs on an empty
+    * [[fresh]] directory the first time, and every later call returns
+    * the memoized root. Builds are serialized JVM-wide (sessions share
+    * the JVM in local mode), and a caller that lost the race adopts the
+    * winner's root instead of building again.
     */
-  def onceConf(s: org.apache.spark.sql.SparkSession, confKey: String)
-              (build: => String): String = synchronized {
-    s.conf.getOption(confKey).getOrElse {
-      val root = build
-      s.conf.set(confKey, root)
-      root
-    }
+  def layout(s: org.apache.spark.sql.SparkSession, tag: String, d: String)
+            (build: String => Unit): String = {
+    val key = s"spark.sql.graft.${tag}dir:$d"
+    s.conf.getOption(key).getOrElse(synchronized {
+      s.conf.getOption(key).getOrElse {
+        val root = fresh(tag)
+        build(root)
+        s.conf.set(key, root)
+        root
+      }
+    })
   }
 }
 

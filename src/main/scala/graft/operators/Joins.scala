@@ -613,18 +613,13 @@ object Joins {
       // 100 TB: both tables are written bucketed (and sorted) on the join
       // key, so the sort-merge join reads bucket i against bucket i with
       // ZERO Exchange on either side (PlanSpec asserts it). The write is
-      // paid ONCE per (session, dataset) — conf-keyed like
-      // sim_ivf_partitioned's index (VERDICT r10: the bench was paying
-      // the one-time layout write on every invocation, hiding the ~0.3 s
-      // steady-state read the pattern exists to demonstrate). The table
-      // names carry the dataset hash so two data dirs in one session
-      // can't serve each other's rows.
-      // getOption, not get-with-default: the default would be evaluated
-      // eagerly and leak one temp dir per invocation even once set.
+      // paid ONCE per (session, dataset) (VERDICT r10: the bench was
+      // paying the one-time layout write on every invocation, hiding the
+      // ~0.3 s steady-state read the pattern exists to demonstrate). The
+      // table names carry the dataset hash so two data dirs in one
+      // session can't serve each other's rows.
       val sfx = math.abs(d.hashCode).toHexString
-      val confKey = s"spark.sql.graft.bucketdir:$d"
-      s.conf.getOption(confKey).getOrElse {
-        val dir = java.nio.file.Files.createTempDirectory("graft_bkt").toString
+      graft.Scratch.layout(s, "bucket", d) { dir =>
         def bucketed(df: org.apache.spark.sql.DataFrame, table: String, key: String): Unit = {
           s.sql(s"DROP TABLE IF EXISTS $table")
           df.write.mode("overwrite")
@@ -634,8 +629,6 @@ object Joins {
         }
         bucketed(T.orders(s, d), s"graft_bkt_orders_$sfx", "o_custkey")
         bucketed(T.customer(s, d), s"graft_bkt_customer_$sfx", "c_custkey")
-        s.conf.set(confKey, dir)
-        dir
       }
       // merge hint keeps the SMJ even when one side is broadcast-small —
       // the point is the bucket-aligned, exchange-free read.

@@ -2517,12 +2517,9 @@ object OsmKernels {
     // prunes only x-filters. Layout (file counts aren't SQL) → smoke;
     // AnalyticsOpsSpec asserts the z-layout's hit set for a y-filter is
     // strictly smaller than the linear layout's, identical row content.
-    // The one-time layout writes are conf-keyed per (session, dataset)
-    // like the bucket tables.
+    // The layout writes run once per (session, dataset).
     Q.smoke("lake_zorder") { (s, d) =>
-      val confKey = s"spark.sql.graft.zorderdir:$d"
-      val root = s.conf.getOption(confKey).getOrElse {
-        val dir = graft.Scratch.dir("zorder", d)
+      val root = graft.Scratch.layout(s, "zorder", d) { dir =>
         val src = T.orders(s, d).select(col("o_orderkey"),
           (col("o_custkey") % 1024).as("x"), (col("o_orderkey") % 1024).as("y"))
         // 20-bit Morton code: bit i of x → bit 2i, bit i of y → bit 2i+1
@@ -2534,8 +2531,6 @@ object OsmKernels {
           .write.mode("overwrite").parquet(s"$dir/zorder")
         src.withColumn("z", col("x")).repartitionByRange(16, col("z"))
           .write.mode("overwrite").parquet(s"$dir/linear")
-        s.conf.set(confKey, dir)
-        dir
       }
       // per-file min(y): which files could a y < 64 filter touch?
       def hits(path: String, layout: String) =
@@ -3181,18 +3176,7 @@ object OsmKernels {
       // build/probe split as the IVF and PQ indexes — production routing
       // never re-splits ways per query; `osm_road_graph` itself remains
       // the live extraction operator).
-      val confKey = s"spark.sql.graft.roadgraphdir:$d"
-      val root = s.conf.getOption(confKey).getOrElse {
-        val dir = java.nio.file.Files.createTempDirectory("graft_roadgraph").toString
-        roadGraph(s, d).select(col("from_node"), col("to_node"), col("length_m"))
-          .write.mode("overwrite").parquet(s"$dir/edges")
-        s.conf.set(confKey, dir)
-        dir
-      }
-      val rg = s.read.parquet(s"$root/edges")
-      val und = rg.select(col("from_node").as("u"), col("to_node").as("v"),
-                          col("length_m").as("w"))
-        .unionAll(rg.select(col("to_node"), col("from_node"), col("length_m")))
+      val und = roadEdgesUndirected(s, d)
       // empty corpus: min is NULL -> no source -> empty result (the
       // driver's oracle compare only runs on non-empty fixtures; this
       // lane exists so a fresh/filtered region can't NPE the job)
@@ -3234,18 +3218,7 @@ object OsmKernels {
     // where 3 hops suffice, exactness on a long weighted chain the
     // unroll cannot reach, and the loud budget).
     Q.smoke("osm_route_dist_conv") { (s, d) =>
-      val confKey = s"spark.sql.graft.roadgraphdir:$d"
-      val root = s.conf.getOption(confKey).getOrElse {
-        val dir = java.nio.file.Files.createTempDirectory("graft_roadgraph").toString
-        roadGraph(s, d).select(col("from_node"), col("to_node"), col("length_m"))
-          .write.mode("overwrite").parquet(s"$dir/edges")
-        s.conf.set(confKey, dir)
-        dir
-      }
-      val rg = s.read.parquet(s"$root/edges")
-      val und = rg.select(col("from_node").as("u"), col("to_node").as("v"),
-                          col("length_m").as("w"))
-        .unionAll(rg.select(col("to_node"), col("from_node"), col("length_m")))
+      val und = roadEdgesUndirected(s, d)
       val srcRow = T.lineitem(s, d).agg(min(col("l_partkey"))).head
       import s.implicits._
       if (srcRow.isNullAt(0))
@@ -3417,6 +3390,19 @@ object OsmKernels {
           .groupBy(col("node")).agg(min(col("dist")).as("dist")).localCheckpoint()
     }
     dist
+  }
+
+  /** The routing index `osm_route_dist` and `osm_route_dist_conv` read:
+    * [[roadGraph]]'s edges written once per (session, dataset), each
+    * read back in both directions as (u, v, w). */
+  private def roadEdgesUndirected(s: org.apache.spark.sql.SparkSession, d: String) = {
+    val root = graft.Scratch.layout(s, "roadgraph", d) { dir =>
+      roadGraph(s, d).select(col("from_node"), col("to_node"), col("length_m"))
+        .write.mode("overwrite").parquet(s"$dir/edges")
+    }
+    val rg = s.read.parquet(s"$root/edges")
+    rg.select(col("from_node").as("u"), col("to_node").as("v"), col("length_m").as("w"))
+      .unionAll(rg.select(col("to_node"), col("from_node"), col("length_m")))
   }
 
   /** Shared routing-edge dataflow (rationale at `osm_road_graph`):

@@ -69,20 +69,14 @@ object Scans {
       // non-matching partitions of the year-partitioned lake are never
       // even listed — at 100 TB, touching 2 of 7 year partitions is the
       // difference between a morning and a coffee break. The layout is
-      // a one-time conf-keyed partitionBy(o_year) write (join_bucketed's
-      // recipe — lake layout, not query cost); the dim join stays a
-      // broadcast; Round16OpsSpec pins `dynamicpruning` present in the
+      // a one-time partitionBy(o_year) write (lake layout, not query
+      // cost); the dim join stays a broadcast; Round16OpsSpec pins `dynamicpruning` present in the
       // scan's partition filters. Aggregates ride the exact-DECIMAL
       // recipe, so the hash is partitioning-independent.
-      // Scratch-rooted (swept at JVM exit, stale dirs reaped at startup)
-      // and built under the onceConf serializer so two first-queries on
-      // the same dataset can't race the write (ADVICE r16 hygiene item).
-      val root = graft.Scratch.onceConf(s, s"spark.sql.graft.dppdir:$d") {
-        val dir = graft.Scratch.dir("dpp", d)
+      val root = graft.Scratch.layout(s, "dpp", d) { dir =>
         T.orders(s, d)
           .withColumn("o_year", year(col("o_orderdate")))
           .write.mode("overwrite").partitionBy("o_year").parquet(s"$dir/orders")
-        dir
       }
       val dim = T.region(s, d)
         .where(col("r_name").isin("ASIA", "EUROPE"))
@@ -111,7 +105,7 @@ object Scans {
       // osm_etl.py:88-91) + partition-pruned re-read. partitionBy columns
       // become the lake layout; the re-read filter on o_orderstatus is a
       // PartitionFilter (no data files of other statuses are opened).
-      val out = s"${sys.props("java.io.tmpdir")}/graft_sink_parquet"
+      val out = graft.Scratch.dir("sink_parquet", d)
       val staged = T.orders(s, d)
         .withColumn("order_year", year(col("o_orderdate")))
       // r19 opt: cluster by the partition columns before the write
@@ -144,7 +138,7 @@ object Scans {
       // convenience: at 100 TB schema inference is an extra full scan and
       // a type-drift hazard). Round-trips the dim through CSV; equality
       // with the parquet-backed oracle proves the reader path.
-      val out = s"${sys.props("java.io.tmpdir")}/graft_source_csv"
+      val out = graft.Scratch.dir("source_csv", d)
       val src = T.nation(s, d).select(col("n_nationkey"), col("n_regionkey"), col("n_name"))
       src.write.mode("overwrite").option("header", "true").csv(out)
       s.read.schema(src.schema).option("header", "true").csv(out)
@@ -160,7 +154,7 @@ object Scans {
       // JSON-lines ingest, declared schema (same stance as source_csv);
       // the format of config/metadata side-channels in the reference stack
       // (flex style configs are structured documents, README.md:93).
-      val out = s"${sys.props("java.io.tmpdir")}/graft_source_json"
+      val out = graft.Scratch.dir("source_json", d)
       val src = T.region(s, d).select(col("r_regionkey"), col("r_name"))
       src.write.mode("overwrite").json(out)
       s.read.schema(src.schema).json(out)
@@ -179,18 +173,14 @@ object Scans {
       // ORC ingest — the OTHER columnar lake format a migrating user
       // brings (Hive-era lakes are ORC; interchange means reading both).
       // Round-trips the fact table through ORC once per (session,
-      // dataset) — conf-keyed like the bucket tables, the write is lake
-      // layout, not query cost — then proves the reader path end-to-end:
-      // the quantity predicate must push into the ORC scan and the
-      // projection must prune the read schema, exactly as on parquet
-      // (ORC carries the same min/max stripe stats for data skipping).
+      // dataset) — the write is lake layout, not query cost — then
+      // proves the reader path end-to-end: the quantity predicate must
+      // push into the ORC scan and the projection must prune the read
+      // schema, exactly as on parquet (ORC carries the same min/max
+      // stripe stats for data skipping).
       // Equality with the parquet-backed oracle proves the bytes.
-      val confKey = s"spark.sql.graft.orcdir:$d"
-      val root = s.conf.getOption(confKey).getOrElse {
-        val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+      val root = graft.Scratch.layout(s, "orc", d) { dir =>
         T.lineitem(s, d).write.mode("overwrite").orc(s"$dir/lineitem")
-        s.conf.set(confKey, dir)
-        dir
       }
       s.read.schema(T.lineitem(s, d).schema).orc(s"$root/lineitem")
         .where(col("l_quantity") < 30)
@@ -214,13 +204,9 @@ object Scans {
       // parquet-backed oracle. rowTag is the split unit: Spark's XML
       // reader parallelizes a file set by row element, so a 100 TB feed
       // lands as many files × many row tags, not one driver parse.
-      val confKey = s"spark.sql.graft.xmldir:$d"
       val src = T.supplier(s, d).select(col("s_suppkey"), col("s_nationkey"), col("s_name"))
-      val root = s.conf.getOption(confKey).getOrElse {
-        val dir = java.nio.file.Files.createTempDirectory("graft_xml").toString
+      val root = graft.Scratch.layout(s, "xml", d) { dir =>
         src.write.mode("overwrite").option("rowTag", "supplier").xml(s"$dir/supplier")
-        s.conf.set(confKey, dir)
-        dir
       }
       s.read.schema(src.schema).option("rowTag", "supplier").xml(s"$root/supplier")
         .orderBy(col("s_suppkey"))
@@ -238,16 +224,14 @@ object Scans {
       // audio, clips) actually enter a training pipeline: one opaque
       // file per asset, read as (path, length, content) rows with NO
       // parsing, the typed-metadata join happening downstream
-      // (multimodal_struct's stage). Layout setup is one-time
-      // conf-keyed: the doc subset lands as .bin files via
-      // foreachPartition (each task writes its own rows — the object-
-      // store-put-per-asset shape, no driver funnel). The read proves
-      // Spark's binary source end-to-end: byte lengths and content
+      // (multimodal_struct's stage). Layout setup is one-time: the doc
+      // subset lands as .bin files via foreachPartition (each task
+      // writes its own rows — the object-store-put-per-asset shape, no
+      // driver funnel). The read proves Spark's binary source
+      // end-to-end: byte lengths and content
       // hashes must match the parquet-derived truth exactly, and
       // pathGlobFilter prunes foreign files at listing time.
-      val confKey = s"spark.sql.graft.binsrcdir:$d"
-      val root = s.conf.getOption(confKey).getOrElse {
-        val dir = java.nio.file.Files.createTempDirectory("graft_binsrc").toString
+      val root = graft.Scratch.layout(s, "binsrc", d) { dir =>
         T.documents(s, d).where(col("doc_id") % 25 === 0)
           // null payload = extraction failed upstream: no asset file
           // (NullInputSpec; the read side then simply lists fewer files)
@@ -260,8 +244,6 @@ object Scans {
                 r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
             }
           }
-        s.conf.set(confKey, dir)
-        dir
       }
       s.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(root)
         .select(
@@ -293,13 +275,11 @@ object Scans {
       // indexdata — N part files, zero cross-task coordination,
       // attempt-unique temp files renamed at job commit (exactly-once
       // under speculation; PbfSinkSpec drives abort directly). The
-      // layout write is one-time conf-keyed (join_bucketed's recipe);
-      // the oracled query is the READ-BACK — node coords, a promoted
-      // tag, and way ref counts must round-trip bit-exactly through
-      // the wire format against the parquet-derived oracle.
-      val confKey = s"spark.sql.graft.pbfsinkdir:$d"
-      val root = s.conf.getOption(confKey).getOrElse {
-        val dir = java.nio.file.Files.createTempDirectory("graft_pbf_sink").toString
+      // layout write is one-time; the oracled query is the READ-BACK —
+      // node coords, a promoted tag, and way ref counts must round-trip
+      // bit-exactly through the wire format against the parquet-derived
+      // oracle.
+      val root = graft.Scratch.layout(s, "pbfsink", d) { dir =>
         val nodes = T.part(s, d).select(
           col("p_partkey").as("element_id"), lit("node").as("kind"),
           (col("p_size").cast("long") * 100).as("lon_c"),
@@ -320,8 +300,6 @@ object Scans {
         nodes.unionByName(ways)
           .write.format("graft.sources.OsmPbfSource")
           .option("path", s"$dir/out").mode("overwrite").save()
-        s.conf.set(confKey, dir)
-        dir
       }
       s.read.format("graft.sources.OsmPbfSource").option("path", s"$root/out").load()
         .select(col("element_id"), col("kind"), col("lon_c"), col("lat_c"),
@@ -361,7 +339,7 @@ object Scans {
         |FROM range(0, 10000) t(i)
         |WHERE i BETWEEN 2500 AND 7499
         |ORDER BY element_id""".stripMargin
-    ) { (s, _) =>
+    ) { (s, d) =>
       // REAL `.osm.pbf` ingest (graft.sources.OsmPbfSource over the
       // OsmPbf wire codec): BlobHeader/Blob framing, zlib-deflated
       // PrimitiveBlocks, per-blob string tables, delta/zigzag-packed
@@ -372,14 +350,12 @@ object Scans {
       // BlobHeader.indexdata [minId, maxId] ranges before any payload
       // I/O; leaving lat_c and the relation roles unprojected exercises
       // the O(1) length-prefix skip lanes of the protobuf decode. File
-      // staged once per session (conf-keyed, deterministic contents
+      // staged once per (session, dataset) (deterministic contents
       // shared with the oracle's formulas): nodes, then ways, then
       // relations, ids ascending within each kind — a real extract's
       // layout.
       import graft.sources.{OsmPbf, OsmSyntheticSource => Syn}
-      val file = s.conf.getOption("spark.sql.graft.pbffile").getOrElse {
-        val f = java.nio.file.Files.createTempDirectory("graft_pbf")
-          .resolve("elements.osm.pbf").toString
+      val file = graft.Scratch.layout(s, "pbf", d) { dir =>
         def tags(i: Long) = Array("name" -> s"n${i % 97}")
         val nodes = (0L until 10000L).filter(_ % 3 == 0).iterator.map(i =>
           OsmPbf.Element.node(i, Syn.lonOf(i) * 1000000L, Syn.latOf(i) * 1000000L, tags(i)))
@@ -387,10 +363,8 @@ object Scans {
           OsmPbf.Element.way(i, (1L to i % 5 + 2).map(j => i * 31 + j * 7).toArray, tags(i)))
         val rels = (0L until 10000L).filter(_ % 3 == 2).iterator.map(i =>
           OsmPbf.Element.relation(i, (1L to i % 4 + 1).map(j => i * 17 + j * 3).toArray, tags(i)))
-        OsmPbf.write(f, nodes ++ ways ++ rels, blockSize = 1000)
-        s.conf.set("spark.sql.graft.pbffile", f)
-        f
-      }
+        OsmPbf.write(s"$dir/elements.osm.pbf", nodes ++ ways ++ rels, blockSize = 1000)
+      } + "/elements.osm.pbf"
       s.read.format("graft.sources.OsmPbfSource").option("path", file).load()
         .where(col("element_id").between(2500L, 7499L))
         .select(col("element_id"), col("kind"),
@@ -608,18 +582,15 @@ object Scans {
   )
 
   /** One-time `.osc` fixture layout shared by `source_osc` and
-    * `osm_changeset_stats` (the pngBlobs discipline): every change class
-    * and element kind derived deterministically from the dim tables so
-    * the DuckDB oracle recomputes expectations from parquet; one file
-    * per partition via foreachPartition, odd partitions gzipped so the
-    * reader's magic-byte detection stays on the oracled path.
+    * `osm_changeset_stats`: every change class and element kind derived
+    * deterministically from the dim tables so the DuckDB oracle
+    * recomputes expectations from parquet; one file per partition via
+    * foreachPartition, odd partitions gzipped so the reader's magic-byte
+    * detection stays on the oracled path.
     */
   private def oscRoot(s: org.apache.spark.sql.SparkSession, d: String): String = {
     import s.implicits._
-    graft.Scratch.onceConf(s, s"spark.sql.graft.oscdir:$d") {
-      val dir = graft.Scratch.dir("osc", d)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-
+    graft.Scratch.layout(s, "osc", d) { dir =>
       val emptyMembers =
         expr("CAST(array() AS ARRAY<STRUCT<mtype:STRING, mref:BIGINT, mrole:STRING>>)")
       val nodes = T.supplier(s, d).select(
@@ -668,7 +639,6 @@ object Scans {
               f"$dir%s/chunk_$pid%04d.osc" + (if (gz) ".gz" else ""), rows, gz)
           }
         }
-      dir
     }
   }
 

@@ -91,7 +91,7 @@ object Sorts {
       // exists for — every output file internally sorted by the
       // (status, date, key) prefix — stays pinned by SmokeOpsSpec, which
       // reads each part file alone and asserts sortedness.
-      val out = s"${sys.props("java.io.tmpdir")}/graft_sort_partitioned"
+      val out = graft.Scratch.dir("sort_partitioned", d)
       T.orders(s, d)
         .repartition(4, col("o_orderstatus"))
         .sortWithinPartitions(col("o_orderstatus"), col("o_orderdate"), col("o_orderkey"))

@@ -167,7 +167,7 @@ object StreamOps {
     Q.smoke("stream_idempotent_sink") { (s, _) =>
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
-      val base = java.nio.file.Files.createTempDirectory("graft_idem").toString
+      val base = graft.Scratch.fresh("idem")
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Double)]
       val q = mem.toDF().toDF("id", "v").writeStream
         .option("checkpointLocation", s"$base/chk")
@@ -195,7 +195,7 @@ object StreamOps {
     Q.smoke("sink_stream_foreachbatch") { (s, _) =>
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
-      val base = java.nio.file.Files.createTempDirectory("graft_feb")
+      val base = graft.Scratch.fresh("feb")
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Double)]
       val q = mem.toDF().toDF("id", "v").writeStream
         .option("checkpointLocation", s"$base/chk")
@@ -214,8 +214,8 @@ object StreamOps {
     // reference's dump-then-load (`osm_etl.py:88-91`) with exactly-once
     // batch ids instead of a SQL-dump file.
     Q.smoke("source_stream_file") { (s, d) =>
-      val base = java.nio.file.Files.createTempDirectory("graft_stream_file")
-      val src = base.resolve("src"); java.nio.file.Files.createDirectories(src)
+      val base = graft.Scratch.fresh("stream_file")
+      val src = java.nio.file.Paths.get(base, "src"); java.nio.file.Files.createDirectories(src)
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(d, "region.parquet"), src.resolve("region.parquet"))
       val schema = T.region(s, d).schema
@@ -253,7 +253,7 @@ object StreamOps {
       implicit val sqlCtx = s.sqlContext
       import graft.sources.OsmChange
       import graft.sources.OsmChange.{OscMember, OscRow}
-      val base = java.nio.file.Files.createTempDirectory("graft_osc_apply")
+      val base = graft.Scratch.fresh("osc_apply")
       def way(op: String, id: Long, v: Long, len: Double) =
         OscRow(op, "way", id, v, "", None, None,
                Map("length_m" -> len.toString), Nil, Nil)
@@ -301,7 +301,7 @@ object StreamOps {
     Q.smoke("stream_osm_upsert") { (s, _) =>
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
-      val base = java.nio.file.Files.createTempDirectory("graft_osm_up")
+      val base = graft.Scratch.fresh("osm_up")
       // v0: the existing lake (two ways)
       Seq((1L, 1L, 10.0), (2L, 1L, 20.0))
         .toDF("way_id", "version", "length_m")

@@ -27,7 +27,7 @@ object PipelineChain {
     * swung load_sec 6×; the artifact still refreshes every round without
     * a separate driver hook). */
   def record(spark: SparkSession, sfDir: String): String = {
-    val lake = java.nio.file.Files.createTempDirectory("graft_chain_lake").toString
+    val lake = graft.Scratch.fresh("chain_lake")
     val url = graft.operators.JdbcIO.freshEmbeddedDerby("graft_chain_pg")
 
     // Contention context (VERDICT r11 items 3+8): the r11 chain number

@@ -351,7 +351,7 @@ object StreamingOps {
       (1L to 15L) ++ Seq.fill(3)(13L))
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
     var merged: org.apache.spark.util.sketch.CountMinSketch = null
-    val chk = java.nio.file.Files.createTempDirectory("graft_cms_chk").toString
+    val chk = graft.Scratch.fresh("cms_chk")
     val q = mem.toDF().toDF("k").writeStream
       .option("checkpointLocation", chk)
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -26,7 +26,7 @@ class SmokeOpsSpec extends GraftSuite {
 
   test("sort_partitioned produces files internally ordered by the sort key") {
     q("sort_partitioned").count() // runs the write
-    val out = s"${sys.props("java.io.tmpdir")}/graft_sort_partitioned"
+    val out = Scratch.dir("sort_partitioned", sf)
     import org.apache.spark.sql.Row
     val perFile = spark.read.parquet(out)
       .select(input_file_name().as("f"), col("o_orderstatus"),
