@@ -28,6 +28,7 @@ object RecallReport {
 
     // exact L2 top-10 for the PQ key (ADC approximates squared L2)
     val e = T.embeddings(spark, sfDir)
+    // bound: one row (vec_id 0); the planner sizes the filter as the table
     val q0 = broadcast(e.where(col("vec_id") === 0).select(col("embedding").as("qe")))
     val exactL2 = e.where(col("vec_id") =!= 0).crossJoin(q0)
       .select(col("vec_id"),

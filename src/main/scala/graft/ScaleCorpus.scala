@@ -41,7 +41,7 @@ object ScaleCorpus {
 
     def scaled(t: String)(f: (DataFrame, org.apache.spark.sql.Column) => DataFrame): DataFrame = {
       val base = T(spark, srcDir, t)
-      f(base.crossJoin(broadcast(reps)), col("rep")).drop("rep")
+      f(base.crossJoin(reps), col("rep")).drop("rep")
     }
     def off(c: String, span: Long, rep: org.apache.spark.sql.Column) =
       (col(c) + rep * span).as(c)
@@ -89,7 +89,7 @@ object ScaleCorpus {
                col("l_linestatus"), col("l_shipdate"))
     }, "lineitem")
     emit({
-      val base = T.events(spark, srcDir).crossJoin(broadcast(reps))
+      val base = T.events(spark, srcDir).crossJoin(reps)
       base.select(off("event_id", E, col("rep")), col("ts"),
                   off("user_id", U, col("rep")),
                   col("event_type"), col("value"), col("props"))

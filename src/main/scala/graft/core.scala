@@ -42,21 +42,19 @@ object Det {
   def sqlDavg(x: String): String = s"round(CAST(sum(CAST($x AS DECIMAL(18,2))) AS DOUBLE) / count($x), 4)"
 }
 
-/** Size-gated broadcast (SURVEY §4 / VERDICT r2 item 7).
-  *
-  * Several pipeline operators join a corpus-derived side table (per-doc
-  * gram sets, the token dictionary) that is broadcastable at any tested
-  * scale but corpus-proportional in the limit — at raw-web 100 TB it can
-  * exceed any broadcast budget. `bcast` keeps the broadcast plan while
-  * Catalyst's size estimate (driver-side metadata, no job) stays under a
-  * configurable budget, and silently degrades to a shuffle join (one
-  * extra exchange, identical result) above it.
+/** The one broadcast policy: Spark's planner decides every broadcast
+  * under `spark.sql.autoBroadcastJoinThreshold` (`-1` = never). [[bcast]]
+  * hints a side only while its estimate fits that threshold, so it never
+  * forces a broadcast the planner would refuse; it stays only in joins
+  * where it picks the build side. A raw `broadcast(` stays only on a side
+  * bounded by construction that the planner sizes as its input, and
+  * names the bound in a `// bound:` comment.
   */
 object Gate {
   def bcast(df: DataFrame): DataFrame = {
-    val budget = df.sparkSession.conf.getOption("spark.sql.graft.broadcastGateBytes")
-      .map(_.toLong).getOrElse(256L << 20)
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= budget)
+    val qe = df.queryExecution
+    val threshold = qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (qe.optimizedPlan.stats.sizeInBytes <= threshold)
       org.apache.spark.sql.functions.broadcast(df)
     else df
   }

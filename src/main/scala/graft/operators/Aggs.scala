@@ -157,8 +157,8 @@ object Aggs {
     ) { (s, d) =>
       // region→subregion hierarchy rollup (osm_etl.py:20-28 two-level fan-out).
       T.customer(s, d)
-        .join(broadcast(T.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(T.region(s, d)), col("n_regionkey") === col("r_regionkey"))
+        .join(T.nation(s, d), col("c_nationkey") === col("n_nationkey"))
+        .join(T.region(s, d), col("n_regionkey") === col("r_regionkey"))
         .rollup(col("r_name"), col("n_name"))
         .agg(count(lit(1)).as("n_customers"), Det.dsum(col("c_acctbal")).as("sum_bal"))
         .orderBy(col("r_name").asc_nulls_first, col("n_name").asc_nulls_first)
@@ -303,7 +303,7 @@ object Aggs {
         (flag, cb, prior, tot)
       }
       import s.implicits._
-      val sel = broadcast(crossing.toDF("l_returnflag", "cb", "prior", "tot"))
+      val sel = crossing.toDF("l_returnflag", "cb", "prior", "tot")
       // pass 2: only the crossing buckets survive the join; ≤ 10 000
       // distinct values per bucket bound the window input by DOMAIN
       base.join(sel, base("l_returnflag") === sel("l_returnflag")
@@ -952,7 +952,7 @@ object Aggs {
         .groupBy(col("o_orderpriority"), col("o_orderstatus"))
         .agg(count(lit(1)).as("n"))
       val t = c.groupBy(col("o_orderpriority")).agg(sum(col("n")).as("total"))
-      c.join(Gate.bcast(t), "o_orderpriority")
+      c.join(t, "o_orderpriority")
         .withColumn("l", expr(
           s"CAST(round(${TrainingOps.lnProbTpl("(CAST(n AS DOUBLE) / CAST(total AS DOUBLE))")} * 1000000.0) AS BIGINT)"))
         .groupBy(col("o_orderpriority"))
@@ -988,7 +988,7 @@ object Aggs {
       val m = T.events(s, d).groupBy(col("event_type"))
         .agg(expr("percentile(value, 0.5)").as("med"))
       T.events(s, d)
-        .join(graft.Gate.bcast(m), "event_type")
+        .join(m, "event_type")
         .groupBy(col("event_type"), col("med"))
         .agg(round(expr("percentile(abs(value - med), 0.5)"), 4).as("mad"))
         .select(col("event_type"), round(col("med"), 4).as("median_value"), col("mad"))

@@ -514,6 +514,7 @@ object EmbeddingOps {
         .withColumn("cm", expr("CAST(round(CAST(sm AS DOUBLE) / n) AS BIGINT)"))
         .groupBy(col("label"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, cm))), p -> p.cm)").as("cvec"))
+      // bound: one centroid per label
       val scored = e.join(broadcast(cent), "label")
         .withColumn("d2", expr(
           """aggregate(zip_with(embedding, cvec,
@@ -623,9 +624,10 @@ object EmbeddingOps {
       // prune statically at planning time — file-level pruning can't be
       // driven by a joined column. The data path never funnels through
       // the driver.
-      val q = T.embeddings(s, d).where(col("vec_id") === 0).select(col("embedding").as("qe"))
+      // bound: one row (vec_id 0); the planner sizes the filter as the table
+      val q = broadcast(T.embeddings(s, d).where(col("vec_id") === 0).select(col("embedding").as("qe")))
       val nprobe = s.conf.get("spark.sql.graft.ann.nprobe", "3").toInt // RecallReport sweeps this
-      val probeCids = s.read.parquet(s"$root/codebook").crossJoin(broadcast(q))
+      val probeCids = s.read.parquet(s"$root/codebook").crossJoin(q)
         .select(col("cid"), graft.functions.CosineSimilarity(col("centroid"), col("qe")).as("qc"))
         .orderBy(col("qc").desc).limit(nprobe)
         .collect().map(_.getLong(0))
@@ -638,7 +640,7 @@ object EmbeddingOps {
       s.read.schema(idxSchema).parquet(s"$root/index")
         .where(col("cid").isin(probeCids: _*))
         .where(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q))
+        .crossJoin(q)
         .select(col("vec_id"),
                 round(graft.functions.CosineSimilarity(col("embedding"), col("qe")), 6).as("cosine"))
         .orderBy(col("cosine").desc, col("vec_id"))
@@ -658,9 +660,10 @@ object EmbeddingOps {
         .groupBy(col("label"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, mean_micro))), p -> p.mean_micro / 1e6)")
           .as("centroid"))
-      val q = e.where(col("vec_id") === 0)
-        .select(col("embedding").as("qe"))
-      val probed = cent.crossJoin(broadcast(q))
+      // bound: one row (vec_id 0); the planner sizes the filter as the table
+      val q = broadcast(e.where(col("vec_id") === 0)
+        .select(col("embedding").as("qe")))
+      val probed = cent.crossJoin(q)
         .select(col("label"),
                 graft.functions.CosineSimilarity(
                   expr("transform(centroid, x -> CAST(x AS FLOAT))"), col("qe")).as("qc"))
@@ -668,8 +671,8 @@ object EmbeddingOps {
         .limit(s.conf.get("spark.sql.graft.ann.nprobe", "3").toInt) // RecallReport sweeps this
         .select(col("label"))
       e.where(col("vec_id") =!= 0)
-        .join(broadcast(probed), Seq("label"), "left_semi")
-        .crossJoin(broadcast(q))
+        .join(probed, Seq("label"), "left_semi")
+        .crossJoin(q)
         .select(col("vec_id"), round(cosine("embedding", "qe"), 6).as("cosine"))
         .orderBy(col("cosine").desc, col("vec_id"))
         .limit(10)
@@ -828,9 +831,10 @@ object EmbeddingOps {
       val b = T.embeddings(s, d).where(col("embedding").isNotNull).select(
         col("vec_id"), col("label").cast("long").as("label"),
         expr(pack(1)).as("w0"), expr(pack(33)).as("w1"))
-      val q = b.where(col("vec_id") === 0)
-        .select(col("w0").as("q0"), col("w1").as("q1"))
-      b.crossJoin(broadcast(q))
+      // bound: one row (vec_id 0); the planner sizes the filter as the table
+      val q = broadcast(b.where(col("vec_id") === 0)
+        .select(col("w0").as("q0"), col("w1").as("q1")))
+      b.crossJoin(q)
         .select(col("vec_id"), col("label"),
           expr("CAST(bit_count(w0 ^ q0) + bit_count(w1 ^ q1) AS BIGINT)").as("hamming"))
         .orderBy(col("hamming"), col("vec_id"))

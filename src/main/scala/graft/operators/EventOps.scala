@@ -555,8 +555,8 @@ object EventOps {
       // Cohort retention: users cohorted by first-signup DAY (the
       // fixture's uniform 30-day log collapses to one cohort at week
       // grain — day grain discriminates), activity = distinct purchasers
-      // per (cohort, day-offset) cell. The cohort table is per-user →
-      // size-gated broadcast back onto the log; the distinct-count
+      // per (cohort, day-offset) cell. The cohort table is per-user and
+      // broadcasts back onto the log while it fits; the distinct-count
       // aggregate hashes on the O(days²) cell key, with Spark's two-phase
       // distinct expansion keeping the map side partial. Day indices are
       // exact epoch-ms integer floors, so both engines bucket identically.
@@ -566,7 +566,7 @@ object EventOps {
       val f = ev.where(col("event_type") === "signup")
         .groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
       ev.where(col("event_type") === "purchase")
-        .join(Gate.bcast(f), "user_id")
+        .join(f, "user_id")
         .where(col("day") >= col("cohort_day"))
         .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("day_offset"))
         .agg(countDistinct(col("user_id")).as("n_active"))
@@ -645,15 +645,15 @@ object EventOps {
       // pair then fans out to the ≤7 report days it contributes to via
       // a generator (`explode(sequence(...))` — no shuffle, no
       // re-scan), and one distinct-count per report day finishes it.
-      // The observed-days table is bounded by the calendar → size-gated
-      // broadcast keeps the contribution stream shuffle-free until the
-      // final count.
+      // The observed-days table is bounded by the calendar, so the
+      // planner broadcasts it and the contribution stream stays
+      // shuffle-free until the final count.
       val day = floor(unix_millis(col("ts")) / 86400000L).cast("long")
       val ud = T.events(s, d).select(col("user_id"), day.as("day")).distinct()
       val days = ud.select(col("day").as("report_day")).distinct()
       ud.select(col("user_id"),
                 explode(sequence(col("day"), col("day") + lit(6))).as("report_day"))
-        .join(Gate.bcast(days), "report_day")
+        .join(days, "report_day")
         .groupBy(col("report_day"))
         .agg(countDistinct(col("user_id")).as("active_7d"))
         .orderBy(col("report_day"))
@@ -722,8 +722,8 @@ object EventOps {
       // space, the per-from totals aggregate THAT tiny table, and the
       // probability is integer-scaled ppm ((10⁶·n) DIV n_from) — exact
       // BIGINT arithmetic, bit-identical cross-engine, no float division
-      // in either plan. The totals table is |types|-sized → size-gated
-      // broadcast back onto the pair counts.
+      // in either plan. The totals table is |types|-sized and
+      // broadcasts back onto the pair counts.
       val w = Window.partitionBy(col("user_id")).orderBy(col("ms"), col("event_id"))
       // null-typed events are not states: excluded BEFORE the lead in
       // both engines (the event_path_topk rule), so a transition bridges
@@ -736,7 +736,7 @@ object EventOps {
         .where(col("to_type").isNotNull)
         .groupBy(col("from_type"), col("to_type")).agg(count(lit(1)).as("n"))
       val t = c.groupBy(col("from_type")).agg(sum(col("n")).as("n_from"))
-      c.join(Gate.bcast(t), "from_type")
+      c.join(t, "from_type")
         .select(col("from_type"), col("to_type"), col("n"),
                 expr("(1000000 * n) DIV n_from").as("p_ppm"))
         .orderBy(col("from_type"), col("to_type"))
@@ -1272,7 +1272,7 @@ object EventOps {
         .select(col("event_type"), dow.as("dow"))
         .groupBy(col("event_type"), col("dow")).agg(count(lit(1)).as("n"))
       val t = c.groupBy(col("event_type")).agg(sum(col("n")).cast("long").as("total"))
-      c.join(Gate.bcast(t), "event_type")
+      c.join(t, "event_type")
         .select(col("event_type"), col("dow"), col("n"),
                 round(col("n").cast("double") / col("total"), 6).as("share"))
         .orderBy(col("event_type"), col("dow"))
@@ -1312,8 +1312,8 @@ object EventOps {
         .where(col("ta") < col("tb"))
         .groupBy(col("ta"), col("tb")).agg(count(lit(1)).as("n_both"))
       pairs
-        .join(Gate.bcast(sizes.select(col("event_type").as("ta"), col("n").as("n_a"))), "ta")
-        .join(Gate.bcast(sizes.select(col("event_type").as("tb"), col("n").as("n_b"))), "tb")
+        .join(sizes.select(col("event_type").as("ta"), col("n").as("n_a")), "ta")
+        .join(sizes.select(col("event_type").as("tb"), col("n").as("n_b")), "tb")
         .select(col("ta"), col("tb"), col("n_a"), col("n_b"), col("n_both"),
                 round(col("n_both").cast("double")
                       / (col("n_a") + col("n_b") - col("n_both")), 6).as("jaccard"))
@@ -1429,13 +1429,13 @@ object EventOps {
         .groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
       val sz = f.groupBy(col("cohort_day")).agg(count(lit(1)).as("n_users"))
       val r = ev.where(col("event_type") === "purchase")
-        .join(Gate.bcast(f), "user_id")
+        .join(f, "user_id")
         .where(col("day") >= col("cohort_day"))
         .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("day_offset"))
         .agg(sum(col("value").cast("decimal(18,2)")).as("rev"))
       val w = Window.partitionBy(col("cohort_day")).orderBy(col("day_offset"))
       r.withColumn("cum_rev", sum(col("rev")).over(w))
-        .join(Gate.bcast(sz), "cohort_day")
+        .join(sz, "cohort_day")
         .select(col("cohort_day"), col("day_offset"),
                 round(col("rev").cast("double"), 2).as("revenue"),
                 round(col("cum_rev").cast("double"), 2).as("cum_revenue"),
@@ -1474,7 +1474,7 @@ object EventOps {
         .agg(sum(col("value").cast("decimal(18,2)")).as("rev"))
       val t = u.agg(expr("percentile(cast(rev as double), 0.9)").as("p90"))
       val top = col("rev").cast("double") >= col("p90")
-      u.crossJoin(broadcast(t))
+      u.crossJoin(t)
         .groupBy(col("p90"))
         .agg(count(lit(1)).as("n_users"),
              sum(when(top, 1L).otherwise(0L)).as("n_top"),
@@ -1610,11 +1610,11 @@ object EventOps {
         .groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
       val nu = f.agg(count(lit(1)).cast("long").as("nu"))
       val a = ev.where(col("event_type") === "purchase")
-        .join(Gate.bcast(f), "user_id")
+        .join(f, "user_id")
         .where(col("day") >= col("cohort_day"))
         .groupBy((col("day") - col("cohort_day")).as("o"))
         .agg(countDistinct(col("user_id")).cast("long").as("act"))
-      a.crossJoin(broadcast(nu))
+      a.crossJoin(nu)
         .where(col("o") >= 1 && col("act") > 0)
         .withColumn("l", expr(
           s"CAST(round(${TrainingOps.lnProbTpl("(CAST(act AS DOUBLE) / CAST(nu AS DOUBLE))")} * 1000.0) AS BIGINT)"))
@@ -1666,7 +1666,7 @@ object EventOps {
       // DECIMAL(38) under the same formula.
       val ev = T.events(s, d).select(col("user_id"), unix_millis(col("ts")).as("ms"))
       val bounds = ev.agg(min(col("ms")).as("lo"), max(col("ms")).as("hi"))
-      val u = ev.crossJoin(broadcast(bounds))
+      val u = ev.crossJoin(bounds)
         .groupBy(col("user_id"))
         .agg(sum(when(col("ms") * 2 < col("lo") + col("hi"), 1).otherwise(0))
                .cast("long").as("x"),
@@ -1837,11 +1837,11 @@ object EventOps {
                 row_number().over(w).cast("long").as("i"),
                 sum(col("n")).over(w.rowsBetween(Window.unboundedPreceding,
                   Window.currentRow)).as("pre"))
-        .crossJoin(broadcast(tot))
+        .crossJoin(tot)
         .select(col("day"), col("n"),
                 (col("nd") * col("pre") - col("i") * col("tot")).as("cusum_scaled"))
       val mx = x.agg(max(abs(col("cusum_scaled"))).as("mx"))
-      x.crossJoin(broadcast(mx))
+      x.crossJoin(mx)
         .select(col("day"), col("n"), col("cusum_scaled"),
                 when(abs(col("cusum_scaled")) === col("mx"), 1L).otherwise(0L)
                   .as("is_change_point"))
@@ -1915,7 +1915,7 @@ object EventOps {
         .agg(count(lit(1)).as("cnt"), sum(col("obs")).cast("long").as("d"))
       val wPrior = Window.orderBy(col("t")).rowsBetween(Window.unboundedPreceding, -1)
       val wRun = Window.orderBy(col("t")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val r = c.crossJoin(broadcast(nu))
+      val r = c.crossJoin(nu)
         .select(col("t"), col("d"),
                 (col("nu") - coalesce(sum(col("cnt")).over(wPrior), lit(0L)))
                   .cast("long").as("n"))
@@ -2002,7 +2002,7 @@ object EventOps {
                        else col("ms") * 2 < col("lo") + col("hi")
         sum(when(col("user_id") % 2 === g && inPeriod, v).otherwise(0L)).cast("long")
       }
-      ev.crossJoin(broadcast(bounds))
+      ev.crossJoin(bounds)
         .agg(cell(0, post = false, lit(1L)).as("n_a_pre"),
              cell(0, post = true, lit(1L)).as("n_a_post"),
              cell(1, post = false, lit(1L)).as("n_b_pre"),
@@ -2147,7 +2147,7 @@ object EventOps {
           W.partitionBy(col("variant")).orderBy(col("m"))
             .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
         .withColumn("n", sum(col("c")).over(W.partitionBy(col("variant"))))
-      val pos = r.crossJoin(broadcast(s.range(1, 4).select(col("id").as("q"))))
+      val pos = r.crossJoin(s.range(1, 4).select(col("id").as("q")))
         .withColumn("plo", expr("(q * (n - 1)) DIV 4 + 1"))
         .withColumn("phi", expr("((q * (n - 1)) + 3) DIV 4 + 1"))
       val v = pos.groupBy(col("variant"), col("q"))
@@ -2776,14 +2776,14 @@ object EventOps {
           .cast("long").as("pre"))
       val t = x.groupBy(col("event_type"))
         .agg(max(col("i")).as("nd"), sum(col("n")).cast("long").as("tot"))
-      val c = x.join(Gate.bcast(t), "event_type").where(col("i") < col("nd"))
+      val c = x.join(t, "event_type").where(col("i") < col("nd"))
       val g1 = c.selectExpr("event_type", "day", "i", "pre", "nd", "tot",
                             s"${EventOps.cpGain1} AS gain")
       val wr = Window.partitionBy(col("event_type")).orderBy(col("gain").desc, col("day"))
       val r1 = g1.withColumn("rn", row_number().over(wr)).where(col("rn") === 1)
         .select(col("event_type"), col("day").as("cp_day"),
                 col("i").as("i1"), col("pre").as("preS"), col("gain"))
-      val l2 = c.join(Gate.bcast(r1.select(col("event_type"), col("i1"), col("preS"))),
+      val l2 = c.join(r1.select(col("event_type"), col("i1"), col("preS")),
                       "event_type")
       val g2 = l2.where(col("i") < col("i1"))
         .selectExpr("event_type", "day", "CAST(2 AS BIGINT) AS cp_rank",
@@ -2844,7 +2844,7 @@ object EventOps {
       val o = v.groupBy(col("event_type"), col("digit")).agg(count(lit(1)).as("n_obs"))
       val n = v.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
       val digits = s.range(1, 10).select(col("id").as("digit"))
-      n.crossJoin(broadcast(digits))
+      n.crossJoin(digits)
         .join(o, Seq("event_type", "digit"), "left")
         .select(col("event_type"), col("digit"), col("n"),
                 coalesce(col("n_obs"), lit(0L)).as("n_obs"))

@@ -34,13 +34,13 @@ object Flagship {
       val li = T.lineitem(s, d)
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
                 col("l_shipdate") <  lit("1999-01-01").cast("timestamp"))
-      // orders is fact-sized: shuffle join on the key. nation/region are
-      // constant-cardinality dims: hard-broadcast so the big side never
-      // re-shuffles. customer GROWS with sf → size-gated broadcast.
+      // orders is fact-sized: shuffle join on the key. The planner
+      // broadcasts nation/region (constant-size) and customer (grows with
+      // sf) while it fits the threshold, so the big side never re-shuffles.
       li.join(T.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(graft.Gate.bcast(T.customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(T.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(T.region(s, d)), col("n_regionkey") === col("r_regionkey"))
+        .join(T.customer(s, d), col("o_custkey") === col("c_custkey"))
+        .join(T.nation(s, d), col("c_nationkey") === col("n_nationkey"))
+        .join(T.region(s, d), col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_name"), col("l_returnflag"))
         .agg(
           Det.dsum(col("l_quantity")).as("sum_qty"),

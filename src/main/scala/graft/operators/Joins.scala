@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * Geometry assembly is the reference's core join workload: ways/relations
   * resolve member refs against the node store
   * (`/root/reference/README.md:80-81`). Scale stance per join:
-  *   - dim side bounded (region/nation/customer/bands) → `broadcast()`,
-  *     no shuffle of the fact side;
+  *   - small dim side (region/nation/bands; customer while it fits the
+  *     threshold, it grows with sf) → broadcast, no fact-side shuffle;
   *   - fact⋈fact on a key → shuffle hash / sort-merge on that key, AQE
   *     picks skew-splits at runtime;
   *   - theta/range joins keep one side broadcast-small by construction.
@@ -28,8 +28,9 @@ object Joins {
         |ORDER BY n_name""".stripMargin
     ) { (s, d) =>
       T.orders(s, d)
+        // bound: none — join_broadcast names the strategy it exercises
         .join(broadcast(T.customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(T.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
+        .join(broadcast(T.nation(s, d)), col("c_nationkey") === col("n_nationkey")) // bound: 25 rows
         .groupBy(col("n_name")).agg(count(lit(1)).as("n_orders"))
         .orderBy(col("n_name"))
     },
@@ -176,12 +177,12 @@ object Joins {
       // PAIR, so it is the codegen'd [[graft.functions.IntervalOverlaps]]
       // (one fused branchless test, named in the plan — PlanSpec pins it)
       // over exact integer cents, not four anonymous column comparisons.
-      // The build side grows with sf → size-gated, not hard-broadcast.
+      // The build side grows with sf → broadcast only while it fits.
       val cents = (col("s_acctbal").cast("decimal(18,2)") * 100).cast("long")
       val a = T.supplier(s, d).select(col("s_suppkey").as("suppkey"),
         (cents - 20000).as("a_lo"), (cents + 20000).as("a_hi"))
-      val b = graft.Gate.bcast(T.supplier(s, d).select(col("s_suppkey").as("b_suppkey"),
-        (cents - 20000).as("b_lo"), (cents + 20000).as("b_hi")))
+      val b = T.supplier(s, d).select(col("s_suppkey").as("b_suppkey"),
+        (cents - 20000).as("b_lo"), (cents + 20000).as("b_hi"))
       a.join(b, graft.functions.IntervalOverlaps(
                   col("a_lo"), col("a_hi"), col("b_lo"), col("b_hi")) &&
                 col("suppkey") =!= col("b_suppkey"))
@@ -243,7 +244,7 @@ object Joins {
         .select(col("c_custkey"), nullif(col("c_nationkey"), lit(3)).as("nk"))
       val sup = T.supplier(s, d)
         .select(col("s_suppkey"), nullif(col("s_nationkey"), lit(3)).as("snk"))
-      c.join(graft.Gate.bcast(sup), col("nk") <=> col("snk"))
+      c.join(sup, col("nk") <=> col("snk"))
         .groupBy(col("nk"))
         .agg(count(lit(1)).as("n_pairs"),
              min(col("c_custkey")).as("min_cust"),
@@ -263,8 +264,8 @@ object Joins {
       import s.implicits._
       // Band dim is tiny by construction → broadcast nested loop; the fact
       // side streams through without shuffling.
-      val bands = broadcast(Seq(("small", 0.0, 15.0), ("medium", 15.0, 35.0), ("large", 35.0, 51.0))
-        .toDF("band", "lo", "hi"))
+      val bands = Seq(("small", 0.0, 15.0), ("medium", 15.0, 35.0), ("large", 35.0, 51.0))
+        .toDF("band", "lo", "hi")
       T.lineitem(s, d)
         .join(bands, col("l_quantity") >= col("lo") && col("l_quantity") < col("hi"))
         .groupBy(col("band"))
@@ -706,7 +707,7 @@ object Joins {
       pts
         .withColumn("cx", expr(s"x DIV $cs"))
         .withColumn("cy", expr(s"y DIV $cs"))
-        .join(broadcast(boxCells), Seq("cx", "cy"))
+        .join(boxCells, Seq("cx", "cy"))
         .where(col("x").between(col("minx"), col("maxx")) &&
                col("y").between(col("miny"), col("maxy")))
         .select(col("c_custkey"), col("n_nationkey")).distinct()

@@ -176,8 +176,7 @@ object LlmOps {
         if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
       }
       val entries = parent.keySet().asScala.toSeq.map(k => (k, find(k)))
-      val lblMap = broadcast(
-        vertices.sparkSession.createDataFrame(entries).toDF("id", "root"))
+      val lblMap = vertices.sparkSession.createDataFrame(entries).toDF("id", "root")
       val labels = vertices.select(col("id"))
         .join(lblMap, Seq("id"), "left")
         .select(col("id"), coalesce(col("root"), col("id")).as("lbl"))
@@ -293,10 +292,8 @@ object LlmOps {
     * when the candidate set is large (measured 47s → ~4s at sf0.1's 779k
     * LSH candidates; longs instead of strings cut the rest). Integer
     * common/total counts → the ratio is bit-identical to the oracle's.
-    * The per-doc gram table is O(#docs) — size-GATED broadcast
-    * (graft.Gate): broadcast while it fits the budget, shuffle join
-    * (same result, one more exchange) beyond it — at raw-web scale the
-    * gram table outgrows any broadcast budget.
+    * The per-doc gram table is O(#docs): broadcast while it fits the
+    * threshold, a shuffle join (one more exchange) at raw-web scale.
     */
   private def jaccardOfPairs(pairs: DataFrame, grams: DataFrame, tau: Double): DataFrame = {
     val ga = grams.select(col("doc_id").as("doc_a"), col("grams").as("ga"), size(col("grams")).as("na"))
@@ -305,8 +302,8 @@ object LlmOps {
     // silently flips ≥-comparisons at exact size ratios (found live: a
     // planted pair with nb = 0.8·na vanished).
     pairs
-      .join(graft.Gate.bcast(ga), "doc_a")
-      .join(graft.Gate.bcast(gb), "doc_b")
+      .join(ga, "doc_a")
+      .join(gb, "doc_b")
       .where(least(col("na"), col("nb")) >= lit(BigDecimal(tau)) * greatest(col("na"), col("nb")))
       // gram arrays are sorted by construction (HashedShingles/
       // HashedWordGrams) → allocation-free merge count, not the
@@ -417,13 +414,13 @@ object LlmOps {
                 col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .distinct()
-        // per-doc signature table is O(#docs): size-gated broadcast
-        // (shuffle-join fallback above budget), same stance as
+        // per-doc signature table is O(#docs): broadcast while it fits
+        // (shuffle join beyond), same stance as
         // jaccardOfPairs' gram attach. Agreement is a codegen'd primitive
         // loop over the two long[] signatures (SignatureAgreement), run
         // once per LSH candidate.
-        .join(graft.Gate.bcast(sig.select(col("doc_id").as("doc_a"), col("sig").as("sa"))), "doc_a")
-        .join(graft.Gate.bcast(sig.select(col("doc_id").as("doc_b"), col("sig").as("sb"))), "doc_b")
+        .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sa")), "doc_a")
+        .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sb")), "doc_b")
         .where(graft.functions.SignatureAgreement(col("sa"), col("sb")) * 2 >= k)
         .select(col("doc_a"), col("doc_b"))
       jaccardOfPairs(cand, hg, tau = 0.8)
@@ -476,8 +473,8 @@ object LlmOps {
               col("a.band_i") === col("b.band_i") && col("a.band_h") === col("b.band_h"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .distinct()
-        .join(graft.Gate.bcast(sig.select(col("doc_id").as("doc_a"), col("sig").as("sa"))), "doc_a")
-        .join(graft.Gate.bcast(sig.select(col("doc_id").as("doc_b"), col("sig").as("sb"))), "doc_b")
+        .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sa")), "doc_a")
+        .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sb")), "doc_b")
         .where(graft.functions.SignatureAgreement(col("sa"), col("sb")) * 2 >= k)
         .select(col("doc_a"), col("doc_b"))
       val dropped = jaccardOfPairs(cand, hg, tau = 0.8)
@@ -581,7 +578,7 @@ object LlmOps {
       val ga = grams.select(col("doc_id").as("doc_a"), col("grams").as("ga"),
                             size(col("grams")).cast("long").as("n_a"))
       val gb = grams.select(col("doc_id").as("doc_b"), col("grams").as("gb"))
-      cand.join(graft.Gate.bcast(ga), "doc_a").join(graft.Gate.bcast(gb), "doc_b")
+      cand.join(ga, "doc_a").join(gb, "doc_b")
         .withColumn("com", graft.functions.IntersectCountSorted(col("ga"), col("gb")).cast("long"))
         .where(col("com") * 5 >= col("n_a") * 4)
         .select(col("doc_a"), col("doc_b"), col("com"), col("n_a"),
@@ -851,6 +848,7 @@ object LlmOps {
       // keeps k per partition; ranking compares the 6-dp-rounded dot
       // with vec_id tie-break so last-ulp noise can never reorder.
       val e = T.embeddings(s, d)
+      // bound: one row (vec_id 0); the planner sizes the filter as the table
       val q = broadcast(e.where(col("vec_id") === 0).select(col("embedding").as("qe")))
       e.where(col("vec_id") =!= 0)
         .crossJoin(q)
@@ -877,6 +875,7 @@ object LlmOps {
       // the corpus, TakeOrderedAndProject keeps k per partition — the
       // correctness baseline every ANN variant is judged against.
       val e = T.embeddings(s, d)
+      // bound: one row (vec_id 0); the planner sizes the filter as the table
       val q = broadcast(e.where(col("vec_id") === 0).select(col("embedding").as("qe")))
       e.where(col("vec_id") =!= 0)
         .crossJoin(q)
@@ -951,6 +950,7 @@ object LlmOps {
       // embedding defines no ranking — both filters EXPLICIT in both
       // engines (DuckDB's unnest silently drops them; Spark must match).
       val e = T.embeddings(s, d).where(col("embedding").isNotNull)
+      // bound: every 100th vector (1% of the table), the eval query set
       val qs = broadcast(e.where(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("qid"), col("label").as("qlabel"), col("embedding").as("qe")))
       val ranked = e.crossJoin(qs).where(col("vec_id") =!= col("qid"))
@@ -1107,11 +1107,11 @@ object LlmOps {
         .map(_.getSeq[Float](0).toArray)
       require(qVec.length == 2, "sim_graph_search: query seed vectors missing")
       val qArr = qVec(0).zip(qVec(1)).map { case (a, b) => (a + b) / 2.0f }
-      val qDf = broadcast(Seq(Tuple1(qArr)).toDF("q"))
+      val qDf = Seq(Tuple1(qArr)).toDF("q")
       // candidates score ON DEMAND against the distributed embedding
       // store — the searcher never brute-forces the corpus
       def scoreOf(ids: Seq[Long]): Array[(Long, Double)] =
-        e.join(broadcast(ids.toDF("vec_id")), Seq("vec_id"))
+        e.join(ids.toDF("vec_id"), Seq("vec_id"))
           .crossJoin(qDf)
           .select(col("vec_id"), round(cosine("embedding", "q"), 6).as("score"))
           .collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -1126,9 +1126,9 @@ object LlmOps {
           s"sim_graph_search: beam not converged after 24 rounds (visited ${visited.size})")
         // one action per round: neighbor expansion, visited anti-join,
         // embedding lookup, and scoring fused into a single tiny job
-        val cand = edges.join(broadcast(frontier.toDF("src")), Seq("src"))
+        val cand = edges.join(frontier.toDF("src"), Seq("src"))
           .select(col("dst").as("vec_id")).distinct()
-          .join(broadcast((visited.keys.toSeq :+ -1L).toDF("vec_id")), Seq("vec_id"), "left_anti")
+          .join((visited.keys.toSeq :+ -1L).toDF("vec_id"), Seq("vec_id"), "left_anti")
           .join(e, Seq("vec_id"))
           .crossJoin(qDf)
           .select(col("vec_id"), round(cosine("embedding", "q"), 6).as("score"))
@@ -1174,7 +1174,7 @@ object LlmOps {
       // cost is O(Σ block²·d), never corpus². The threshold compares the
       // RAW cosine on both engines inside the measured empty band
       // (cosTau); only the reported dup_cos is rounded. The dropped-id
-      // table is |dups|-sized and size-gate-broadcasts back onto the
+      // table is |dups|-sized and broadcasts back onto the
       // corpus scan — the corpus itself never shuffles.
       val e = T.embeddings(s, d)
       val dups = e.select(col("label"), col("vec_id").as("vec_a"), col("embedding").as("ea"))
@@ -1184,7 +1184,7 @@ object LlmOps {
         .groupBy(col("vec_a").as("vec_id"))
         .agg(round(max(cosine("ea", "eb")), 6).as("dup_cos"))
       e.select(col("vec_id"), col("label"))
-        .join(graft.Gate.bcast(dups), Seq("vec_id"), "left")
+        .join(dups, Seq("vec_id"), "left")
         .select(col("vec_id"), col("label"),
                 col("dup_cos").isNull.as("kept"), col("dup_cos"))
         .orderBy(col("vec_id"))
@@ -1223,7 +1223,7 @@ object LlmOps {
         .groupBy(col("vec_a").as("vec_id"))
         .agg(round(max(cosine("ea", "eb")), 6).as("dup_cos"))
       e.select(col("vec_id"), col("cid"))
-        .join(graft.Gate.bcast(dups), Seq("vec_id"), "left")
+        .join(dups, Seq("vec_id"), "left")
         .select(col("vec_id"), col("cid"),
                 col("dup_cos").isNull.as("kept"), col("dup_cos"))
         .orderBy(col("vec_id"))
@@ -1249,6 +1249,7 @@ object LlmOps {
       val radius = s.conf.get("spark.sql.graft.ann.lshRadius", "2").toInt
       val masks = (0 until 256).filter(m => Integer.bitCount(m) <= radius).map(_.toLong)
       val maskArr = array(masks.map(lit): _*)
+      // bound: one query row × at most 256 probe masks
       val probes = broadcast(
         q.select(col("qe"), col("qbucket"), explode(maskArr).as("m"))
           .select(col("qe"), col("qbucket").bitwiseXOR(col("m")).as("probe")))
@@ -1482,7 +1483,7 @@ object LlmOps {
         .partitionBy(col("source")).orderBy(col("n").desc, col("lang"))
       val top = c.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select(col("source"), col("lang").as("top_lang"), col("n").as("top_lang_docs"))
-      sTab.join(top, "source").crossJoin(broadcast(tot))
+      sTab.join(top, "source").crossJoin(tot)
         .select(col("source"), col("n_docs"), col("n_chars"),
                 round(col("n_docs") * 1.0 / col("all_docs"), 6).as("doc_share"),
                 col("top_lang"), col("top_lang_docs"))
@@ -1528,7 +1529,7 @@ object LlmOps {
         .where(col("stop_hits") * 100 >= col("k") * col("n_tokens"))
         .groupBy(col("k"))
         .agg(count(lit(1)).as("n_pass"), sum(col("n_tokens")).as("tok_pass"))
-        .crossJoin(broadcast(tot))
+        .crossJoin(tot)
         .select(col("k").as("threshold_pct"), col("n_pass"), col("tok_pass"),
                 round(col("n_pass") * 1.0 / col("n_docs"), 6).as("pass_share"))
         .orderBy(col("threshold_pct"))
@@ -1610,7 +1611,7 @@ object LlmOps {
       // rather than drop whole docs. Shape at 100 TB: the span table is
       // corpus-sized (≈ one span per token), so this is text_rarity's
       // two-pass dictionary pattern at its degrade point — the count
-      // table rides the size-gated broadcast and falls back to a
+      // table broadcasts while it fits and falls back to a
       // hash-shuffle join on the span key (both passes shuffle the same
       // key → co-partitioned). Spans travel as xxhash64 longs Spark-side
       // (8 bytes vs ~60-char strings, same 2^-64 collision argument as
@@ -1625,7 +1626,7 @@ object LlmOps {
           explode(graft.functions.HashedWordGramsSeq(col("text"), 10)).as("h"))
       val counts = spans.select(col("doc_id"), col("h")).distinct()
         .groupBy(col("h")).agg(count(lit(1)).as("nd"))
-      spans.join(graft.Gate.bcast(counts), "h")
+      spans.join(counts, "h")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_spans"),
              sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_dup_spans"),
@@ -1676,7 +1677,7 @@ object LlmOps {
       // removed iff some non-first duplicated span covers it; the
       // surviving tokens rejoin in order, so the doc shrinks instead of
       // being dropped. Scale shape: spans and counts are text_span_dedup's
-      // corpus-sized two-pass dictionary (hashes, size-gated broadcast);
+      // corpus-sized two-pass dictionary (hashes, broadcast while they fit);
       // the cover set only materialises for docs that actually contain
       // removable boilerplate (explode is 10 × |non-first dup spans|,
       // NOT corpus tokens — the doc table itself never explodes), and the
@@ -1690,10 +1691,10 @@ object LlmOps {
       val dupH = spans.select(col("doc_id"), col("h")).distinct()
         .groupBy(col("h")).agg(count(lit(1)).as("nd"))
         .where(col("nd") >= 2).select(col("h"))
-      val dup = spans.join(graft.Gate.bcast(dupH), "h")
+      val dup = spans.join(dupH, "h")
       val first = dup.groupBy(col("h"))
         .agg(min(struct(col("doc_id"), col("pos"))).as("f"))
-      val cov = dup.join(graft.Gate.bcast(first), "h")
+      val cov = dup.join(first, "h")
         .where(!(col("doc_id") === col("f.doc_id") && col("pos") === col("f.pos")))
         .select(col("doc_id"), explode(expr("sequence(pos, pos + 9)")).as("j"))
         .distinct()
@@ -2188,6 +2189,7 @@ object LlmOps {
       // aggregator) and the fusion joins two 20-row lists — rank
       // windows only ever run over k-bounded tables, never the corpus.
       val e = T.embeddings(s, d)
+      // bound: one row (vec_id 0); the planner sizes the filter as the table
       val q = broadcast(e.where(col("vec_id") === 0).select(col("embedding").as("qe")))
       val sc = e.where(col("vec_id") =!= 0)
         .crossJoin(q)

@@ -41,14 +41,6 @@ object OsmKernels {
       (col("p_size").cast("long") * 100).as("lon_c"),
       round(col("p_retailprice") * 100).cast("long").as("lat_c")) ++ extra.map(col): _*)
 
-  // Node store: dim-sized in the fixture (grows with distinct parts) so
-  // it broadcasts and the fact-sized ref table never shuffles for the
-  // resolve — but a REAL planet node store is itself fact-sized, so the
-  // broadcast is size-GATED (graft.Gate): above budget the resolve
-  // degrades to a shuffle join on node_id (same result; at planet scale
-  // it would ride the bucketed layout, join_bucketed).
-  private def nodes(s: SparkSession, d: String) = Gate.bcast(nodeStore(s, d))
-
   /** A way's members as an array of struct(pos, node_ref, fields…) in
     * member order. collect_list has no post-shuffle order guarantee;
     * sorting on the leading (pos, node_ref) pins it (§7.3). */
@@ -57,14 +49,14 @@ object OsmKernels {
 
   /** Each way's points in member order: (way_id, pts), with pts =
     * array<struct<pos, node_ref, lon_c, lat_c>>. The refs resolve against
-    * the node store through the size-gated [[Gate.bcast]] (broadcast
-    * while the node store fits the budget, a shuffle join beyond it — a
-    * planet-scale node store must never be driver-collected), then one
+    * the node store (dim-sized in the fixture, so the planner broadcasts
+    * it; a planet node store is fact-sized and takes a shuffle join on
+    * node_id, or the bucketed layout of join_bucketed), then one
     * regroup shuffle. The one way assembly of the geometry keys and of
     * OsmEtlJob.assembleWays: the same code, not a copy. */
   private[graft] def wayPoints(refs: DataFrame, nodes: DataFrame): DataFrame =
     refs
-      .join(Gate.bcast(nodes.select("node_id", "lon_c", "lat_c")),
+      .join(nodes.select("node_id", "lon_c", "lat_c"),
             col("node_ref") === col("node_id"))
       .groupBy(col("way_id"))
       .agg(inMemberOrder("lon_c", "lat_c").as("pts"))
@@ -628,7 +620,7 @@ object OsmKernels {
             .cast("decimal(18,1)").as("length_m"))
       val cls = T.orders(s, d)
         .select(col("o_orderkey").as("way_id"), col("o_orderpriority").as("highway_class"))
-      lens.join(graft.Gate.bcast(cls), "way_id")
+      lens.join(cls, "way_id")
         .groupBy(col("highway_class"))
         .agg(count(lit(1)).as("n_ways"),
              round(sum(col("length_m")).cast("double") / 1000, 3).as("total_km"))
@@ -712,7 +704,7 @@ object OsmKernels {
         // as one fused codegen'd pass over the sorted point array.
         .select(col("way_id"), graft.functions.BearingBins(col("pts")).as("c"))
       val cnt = perWay
-        .join(graft.Gate.bcast(cls), "way_id")
+        .join(cls, "way_id")
         .groupBy(col("highway_class"))
         .agg(sum(col("c.ew")).as("ew"), sum(col("c.ns")).as("ns"),
              sum(col("c.ne")).as("ne"), sum(col("c.nw")).as("nw"))
@@ -972,7 +964,7 @@ object OsmKernels {
       // partition key of the written layer.
       T.lineitem(s, d)
         .select(col("l_orderkey").as("way_id"), col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
+        .join(nodeStore(s, d), col("node_ref") === col("node_id"))
         .groupBy(col("way_id"))
         .agg(min(col("lon_c")).as("xmin"), max(col("lon_c")).as("xmax"),
              min(col("lat_c")).as("ymin"), max(col("lat_c")).as("ymax"))
@@ -1085,7 +1077,7 @@ object OsmKernels {
       // parallelizes over (region × band × strip).
       val bb = T.lineitem(s, d)
         .select(col("l_orderkey").as("way_id"), col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
+        .join(nodeStore(s, d), col("node_ref") === col("node_id"))
         .groupBy(col("way_id"))
         .agg(min(col("lon_c")).as("xmin"), max(col("lon_c")).as("xmax"),
              min(col("lat_c")).as("ymin"), max(col("lat_c")).as("ymax"))
@@ -1108,6 +1100,7 @@ object OsmKernels {
           org.apache.spark.sql.expressions.Window.orderBy(col("xs"))))
         .where(col("xe").isNotNull)
         .select(col("xs"), col("xe"), expr("xs DIV 500").as("tx"))
+      // bound: strip edges lie in [1000, 3000], so at most 2000 strips
       val cover = band.join(broadcast(strips),
         col("x1") <= col("xs") && col("x2") >= col("xe"))
       val wseg = org.apache.spark.sql.expressions.Window
@@ -1176,7 +1169,7 @@ object OsmKernels {
       // by cos(lat) exactly as the geodesic measures do (a planar radius
       // is 2× too generous at 60°N). Plan shape: the POI set is the
       // small side — it explodes to its 3×3 neighbor cells and
-      // size-gate-broadcasts onto the node store via a
+      // broadcasts onto the node store via a
       // pure cell equi-join; the metric test only FILTERS the bounded
       // candidate set, never drives the join (join_spatial_grid's
       // discipline). HALO BOUND (ADVICE r16): the 3×3 halo is exact
@@ -1320,7 +1313,7 @@ object OsmKernels {
       val cls = T.orders(s, d)
         .select(col("o_orderkey").as("way_id"), col("o_orderpriority").as("landuse_class"))
       wayRings(s, d)
-        .join(graft.Gate.bcast(cls), "way_id")
+        .join(cls, "way_id")
         .groupBy(col("landuse_class"))
         .agg(count(lit(1)).as("n_polys"),
              sum(abs(col("shoe"))).cast("long").as("shoe_sum"))
@@ -1440,7 +1433,7 @@ object OsmKernels {
         .join(wayMembers, Seq("rel_id"))
         .join(T.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")),
               col("way_id") === col("l_orderkey"))
-        .join(nodes(s, d), col("l_partkey") === col("node_id"))
+        .join(nodeStore(s, d), col("l_partkey") === col("node_id"))
         .groupBy(col("root_id"))
         .agg(
           countDistinct(col("way_id")).as("n_member_ways"),
@@ -1478,7 +1471,7 @@ object OsmKernels {
       T.orders(s, d).select(col("o_custkey").as("relation_id"), col("o_orderkey"))
         .join(T.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")),
               col("o_orderkey") === col("l_orderkey"))
-        .join(nodes(s, d), col("l_partkey") === col("node_id"))
+        .join(nodeStore(s, d), col("l_partkey") === col("node_id"))
         .groupBy(col("relation_id"))
         .agg(
           countDistinct(col("l_orderkey")).as("n_member_ways"),
@@ -1689,7 +1682,7 @@ object OsmKernels {
       // the equi-join proposes candidates, bbox + exact crossing-number
       // (PointInRing, codegen'd integer kernel, boundary-consistent with
       // the oracle) decide them, and pair-dedupe absorbs multi-cell
-      // meetings. POI side is size-gated broadcast (dim-sized here;
+      // meetings. The planner broadcasts the POI side (dim-sized here;
       // fact-sized POIs degrade to a cell-key shuffle). Cell size is a
       // replication-vs-precision knob per axis (coords are centi-units;
       // lat spans ~24× lon on this fixture).
@@ -1710,7 +1703,7 @@ object OsmKernels {
         .withColumn("cx", explode(sequence(expr("minx DIV 2500"), expr("maxx DIV 2500"))))
         .withColumn("cy", explode(sequence(expr("miny DIV 60000"), expr("maxy DIV 60000"))))
       polyCells
-        .join(graft.Gate.bcast(pois), Seq("cx", "cy"))
+        .join(pois, Seq("cx", "cy"))
         .where(col("px").between(col("minx"), col("maxx")) &&
                col("py").between(col("miny"), col("maxy")))
         .where(graft.functions.PointInRing(col("rlons"), col("rlats"), col("px"), col("py")))
@@ -2117,7 +2110,7 @@ object OsmKernels {
       // measure-second asymmetry Osmose runs at planet scale.
       val pts = T.lineitem(s, d)
         .select(col("l_orderkey").as("way_id"), col("l_partkey").as("node_ref"))
-        .join(nodes(s, d), col("node_ref") === col("node_id"))
+        .join(nodeStore(s, d), col("node_ref") === col("node_id"))
         .select(col("way_id"), col("lon_c").as("x"), col("lat_c").as("y"))
       // edges via ONE per-way regroup (the osm_way_geometry discipline —
       // a window + positional self-join would pay two extra exchanges)
@@ -2224,7 +2217,7 @@ object OsmKernels {
         .where(col("k1") < col("k2"))
         .groupBy(col("k1").as("tag_a"), col("k2").as("tag_b"))
         .agg(count(lit(1)).as("n_elements"))
-        .crossJoin(Gate.bcast(total))
+        .crossJoin(total)
         .selectExpr("tag_a", "tag_b", "n_elements",
                     "(1000000 * n_elements) DIV n AS support_ppm")
         .orderBy(col("tag_a"), col("tag_b"))
@@ -2362,17 +2355,17 @@ object OsmKernels {
       // appends a new open one, so every historical state stays queryable
       // by validity interval — the dimension shape a weekly snapshot
       // pipeline needs for as-of reprocessing. One left join marks closed
-      // rows (the update set is corpus-fraction-sized → size-gated
-      // broadcast, the dimension never shuffles) plus a union of the new
-      // versions; at scale the join inherits the bucketed dim layout like
-      // merge_upsert. Updates synthesized deterministically: odd custkeys
+      // rows (the update set is corpus-fraction-sized; the planner
+      // broadcasts it while it fits, the dimension never shuffles) plus
+      // a union of the new versions; at scale the join inherits the
+      // bucketed dim layout like merge_upsert. Updates synthesized deterministically: odd custkeys
       // re-balance (+100) at version time 1.
       val c = T.customer(s, d)
       val base = c.select(col("c_custkey").as("id"), col("c_acctbal").as("bal"))
       val upd = c.where(col("c_custkey") % 2 === 1)
         .select(col("c_custkey").as("u_id"), (col("c_acctbal") + 100).as("u_bal"))
       val closedOrCurrent = base
-        .join(Gate.bcast(upd.select(col("u_id"))), col("id") === col("u_id"), "left")
+        .join(upd.select(col("u_id")), col("id") === col("u_id"), "left")
         .select(col("id"), col("bal"), lit(0L).as("valid_from"),
                 when(col("u_id").isNull, lit(null).cast("long"))
                   .otherwise(lit(1L)).as("valid_to"))
@@ -2398,12 +2391,10 @@ object OsmKernels {
       // colorado" becomes partition pruning on re-read (PartitionFilters —
       // unselected regions' files are never opened).
       val out = graft.Scratch.dir("region_partitioned", d)
-      // customer grows with sf — size-gated broadcast (nation/region are
-      // constant-cardinality and stay hard-broadcast)
       val staged = T.orders(s, d)
-        .join(graft.Gate.bcast(T.customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(T.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(T.region(s, d)), col("n_regionkey") === col("r_regionkey"))
+        .join(T.customer(s, d), col("o_custkey") === col("c_custkey"))
+        .join(T.nation(s, d), col("c_nationkey") === col("n_nationkey"))
+        .join(T.region(s, d), col("n_regionkey") === col("r_regionkey"))
         .select(col("o_orderkey"), col("o_totalprice"), col("r_name"), col("n_name"))
       // r19 opt: cluster by the partition columns before the write (the
       // sink_parquet note — one file per (region, nation) dir instead of
@@ -2786,9 +2777,9 @@ object OsmKernels {
       // splits at its interior junctions into routable edges
       // (from_node → to_node with the traversed vertex count and metric
       // length). Scale shape: the junction table is a fact-scale degree
-      // aggregate whose OUTPUT is node-store-sized → size-gated
-      // broadcast back onto the membership scan (shuffle join past the
-      // budget); the split itself runs INSIDE the one per-way regroup
+      // aggregate whose OUTPUT is node-store-sized → broadcast back
+      // onto the membership scan while it fits the threshold (shuffle
+      // join past it); the split itself runs INSIDE the one per-way regroup
       // row (the same single shuffle `osm_way_geometry` pays) via
       // higher-order functions — cut indices, pair zip, per-edge exact
       // integer sqrt fold — so no second shuffle and no explode before
@@ -2825,10 +2816,10 @@ object OsmKernels {
       // one 1-row bounds broadcast onto the node scan, then 8 pure
       // map-side projections — no shuffle at all beyond the final
       // presentation sort.
-      val n = nodes(s, d)
+      val n = nodeStore(s, d)
       val bounds = n.agg(min(col("lon_c")).as("lox"), max(col("lon_c")).as("hix"),
                          min(col("lat_c")).as("loy"), max(col("lat_c")).as("hiy"))
-      var df = n.crossJoin(broadcast(bounds))
+      var df = n.crossJoin(bounds)
         .selectExpr("node_id",
           "((lon_c - lox) * 256) DIV (hix - lox + 1) AS cell_x",
           "((lat_c - loy) * 256) DIV (hiy - loy + 1) AS cell_y")
@@ -3031,7 +3022,7 @@ object OsmKernels {
                 explode(col("gs")).as("g"))
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("probe_id"))
         .orderBy(col("sim_ppm").desc, col("node_id"))
-      names.join(broadcast(probes), "g")
+      names.join(probes, "g")
         .groupBy(col("probe_id"), col("probe_text"), col("node_id"),
                  col("name"), col("n1"), col("n2"))
         .agg(count(lit(1)).as("sh"))
@@ -3264,8 +3255,8 @@ object OsmKernels {
       // junction splitting: every CONSECUTIVE node pair within a way is
       // an edge of the walk graph, so the edge set is one per-way
       // regroup (the osm_way_geometry shuffle) + an in-row pair unfold,
-      // canonicalized undirected + distinct, clipped by two size-gated
-      // semi-joins against the window node set. Components then come
+      // canonicalized undirected + distinct, clipped by two semi-joins
+      // against the window node set. Components then come
       // from [[LlmOps.connectedComponents]] — large-star/small-star
       // contraction, O(log n) rounds to a star forest with a structural
       // certificate, per-round localCheckpoint lineage truncation — so
@@ -3289,8 +3280,8 @@ object OsmKernels {
         .select(col("p.a").as("a"), col("p.b").as("b"))
         .where(col("a") =!= col("b"))
       val edges = pairs
-        .join(graft.Gate.bcast(win).withColumnRenamed("node", "a"), Seq("a"), "left_semi")
-        .join(graft.Gate.bcast(win).withColumnRenamed("node", "b"), Seq("b"), "left_semi")
+        .join(win.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
+        .join(win.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
         .select(least(col("a"), col("b")).as("src"), greatest(col("a"), col("b")).as("dst"))
         .distinct()
       val (labels, _) = LlmOps.connectedComponents(win.select(col("node").as("id")), edges)
@@ -3308,10 +3299,10 @@ object OsmKernels {
     * Strict `<` guards termination against zero-weight cycles, and
     * `localCheckpoint` per round truncates the lineage exactly as in
     * the iterative-op family (dedup_clusters / bfsConverged). Scale
-    * shape per round: the delta frontier size-gate-broadcasts onto the
-    * shuffle-partitioned edge fact, one min-collapse on dst, one
-    * left-join against the |V|-sized dist table; the tiny frontier
-    * count is the convergence action. Distances stay deterministic:
+    * shape per round: the delta frontier broadcasts onto the
+    * shuffle-partitioned edge fact while it fits the threshold, one
+    * min-collapse on dst, one left-join against the |V|-sized dist
+    * table; the tiny frontier count is the convergence action. Distances stay deterministic:
     * every candidate is a left-associated sum of the 0.1-rounded edge
     * weights along its path, and min() picks from identical candidate
     * sets on any partitioning.
@@ -3378,7 +3369,7 @@ object OsmKernels {
         throw new IllegalStateException(
           s"relaxConverged: frontier still live ($live nodes) after $maxRounds rounds — " +
             "graph needs more relaxation rounds than the budget; raise maxRounds explicitly")
-      val cand = e.join(graft.Gate.bcast(frontier.withColumnRenamed("node", "u")), Seq("u"))
+      val cand = e.join(frontier.withColumnRenamed("node", "u"), Seq("u"))
         .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
       frontier = cand.join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left")
@@ -3418,8 +3409,8 @@ object OsmKernels {
     // interpreted lambdas it replaces; RoadGraphSpec's sparse fixture
     // pins the splitting semantics). Meter factor + final-only round
     // stay here, next to the oracle's.
-    memb.join(nodes(s, d), col("node_ref") === col("node_id"))
-      .join(graft.Gate.bcast(junc), col("node_ref") === col("jnode"), "left")
+    memb.join(nodeStore(s, d), col("node_ref") === col("node_id"))
+      .join(junc, col("node_ref") === col("jnode"), "left")
       .withColumn("is_junc", col("jnode").isNotNull)
       .groupBy(col("way_id"))
       .agg(collect_list(struct(col("pos"), col("node_ref"), col("lon_c"),

@@ -84,7 +84,7 @@ object Scans {
       // declared schema (partition column included): no inference pass
       // over the lake, and an empty layout still yields the right shape
       s.read.schema(T.orders(s, d).schema.add("o_year", "int")).parquet(s"$root/orders")
-        .join(broadcast(dim), col("o_year") === col("dim_year"))
+        .join(dim, col("o_year") === col("dim_year"))
         .groupBy(col("o_year").cast("long").as("o_year"))
         .agg(count(lit(1)).as("n_orders"),
              Det.dsum(col("o_totalprice")).as("sum_price"))
@@ -475,7 +475,7 @@ object Scans {
       // (ships with Spark) stands in for the server; the write path
       // (batched inserts, explicit DDL types — VARCHAR, not the dialect's
       // default CLOB) is the identical Spark surface PostGIS would use.
-      val url = JdbcIO.freshEmbeddedDerby("graft_derby_sink")
+      val url = JdbcIO.freshEmbeddedDerby("derby_sink")
       val src = T.nation(s, d).select(col("n_nationkey"), col("n_regionkey"), col("n_name"))
       // a dim-sized write needs no fan-out; 100 TB fact loads raise
       // parallelism instead (each task opens its own connection)
@@ -497,7 +497,7 @@ object Scans {
       // need not be tight: Spark leaves the first/last stripes unbounded,
       // so rows outside [0, 150000] still arrive, just unevenly — the
       // fixed bound covers custkey up to sf1 and stays correct beyond.
-      val url = JdbcIO.freshEmbeddedDerby("graft_derby_src")
+      val url = JdbcIO.freshEmbeddedDerby("derby_src")
       val src = T.customer(s, d)
         .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
       JdbcIO.writeTable(src.coalesce(2), url, "customer_src",
@@ -685,11 +685,11 @@ object JdbcIO {
   }
 
   /** URL of a fresh single-JVM embedded Derby database (test/demo stand-in
-    * for the reference's PostGIS server; a new temp dir per call so
-    * repeated runs never see stale rows). */
-  def freshEmbeddedDerby(prefix: String): String = {
+    * for the reference's PostGIS server) in a new [[graft.Scratch.fresh]]
+    * dir per call: repeated runs never see stale rows. */
+  def freshEmbeddedDerby(tag: String): String = {
     derbyVarcharDialect // idempotent one-time registration
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    val dir = graft.Scratch.fresh(tag)
     // keep Derby's log chatter out of cwd (it defaults to ./derby.log)
     System.setProperty("derby.stream.error.file", s"$dir/derby.log")
     s"jdbc:derby:$dir/db;create=true"

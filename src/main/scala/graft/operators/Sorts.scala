@@ -66,7 +66,7 @@ object Sorts {
       val w = Window.partitionBy(col("n_nationkey"))
         .orderBy(col("c_acctbal").desc, col("c_custkey"))
       T.customer(s, d)
-        .join(broadcast(T.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
+        .join(T.nation(s, d), col("c_nationkey") === col("n_nationkey"))
         .withColumn("rn", row_number().over(w))
         .where(col("rn") <= 3)
         .select(col("n_nationkey"), col("c_custkey"), col("c_acctbal"))

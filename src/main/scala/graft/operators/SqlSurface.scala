@@ -80,7 +80,7 @@ object SqlSurface {
     // Revenue sums exact decimals (rounded only at output); the ORDER BY
     // is total (revenue ties broken by the unique l_orderkey) so the
     // LIMIT 10 cut is deterministic cross-engine. Catalyst plans this as
-    // two broadcast joins (customer/orders both under the size gate at
+    // two broadcast joins (customer/orders both under the broadcast threshold at
     // fixture scale; sort-merge beyond) + partial agg + TakeOrdered.
     "sql_shipping_priority" ->
       """SELECT l_orderkey,

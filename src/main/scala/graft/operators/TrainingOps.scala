@@ -379,7 +379,7 @@ object TrainingOps {
       val m = T.embeddings(s, d)
         .groupBy(col("label")).agg(count(lit(1)).as("cnt"))
         .agg(min(col("cnt")).as("m"))
-      r.crossJoin(broadcast(m))
+      r.crossJoin(m)
         .where(col("rk") <= col("m"))
         .select(col("label"), col("rk"), col("vec_id"))
         .orderBy(col("label"), col("rk"))
@@ -403,15 +403,15 @@ object TrainingOps {
       // are boilerplate; rare-token-heavy docs are noise or treasure. The
       // pattern is the point at scale: pass 1 builds the corpus dictionary
       // (one narrow groupBy — O(vocab) result), pass 2 joins it back to
-      // the token stream. The dictionary join is size-GATED (graft.Gate):
-      // broadcast while the vocab fits the budget — the fact side never
-      // shuffles — degrading to a shuffle join when raw-web token-type
-      // counts blow past it. Scores stay in exact integer sums until one
+      // the token stream. The planner broadcasts the dictionary while
+      // the vocab fits the threshold — the fact side never shuffles —
+      // and takes a shuffle join when raw-web token-type counts blow
+      // past it. Scores stay in exact integer sums until one
       // final double division.
       val tok = T.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
       val freq = tok.groupBy(col("t")).agg(count(lit(1)).as("f"))
-      tok.join(graft.Gate.bcast(freq), "t")
+      tok.join(freq, "t")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_tok"),
              (sum(col("f")).cast("double") / count(lit(1))).as("mean_tok_freq"))
@@ -574,7 +574,7 @@ object TrainingOps {
       b.join(graft.Gate.bcast(cb), Seq("hp"))
         .join(graft.Gate.bcast(cu), Seq("h1"))
         .join(graft.Gate.bcast(cw.withColumnRenamed("h", "h2tok")), Seq("h2tok"))
-        .crossJoin(broadcast(nn))
+        .crossJoin(nn)
         .select(col("doc_id"),
           expr(s"CAST(round(${lnProbTpl("(0.75 * (CAST(c12 AS DOUBLE) / CAST(c1 AS DOUBLE)) + 0.25 * (CAST(cw AS DOUBLE) / CAST(n AS DOUBLE)))")} * 1000.0) AS BIGINT)")
             .as("l"))
@@ -623,7 +623,7 @@ object TrainingOps {
       // BEFORE the per-doc sum. Scale: the corpus collapses ONCE to the
       // vocab^2-bounded bigram model; the three smoothing statistics
       // (c1, N1+ forward, N1+ backward) are aggregates OF THE MODEL,
-      // not the corpus, all size-gate-broadcast back; T is a 1-row
+      // not the corpus, all broadcast back while they fit; T is a 1-row
       // cross-join. Scoring stays map-side.
       import graft.functions.{HashedBigramPairs, HashedWordGramsSeq}
       val staged = T.documents(s, d)
@@ -658,10 +658,10 @@ object TrainingOps {
         .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1f"))
       val n1b = cb.groupBy(col("h2tok")).agg(count(lit(1)).as("n1b"))
       val tt = cb.agg(count(lit(1)).as("tt"))
-      b.join(graft.Gate.bcast(cb.select(col("hp"), col("c12"))), Seq("hp"))
-        .join(graft.Gate.bcast(cf), Seq("h1"))
-        .join(graft.Gate.bcast(n1b), Seq("h2tok"))
-        .crossJoin(broadcast(tt))
+      b.join(cb.select(col("hp"), col("c12")), Seq("hp"))
+        .join(cf, Seq("h1"))
+        .join(n1b, Seq("h2tok"))
+        .crossJoin(tt)
         .select(col("doc_id"),
           expr(s"CAST(round(${lnProbTpl("((CAST(c12 AS DOUBLE) - 0.75) / CAST(c1 AS DOUBLE) + (0.75 * CAST(n1f AS DOUBLE) / CAST(c1 AS DOUBLE)) * (CAST(n1b AS DOUBLE) / CAST(tt AS DOUBLE)))")} * 1000.0) AS BIGINT)").as("l"))
         .groupBy(col("doc_id"))
@@ -877,7 +877,7 @@ object TrainingOps {
       // Benchmark-contamination detection — before training, every corpus
       // is screened for eval-set leakage: any doc sharing a word-5-gram
       // with the benchmark set is flagged. The benchmark gram table is
-      // benchmark-sized (small) → size-gated broadcast; the corpus side
+      // benchmark-sized (small) → the planner broadcasts it; the corpus side
       // explodes grams but never shuffles for the probe (semi-probe via
       // inner join on the gram, then one partial+final count by doc).
       // Docs with doc_id % 97 = 0 stand in for the benchmark.
@@ -891,7 +891,7 @@ object TrainingOps {
         explode(graft.functions.HashedWordGrams(col("text"), 5)).as("g"))
       val bench = grams.where(col("doc_id") % 97 === 0).select(col("g")).distinct()
       grams.where(col("doc_id") % 97 =!= 0)
-        .join(graft.Gate.bcast(bench), "g")
+        .join(bench, "g")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_hit_grams"))
         .orderBy(col("doc_id"))
@@ -952,7 +952,7 @@ object TrainingOps {
           corpus.where(graft.functions.BloomMightContainLong(col("g"), bloom))
         }
       screened
-        .join(graft.Gate.bcast(bench), "g")
+        .join(bench, "g")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_hit_grams"))
         .orderBy(col("doc_id"))
@@ -982,9 +982,10 @@ object TrainingOps {
       val docs = T.documents(s, d)
       val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
       val th = counts
-        .crossJoin(broadcast(counts.agg(min(col("n")).as("mn"))))
+        .crossJoin(counts.agg(min(col("n")).as("mn")))
         .select(col("lang"),
           floor(lit(10000) * sqrt(col("mn").cast("double") / col("n"))).as("threshold"))
+      // bound: one row per lang
       docs.join(broadcast(th), "lang")
         .where(fpSpark("text") % 10000 < col("threshold"))
         .select(col("doc_id"), col("lang"), col("threshold"))
@@ -1026,8 +1027,9 @@ object TrainingOps {
         .select(col("doc_id"), col("lang"), (fpSpark("text") % 1000000).as("h"))
       val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
       val rates = counts
-        .crossJoin(broadcast(docs.agg(count(lit(1)).as("n_total"))))
-        .join(broadcast(targets), "lang")
+        .crossJoin(docs.agg(count(lit(1)).as("n_total")))
+        // the hint pins the join order (unhinted inner joins get reordered)
+        .join(broadcast(targets), "lang") // bound: 5 rows
         .select(col("lang"), col("n_docs"),
           least(lit(1000000L), expr("(target_ppm * n_total) DIV n_docs")).as("rate_ppm"))
       val sampled = docs.join(Gate.bcast(rates), "lang")
@@ -1098,7 +1100,7 @@ object TrainingOps {
       val vocab = tok.groupBy(col("t")).agg(count(lit(1)).as("f"))
         .orderBy(col("f").desc, col("t")).limit(10)
         .select(col("t").as("vt"))
-      tok.join(broadcast(vocab), col("t") === col("vt"), "left")
+      tok.join(vocab, col("t") === col("vt"), "left")
         .select(col("source"), when(col("vt").isNull, 1L).otherwise(0L).as("oov"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_tokens"), sum(col("oov")).as("n_oov"))
@@ -1146,7 +1148,7 @@ object TrainingOps {
         .withColumn("cum", sum(col("f")).over(
           Window.orderBy(col("rk")).rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .where(col("rk").isin(1, 2, 5, 10, 20, 30))
-        .crossJoin(broadcast(tot))
+        .crossJoin(tot)
         .select(col("rk").cast("long").as("vocab_k"),
                 col("cum").as("covered_tokens"),
                 expr("(1000000 * cum) DIV n").as("coverage_ppm"))
@@ -1315,14 +1317,14 @@ object TrainingOps {
       val w = strata.selectExpr("lang", "nh",
         "CAST(round(1000000 * sqrt(CAST(nh * qh - sh * sh AS DOUBLE))) AS BIGINT) AS w_micro")
       val tot = w.agg(sum(col("w_micro")).cast("long").as("wt"))
-      val base = w.crossJoin(broadcast(tot)).where(col("wt") > 0)
+      val base = w.crossJoin(tot).where(col("wt") > 0)
         .selectExpr("lang", "nh", "w_micro",
           "(200 * w_micro) DIV wt AS n_base", "(200 * w_micro) % wt AS rem")
       val leftover = base.agg((lit(200L) - sum(col("n_base"))).cast("long").as("leftover"))
       base.withColumn("rk",
           row_number().over(org.apache.spark.sql.expressions.Window
             .orderBy(col("rem").desc, col("lang"))))
-        .crossJoin(broadcast(leftover))
+        .crossJoin(leftover)
         .selectExpr("lang", "nh AS n_docs", "w_micro",
           "CAST(n_base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS n_alloc")
         .orderBy(col("lang"))
@@ -1485,8 +1487,8 @@ object TrainingOps {
       // hash-drift on neither count. Cost shape at 100 TB: the token
       // stream shuffles once to per-(doc,token) counts; df is a second
       // aggregate OVER THE ALREADY-COLLAPSED tf table (vocabulary-sized
-      // input, not token-stream-sized); the vocabulary table rides the
-      // size-gated broadcast back onto tf, and the top-3 is a
+      // input, not token-stream-sized); the vocabulary table broadcasts
+      // back onto tf while it fits, and the top-3 is a
       // doc-partitioned window on the same doc-keyed distribution.
       import org.apache.spark.sql.expressions.Window
       val docs = T.documents(s, d)
@@ -1506,8 +1508,8 @@ object TrainingOps {
       val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
       val n = docs.agg(count(lit(1)).as("n_docs"))
       val w = Window.partitionBy(col("doc_id")).orderBy(col("score").desc, col("token"))
-      tf.join(Gate.bcast(df), "token")
-        .crossJoin(broadcast(n))
+      tf.join(df, "token")
+        .crossJoin(n)
         .withColumn("score", col("tf") * expr("(1000000 * n_docs) DIV df"))
         .withColumn("rn", row_number().over(w))
         .where(col("rn") <= 3)
@@ -1596,7 +1598,7 @@ object TrainingOps {
         .agg(count(lit(1)).cast("long").as("freq"), sum(col("plen")).cast("long").as("deg"))
         .selectExpr("token",
           s"CAST(${graft.operators.LlmOps.microRoundSql("1000000 * deg", "freq", "DIV")} AS BIGINT) AS micro")
-      val ps = seg.join(Gate.bcast(wd), Seq("token"))
+      val ps = seg.join(wd, Seq("token"))
         .groupBy(col("doc_id"), col("sid"))
         .agg(sum(col("micro")).cast("long").as("score_micro"))
       ph.join(ps, Seq("doc_id", "sid"))
@@ -1757,8 +1759,8 @@ object TrainingOps {
       // r = (2M·Σjk − (Σj)²) / (2M·Σj² − (Σj)²), a pure-BIGINT rational
       // read out through [[LlmOps.microRoundSql]] (the denominator is a
       // data-dependent square sum — the measured midpoint class).
-      // Scale shape: the degree table is |V|-sized (size-gate broadcast
-      // onto the edge fact — two equi-joins, no all-pairs anywhere),
+      // Scale shape: the degree table is |V|-sized (≤ 50 nodes here,
+      // broadcast onto the edge fact — two equi-joins, no all-pairs),
       // the moment fold is one partial+final aggregate to ONE row; the
       // zero-variance regular graph (den = 0, r undefined) is guarded
       // identically in both engines.
@@ -1771,15 +1773,16 @@ object TrainingOps {
         .union(und.select(col("b").as("src"), col("a").as("dst")))
       val deg = ed.groupBy(col("src").as("node")).agg(count(lit(1)).cast("long").as("k"))
       val nNodes = deg.agg(count(lit(1)).cast("long").as("n_nodes"))
-      ed.join(broadcast(deg.withColumnRenamed("node", "sn").withColumnRenamed("k", "js")),
-              col("src") === col("sn"))
-        .join(broadcast(deg.withColumnRenamed("node", "dn").withColumnRenamed("k", "kd")),
-              col("dst") === col("dn"))
+      def degAs(node: String, k: String) =
+        // bound: node = doc_id % 50, so deg has at most 50 rows
+        broadcast(deg.withColumnRenamed("node", node).withColumnRenamed("k", k))
+      ed.join(degAs("sn", "js"), col("src") === col("sn"))
+        .join(degAs("dn", "kd"), col("dst") === col("dn"))
         .agg(count(lit(1)).cast("long").as("m2"),
              sum(col("js") * col("kd")).cast("long").as("sjk"),
              sum(col("js")).cast("long").as("sj"),
              sum(col("js") * col("js")).cast("long").as("sj2"))
-        .crossJoin(broadcast(nNodes))
+        .crossJoin(nNodes)
         .selectExpr("m2 DIV 2 AS m_edges", "n_nodes",
           "CAST(m2 * sjk - sj * sj AS BIGINT) AS num_int",
           "CAST(m2 * sj2 - sj * sj AS BIGINT) AS den_int",
@@ -1811,8 +1814,8 @@ object TrainingOps {
       // re-minimizes — the oracle is DuckDB's WITH RECURSIVE UNION
       // (duplicate-eliminating, so each (node, d) expands once; the d<6
       // bound makes the two fixed-point shapes provably identical). Scale
-      // shape per round: dist is |V|-sized (size-gate-broadcast, shuffle
-      // fallback) onto shuffle-partitioned edges, ONE collapse on dst;
+      // shape per round: dist is |V|-sized (broadcast while it fits,
+      // shuffle beyond) onto shuffle-partitioned edges, ONE collapse on dst;
       // at real diameter you'd iterate frontier-delta-only with a
       // localCheckpoint per round (the dedup_clusters pattern) instead of
       // unrolling — the per-round plan is what this key pins.
@@ -1834,7 +1837,7 @@ object TrainingOps {
         .union(und.select(col("b").as("src"), col("a").as("dst"))).localCheckpoint()
       var dist = s.range(1).select(lit(0L).as("node"), lit(0L).as("d"))
       for (_ <- 1 to 6) {
-        val next = edges.join(Gate.bcast(dist.withColumnRenamed("node", "src")), Seq("src"))
+        val next = edges.join(dist.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node"), (col("d") + 1).as("d"))
         dist = dist.union(next).groupBy(col("node")).agg(min(col("d")).as("d"))
           .coalesce(1).localCheckpoint()
@@ -1885,7 +1888,7 @@ object TrainingOps {
       // the (count DESC, label ASC) tie-break, UNROLLED at 3 rounds —
       // fixed depth makes the result reproducible AND bounds sync-LPA's
       // known oscillation mode on bipartite-ish subgraphs. Per round:
-      // the |V|-sized label table size-gate-broadcasts onto the edge
+      // the |V|-sized label table broadcasts (while it fits) onto the edge
       // fact, one (dst, lbl) collapse, argmax via max(struct) — no
       // window over corpus data; per-round localCheckpoint truncates
       // the 3-deep iterative lineage (the graph_shortest_path lesson).
@@ -1913,7 +1916,7 @@ object TrainingOps {
         .select(col("node"), col("node").as("lbl"))
       for (_ <- 1 to 3) {
         val votes = edges
-          .join(Gate.bcast(lbl.withColumnRenamed("node", "src")), Seq("src"))
+          .join(lbl.withColumnRenamed("node", "src"), Seq("src"))
           .groupBy(col("dst").as("node"), col("lbl")).agg(count(lit(1)).as("c"))
         lbl = votes
           .groupBy(col("node"))
@@ -1982,7 +1985,7 @@ object TrainingOps {
       // that round-3 fixpoint against an unbounded driver peel, so the
       // unroll provably reports true 3-core membership on this graph.
       // Scale shape per round: one |V|-bounded semi-join of the edge
-      // list against the alive set (size-gate broadcast), one degree
+      // list against the broadcast alive set, one degree
       // collapse — never all-pairs; the LOUD-budget unbounded variant
       // at 100 TB is the bfsConverged loop-with-delta shape.
       val e0 = T.documents(s, d).selectExpr("doc_id % 60 AS a",
@@ -2003,34 +2006,30 @@ object TrainingOps {
         .union(und.select(col("b").as("src"), col("a").as("dst")))
         .localCheckpoint()
       val nodes = e.select(col("src").as("node")).distinct()
-      // r19 opt, finished r20 (VERDICT r19 item 1): the before-plan ran
-      // FOUR SortMergeJoins over ≤|V|-row tables. r19 used Gate.bcast,
-      // but the gate reads optimizedPlan.stats.sizeInBytes and a
-      // localCheckpoint'ed side carries no useful estimate — the
-      // broadcasts silently never landed and 2 SMJs survived in the
-      // committed plan. Every per-round table here is bounded by the
-      // CONSTRUCTION, not the corpus: node = doc_id % 60, so nodes,
-      // degree and peel sets are ≤ 60 rows at ANY scale — broadcast
-      // UNCONDITIONALLY. Identical row semantics by construction.
+      // A localCheckpoint'ed side carries no useful size estimate, so
+      // neither the planner nor Gate.bcast broadcasts it (r19: FOUR
+      // SortMergeJoins over ≤|V|-row tables).
+      // bound: node = doc_id % 60, so every per-round side has ≤ 60 rows
+      def small(df: org.apache.spark.sql.DataFrame) = broadcast(df)
       def peel(alive: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-        val al = broadcast(alive)
+        val al = small(alive)
         val deg = e.join(al.withColumnRenamed("node", "sn"), col("src") === col("sn"))
           .join(al.withColumnRenamed("node", "dn"), col("dst") === col("dn"))
           .groupBy(col("src").as("dnode")).agg(count(lit(1)).cast("long").as("deg"))
-        alive.join(broadcast(deg), col("node") === col("dnode"), "left")
+        alive.join(small(deg), col("node") === col("dnode"), "left")
           .where(coalesce(col("deg"), lit(0L)) < 3).select(col("node"))
       }
       val r1 = peel(nodes).localCheckpoint()
-      val a1 = nodes.join(broadcast(r1.withColumnRenamed("node", "rn")),
+      val a1 = nodes.join(small(r1.withColumnRenamed("node", "rn")),
         col("node") === col("rn"), "left_anti").localCheckpoint()
       val r2 = peel(a1).localCheckpoint()
-      val a2 = a1.join(broadcast(r2.withColumnRenamed("node", "rn")),
+      val a2 = a1.join(small(r2.withColumnRenamed("node", "rn")),
         col("node") === col("rn"), "left_anti").localCheckpoint()
       val r3 = peel(a2).localCheckpoint()
       nodes.as("n")
-        .join(broadcast(r1.withColumnRenamed("node", "n1")), col("n.node") === col("n1"), "left")
-        .join(broadcast(r2.withColumnRenamed("node", "n2")), col("n.node") === col("n2"), "left")
-        .join(broadcast(r3.withColumnRenamed("node", "n3")), col("n.node") === col("n3"), "left")
+        .join(small(r1.withColumnRenamed("node", "n1")), col("n.node") === col("n1"), "left")
+        .join(small(r2.withColumnRenamed("node", "n2")), col("n.node") === col("n2"), "left")
+        .join(small(r3.withColumnRenamed("node", "n3")), col("n.node") === col("n3"), "left")
         .select(col("n.node").as("node"),
                 when(col("n1").isNotNull, 1L)
                   .when(col("n2").isNotNull, 2L)
@@ -2076,7 +2075,7 @@ object TrainingOps {
       val f = T.documents(s, d)
         .where(col("text").isNotNull)
         .select(col("doc_id"), fpSpark("text").cast("long").as("fp"))
-      val x = f.crossJoin(broadcast(s.range(0, 8).select(col("id").as("s"))))
+      val x = f.crossJoin(s.range(0, 8).select(col("id").as("s")))
         .withColumn("score",
           expr("(fp * ((s + 1) * 2654435761 % 1000000007) + s) % 1000000007"))
       x.withColumn("rn", row_number().over(
@@ -2346,13 +2345,16 @@ object TrainingOps {
       // → NULL → the same CASE arm as before). One exchange, no sorts;
       // the ln templates still evaluate on the collapsed sides, so the
       // IEEE dataflow per row is unchanged.
+      def nOf(side: String) =
+        // bound: one row per source
+        broadcast(n.select(col("source").as(s"s$side"), col("n").as(s"n$side")))
       val ga = graft.Gate.bcast(sp).join(c.withColumnRenamed("source", "sa"), Seq("sa"))
-        .join(broadcast(n.select(col("source").as("sa"), col("n").as("na"))), Seq("sa"))
+        .join(nOf("a"), Seq("sa"))
         .select(col("sa"), col("sb"), col("h"), col("c").as("ca"),
                 expr(lnProbTpl("(CAST(c AS DOUBLE) / CAST(na AS DOUBLE))")).as("lnp"),
                 lit(null).cast("long").as("cb"), lit(null).cast("double").as("lnq"))
       val gb = graft.Gate.bcast(sp).join(c.withColumnRenamed("source", "sb"), Seq("sb"))
-        .join(broadcast(n.select(col("source").as("sb"), col("n").as("nb"))), Seq("sb"))
+        .join(nOf("b"), Seq("sb"))
         .select(col("sa"), col("sb"), col("h"), lit(null).cast("long").as("ca"),
                 lit(null).cast("double").as("lnp"),
                 col("c").as("cb"), expr(lnProbTpl("(CAST(c AS DOUBLE) / CAST(nb AS DOUBLE))")).as("lnq"))
@@ -2361,8 +2363,8 @@ object TrainingOps {
         .agg(max(col("ca")).as("ca"), max(col("lnp")).as("lnp"),
              max(col("cb")).as("cb"), max(col("lnq")).as("lnq"))
         .na.fill(0L, Seq("ca", "cb"))
-        .join(broadcast(n.select(col("source").as("sa"), col("n").as("na"))), Seq("sa"))
-        .join(broadcast(n.select(col("source").as("sb"), col("n").as("nb"))), Seq("sb"))
+        .join(nOf("a"), Seq("sa"))
+        .join(nOf("b"), Seq("sb"))
         .withColumn("lnm", expr(lnProbTpl(m0)))
         .withColumn("term", expr(
           s"CAST(round(500000000.0 * (" +
@@ -2585,12 +2587,13 @@ object TrainingOps {
       // stage scheduling make the recompute nearly free, while the
       // persist inserts a serializing cache-fill job. The single-plan
       // shape stands.
-      val cnt = ev.crossJoin(broadcast(bounds))
+      val cnt = ev.crossJoin(bounds)
         .select(col("event_type"), expr("(ms DIV 3600000) % 24").as("hr"),
                 (col("ms") * 2 >= col("lo") + col("hi")).cast("int").as("late"))
         .groupBy(col("event_type"), col("hr"), col("late")).agg(count(lit(1)).as("c"))
       val n = cnt.groupBy(col("event_type"), col("late")).agg(sum(col("c")).as("n"))
       def side(df: org.apache.spark.sql.DataFrame, late: Int, cols: (String, String)*) =
+        // bound: one row per event type (× 24 hours for cnt)
         broadcast(df.where(col("late") === late)
           .select(col("event_type") +: cols.map { case (a, b) => col(a).as(b) }: _*))
       val grid = cnt.select(col("event_type")).distinct()
@@ -2670,7 +2673,7 @@ object TrainingOps {
         .select(col("event_type"), unix_millis(col("ts")).as("ms"),
                 round(col("value") * 100).cast("long").as("cents"))
       val bounds = ev.agg(min(col("ms")).as("lo"), max(col("ms")).as("hi"))
-      val c = ev.crossJoin(broadcast(bounds))
+      val c = ev.crossJoin(bounds)
         .select(col("event_type"), col("cents"),
                 (col("ms") * 2 >= col("lo") + col("hi")).cast("int").as("late"))
         .groupBy(col("event_type"), col("cents"))
@@ -2755,7 +2758,7 @@ object TrainingOps {
         .select(col("event_type"), unix_millis(col("ts")).as("ms"),
                 round(col("value") * 100).cast("long").as("cents"))
       val bounds = ev.agg(min(col("ms")).as("lo"), max(col("ms")).as("hi"))
-      val c = ev.crossJoin(broadcast(bounds))
+      val c = ev.crossJoin(bounds)
         .select(col("event_type"), col("cents"),
                 (col("ms") * 2 >= col("lo") + col("hi")).cast("int").as("late"))
         .groupBy(col("event_type"), col("cents"))
@@ -2926,7 +2929,7 @@ object TrainingOps {
              sum(col("f")).cast("long").as("tt"),
              sum(col("f") * col("f")).cast("long").as("q"))
       st.orderBy(col("tt").desc, col("t")).limit(20)
-        .crossJoin(broadcast(nd))
+        .crossJoin(nd)
         .where(col("tt") > 0)
         .selectExpr("t AS term", "df AS n_docs_present", "tt AS total_tf",
           s"CAST(${graft.operators.LlmOps.microRoundSql("1000000 * (n * q - tt * tt)", "n * tt", "DIV")} AS DOUBLE) / 1000000 AS vmr")
@@ -3088,18 +3091,18 @@ object TrainingOps {
       // osm_dwithin_count factor-dimension shape; the naive
       // two-template fact-stream splice measured 5044 B, over the 4000
       // audit budget — CodegenSizeSpec pins this key). Scale shape: two
-      // corpus collapses (raw + target bigram tables, size-gated
-      // broadcasts), the dimension scoring pass, and one map-side
+      // corpus collapses (raw + target bigram tables, broadcast while
+      // they fit), the dimension scoring pass, and one map-side
       // dimension join onto the bigram stream — never doc×vocab.
       val b = hashedBigramStream(s, d)
       val enDocs = T.documents(s, d).where(col("lang") === "en").select(col("doc_id"))
       val ca = b.groupBy(col("h2")).agg(count(lit(1)).as("ca"))
-      val ce = b.join(graft.Gate.bcast(enDocs), Seq("doc_id"))
+      val ce = b.join(enDocs, Seq("doc_id"))
         .groupBy(col("h2")).agg(count(lit(1)).as("ce"))
       val sc = ca.agg(sum(col("ca")).cast("long").as("na"), count(lit(1)).as("v"))
       val se = ce.agg(coalesce(sum(col("ce")), lit(0L)).cast("long").as("ne"))
       val sco = ca.join(ce, Seq("h2"), "left")
-        .crossJoin(broadcast(sc)).crossJoin(broadcast(se))
+        .crossJoin(sc).crossJoin(se)
         .select(col("h2"),
           expr("CAST(coalesce(ce, 0) + 1 AS DOUBLE) / CAST(ne + v AS DOUBLE)").as("pe"),
           expr("CAST(ca + 1 AS DOUBLE) / CAST(na + v AS DOUBLE)").as("pa"))
@@ -3107,7 +3110,7 @@ object TrainingOps {
         .select(col("h2"),
           expr(s"(CASE WHEN pe <= pa THEN 1 ELSE -1 END) * " +
                s"CAST(round(${lnProbTpl("t")} * 1000.0) AS BIGINT)").as("l"))
-      b.join(graft.Gate.bcast(sco), Seq("h2"))
+      b.join(sco, Seq("h2"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).cast("long").as("n_bigrams"),
              sum(col("l")).cast("long").as("dsir_millinats"))
@@ -3160,8 +3163,8 @@ object TrainingOps {
     * matter the depth. The round budget is a LOUD failure: exceeding it
     * throws with the live frontier size rather than silently spinning —
     * raise `maxRounds` consciously for a genuinely deep graph. Scale
-    * shape per round: frontier size-gate-broadcasts onto the
-    * shuffle-partitioned edge fact (shuffle fallback above budget), one
+    * shape per round: frontier broadcasts onto the shuffle-partitioned
+    * edge fact while it fits the threshold (shuffle join beyond), one
     * distinct on dst, one anti-join against the |V|-sized dist table.
     */
   private[graft] def bfsConverged(edges: org.apache.spark.sql.DataFrame, source: Long,
@@ -3178,7 +3181,7 @@ object TrainingOps {
         throw new IllegalStateException(
           s"bfsConverged: frontier still live ($live nodes) after $maxRounds rounds — " +
             "graph deeper than the budget; raise maxRounds explicitly")
-      val reached = e.join(Gate.bcast(frontier.withColumnRenamed("node", "src")), Seq("src"))
+      val reached = e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node")).distinct()
       frontier = reached.join(dist, Seq("node"), "left_anti").localCheckpoint()
       live = frontier.count()

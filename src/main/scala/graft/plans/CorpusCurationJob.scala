@@ -98,7 +98,7 @@ object CorpusCurationJob {
       .distinct()
     val ga = grams.select(col("doc_id").as("doc_a"), col("grams").as("ga"), size(col("grams")).as("na"))
     val gb = grams.select(col("doc_id").as("doc_b"), col("grams").as("gb"), size(col("grams")).as("nb"))
-    cand.join(graft.Gate.bcast(ga), "doc_a").join(graft.Gate.bcast(gb), "doc_b")
+    cand.join(ga, "doc_a").join(gb, "doc_b")
       .withColumn("common", size(array_intersect(col("ga"), col("gb"))))
       .where(col("common").cast("double") / (col("na") + col("nb") - col("common")) >= Tau)
       .select(col("doc_a"), col("doc_b"))

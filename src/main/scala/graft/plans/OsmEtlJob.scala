@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
 object OsmEtlJob {
 
   /** The `ways` lake table: [[OsmKernels.wayPoints]] (ordered member
-    * resolve + regroup, with the size-gated node-store broadcast) plus the
-    * point count, the PostGIS-equivalent geometry artifact (SURVEY §1.2:
-    * "WKB as BinaryType + bbox struct", README.md:80-82) and the bbox.
+    * resolve + regroup) plus the point count, the PostGIS-equivalent
+    * geometry artifact (SURVEY §1.2: "WKB as BinaryType + bbox struct",
+    * README.md:80-82) and the bbox.
     * The same code as the `osm_way_*` geometry keys, not a copy of it.
     */
   def assembleWays(refs: DataFrame, nodes: DataFrame): DataFrame =
@@ -83,17 +83,15 @@ object OsmEtlJob {
 
   /** The way→region dimension chain (the reference's per-{region,subregion}
     * routing, `osm_etl.py:69-85`, as joins instead of container fan-out).
-    * `customer` grows linearly with scale (GBs at planet sf) so its join
-    * goes through the size-gated [[graft.Gate.bcast]] — same hazard class
-    * as the node store in [[assembleWays]]; nation/region are
-    * constant-cardinality dims (25/5 rows at any sf) and stay
-    * hard-broadcast. */
+    * The planner picks every join: nation/region (25/5 rows at any sf)
+    * always fit the broadcast threshold, and `customer`, which grows
+    * linearly with scale, broadcasts only while it fits. */
   def regionOfWay(orders: DataFrame, customer: DataFrame,
                   nation: DataFrame, region: DataFrame): DataFrame =
     orders
-      .join(graft.Gate.bcast(customer), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
+      .join(customer, col("o_custkey") === col("c_custkey"))
+      .join(nation, col("c_nationkey") === col("n_nationkey"))
+      .join(region, col("n_regionkey") === col("r_regionkey"))
       .select(col("o_orderkey").as("way_id"), col("r_name").as("region"),
               col("n_name").as("subregion"))
 
@@ -215,10 +213,10 @@ object OsmEtlJob {
     *      stage is free — the feed IS the delta).
     *   2. Dirty-way closure: a way is dirty iff its ref composition
     *      changed, any node it references changed, or its membership/
-    *      routing row changed. The dirty-id set is delta-sized, so every
-    *      join against it goes through the size-gated broadcast
-    *      ([[graft.Gate.bcast]]): the full corpus is never shuffled —
-    *      carried rows move scan→filter→write with no exchange.
+    *      routing row changed. The dirty-id set is delta-sized, so it is
+    *      the broadcast side of every join against it while it fits the
+    *      threshold: the full corpus is never shuffled — carried rows
+    *      move scan→filter→write with no exchange.
     *   3. Rebuild ONLY dirty ways/areas/layer-rows/relations from the
     *      current snapshot (the expensive assembly joins touch the delta,
     *      not the corpus); carry everything else forward from the prev
@@ -257,22 +255,22 @@ object OsmEtlJob {
     // --- 2. dirty closure (delta-sized sets; broadcast from here on)
     val dirtyWays = changedRefWays
       .union(cRefs.union(pRefs)
-        .join(graft.Gate.bcast(changedNodes), col("node_ref") === col("node_id"))
+        .join(changedNodes, col("node_ref") === col("node_id"))
         .select("way_id"))
       .union(changedRouting)
       .distinct()
     val dirtyRelations = changed(members(pOrders), members(cOrders), "relation_id")
       .union(members(cOrders).union(members(pOrders))
+        // gated: unhinted, the planner builds the (smaller-estimate) union
         .join(graft.Gate.bcast(dirtyWays), col("member_way") === col("way_id"))
         .select("relation_id"))
       .distinct()
 
     // --- 3. rebuild dirty slices from the CURRENT snapshot only
     val rebuiltWays = assembleWays(
-      cRefs.join(graft.Gate.bcast(dirtyWays), Seq("way_id"), "left_semi"), cNodes)
+      cRefs.join(dirtyWays, Seq("way_id"), "left_semi"), cNodes)
     val rebuiltRegions = regionOfWay(
-      cOrders.join(graft.Gate.bcast(dirtyWays),
-                   col("o_orderkey") === col("way_id"), "left_semi"),
+      cOrders.join(dirtyWays, col("o_orderkey") === col("way_id"), "left_semi"),
       T.customer(spark, currSfDir), T.nation(spark, currSfDir), T.region(spark, currSfDir))
     // routed rows only: like the full run, a way that routes to no region
     // has no ways row, no area and no share in any relation
@@ -280,7 +278,7 @@ object OsmEtlJob {
 
     def carry(table: String, idCol: String, dirty: DataFrame): DataFrame =
       spark.read.parquet(s"$prevLakeDir/$table")
-        .join(graft.Gate.bcast(dirty), Seq(idCol), "left_anti")
+        .join(dirty, Seq(idCol), "left_anti")
         .drop("pgosm_date")
     def write(table: String, df: DataFrame) = writeLake(spark, outDir, pgosmDate, table, df)
 
@@ -291,7 +289,7 @@ object OsmEtlJob {
     val mergedWayStats = spark.read.parquet(s"$outDir/ways")
       .select(col("way_id"), col("n_points"), col("bbox"))
     val rebuiltRelations = assembleRelations(
-      members(cOrders).join(graft.Gate.bcast(dirtyRelations), Seq("relation_id"), "left_semi"),
+      members(cOrders).join(dirtyRelations, Seq("relation_id"), "left_semi"),
       mergedWayStats)
     val relations = write("relations",
       carry("relations", "relation_id", dirtyRelations).unionByName(rebuiltRelations))
@@ -300,7 +298,7 @@ object OsmEtlJob {
       carry("areas", "way_id", dirtyWays).unionByName(assembleAreas(rebuiltWayRows)))
 
     val rebuiltLayers = layerRows(
-      cNodes.join(graft.Gate.bcast(changedNodes), Seq("node_id"), "left_semi"), layerSpecPath)
+      cNodes.join(changedNodes, Seq("node_id"), "left_semi"), layerSpecPath)
     val layers = write("layers",
       carry("layers", "node_id", changedNodes).unionByName(rebuiltLayers))
 

@@ -28,7 +28,7 @@ object PipelineChain {
     * a separate driver hook). */
   def record(spark: SparkSession, sfDir: String): String = {
     val lake = graft.Scratch.fresh("chain_lake")
-    val url = graft.operators.JdbcIO.freshEmbeddedDerby("graft_chain_pg")
+    val url = graft.operators.JdbcIO.freshEmbeddedDerby("chain_pg")
 
     // Contention context (VERDICT r11 items 3+8): the r11 chain number
     // slid 1.7× with ZERO code change under plans/ — box weather the

@@ -277,7 +277,7 @@ object PostgisLoadJob {
   def main(args: Array[String]): Unit = {
     val lakeDir = args(0)
     val url =
-      if (args(1) == "derby:embedded") JdbcIO.freshEmbeddedDerby("graft_pg_load")
+      if (args(1) == "derby:embedded") JdbcIO.freshEmbeddedDerby("pg_load")
       else args(1)
     val region = if (args.length > 2) Some(args(2)) else None
     val prefix = if (args.length > 3) args(3) else "osm_"

@@ -62,11 +62,11 @@ object StreamingOps {
 
   /** Enrich the stream with a static dimension (stream-static join —
     * no state, dim broadcast each micro-batch). The dim is caller-
-    * supplied and could grow → size-gated broadcast: past the budget the
-    * micro-batch falls back to a shuffled join, same result.
+    * supplied and could grow: past the broadcast threshold the planner
+    * falls back to a shuffled join, same result.
     * `stream_static_join`. */
   def enrich(events: DataFrame, dim: DataFrame, key: String, dimKey: String): DataFrame =
-    events.join(graft.Gate.bcast(dim), col(key) === col(dimKey))
+    events.join(dim, col(key) === col(dimKey))
 
   // ---------------------------------------------------------------------
   // Behavioral (not batch-expressible): run real micro-batches in-process

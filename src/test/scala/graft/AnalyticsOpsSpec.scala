@@ -48,7 +48,7 @@ class AnalyticsOpsSpec extends GraftSuite {
 
   test("agg_corr: result is invariant under repartitioning (decimal moments, no fp order)") {
     val a = q("agg_corr").collect().head.getDouble(1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_corr_repart").toString
+    val dir = Scratch.fresh("corr_repart")
     // same rows, radically different partitioning → identical moments
     T.lineitem(spark, sf).repartition(17).write.mode("overwrite")
       .parquet(s"$dir/lineitem.parquet")
@@ -128,7 +128,7 @@ class AnalyticsOpsSpec extends GraftSuite {
   test("event_anomaly: zero-variance types emit NULL z, not NaN/Inf") {
     // one type with a single observed day (nd=1) and one with constant
     // daily counts (nd·s2 = s1²) — both discriminants are exactly 0
-    val dir = java.nio.file.Files.createTempDirectory("graft_anom_zvar").toString
+    val dir = Scratch.fresh("anom_zvar")
     val day = 86400000L
     val rows = Seq(
       (1L, 0L * day, 100L, "single", 1.0, "{}"),

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
 class AsofTieSpec extends GraftSuite {
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_asof_tie").toString
+    val d = Scratch.fresh("asof_tie")
     val t0 = java.sql.Timestamp.valueOf("2024-03-01 12:00:00")
     def at(minutes: Int) = new java.sql.Timestamp(t0.getTime + minutes * 60000L)
     val rows = Seq(

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.{col, expr}
 class EmptyInputSpec extends GraftSuite {
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
+    val dir = Scratch.fresh("empty")
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "documents", "embeddings")) {
       T(spark, sf, t).limit(0).coalesce(1)
@@ -41,7 +41,7 @@ class EmptyInputSpec extends GraftSuite {
   }
 
   test("pipeline mains survive empty inputs") {
-    val out = java.nio.file.Files.createTempDirectory("graft_empty_job").toString
+    val out = Scratch.fresh("empty_job")
     val raw = plans.CorpusCurationJob.normalize(T.documents(spark, emptyDir))
     val kept = raw.where(plans.CorpusCurationJob.qualityGate)
     val exact = plans.CorpusCurationJob.dedupExact(kept)

@@ -68,7 +68,7 @@ class EventOpsSpec extends GraftSuite {
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     val ev = T.events(spark, sf)
     val halves = Seq(col("user_id") % 2 === 0, col("user_id") % 2 === 1).map { pred =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_funnel_half").toString
+      val dir = Scratch.fresh("funnel_half")
       ev.where(pred).write.mode("overwrite").parquet(s"$dir/events.parquet")
       SparkEntry.queries("event_funnel")(spark, dir).collect()
         .map(r => r.getLong(0) -> r.getLong(2)).toMap

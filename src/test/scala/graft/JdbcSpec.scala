@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class JdbcSpec extends GraftSuite {
 
   test("jdbc round-trip preserves rows and types (Derby embedded)") {
-    val url = JdbcIO.freshEmbeddedDerby("graft_spec_derby")
+    val url = JdbcIO.freshEmbeddedDerby("spec_derby")
     val src = T.nation(spark, sf)
       .select(col("n_nationkey"), col("n_regionkey"), col("n_name"))
     JdbcIO.writeTable(src, url, "nation_rt", columnTypes = Some("n_name VARCHAR(64)"))
@@ -115,7 +115,7 @@ class JdbcSpec extends GraftSuite {
     // scalars + a struct (flattens to parent_child) + an array (assembly
     // intermediate, dropped) + WKB binary (passes through).
     import org.apache.spark.sql.functions.{array, lit, struct}
-    val lake = java.nio.file.Files.createTempDirectory("graft_pg_lake").toString
+    val lake = Scratch.fresh("pg_lake")
     T.nation(spark, sf)
       .select(col("n_nationkey").as("way_id"), col("n_name").as("name"),
         struct(lit(1L).as("minx"), lit(2L).as("miny")).as("bbox"),
@@ -125,7 +125,7 @@ class JdbcSpec extends GraftSuite {
     T.region(spark, sf)
       .select(col("r_regionkey").as("way_id"), col("r_name").as("layer"))
       .write.parquet(s"$lake/layers")
-    val url = JdbcIO.freshEmbeddedDerby("graft_spec_pg_load")
+    val url = JdbcIO.freshEmbeddedDerby("spec_pg_load")
     val loaded = graft.plans.PostgisLoadJob.load(spark, lake, url).toMap
     // relations/areas absent from this lake → skipped, not failed
     assert(loaded.keySet === Set("ways", "layers"))
@@ -144,7 +144,7 @@ class JdbcSpec extends GraftSuite {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     def lakeWith(relations: String => Unit): String = {
-      val lake = java.nio.file.Files.createTempDirectory("graft_pg_fail").toString
+      val lake = Scratch.fresh("pg_fail")
       T.nation(spark, sf).select(col("n_nationkey").as("way_id"), col("n_name").as("name"))
         .write.parquet(s"$lake/ways")
       T.nation(spark, sf).select(col("n_nationkey").as("way_id"), lit(1.5).as("area"))
@@ -166,7 +166,7 @@ class JdbcSpec extends GraftSuite {
         .write.parquet(dir)
     }
     for ((lake, cause) <- Seq(unreadable -> "part-00000.parquet", rejected -> "truncation")) {
-      val url = JdbcIO.freshEmbeddedDerby("graft_spec_pg_fail")
+      val url = JdbcIO.freshEmbeddedDerby("spec_pg_fail")
       val load = Future(graft.plans.PostgisLoadJob.load(spark, lake, url))(
         scala.concurrent.ExecutionContext.global)
       val err = intercept[Exception](Await.result(load, 3.minutes))
@@ -189,10 +189,10 @@ class JdbcSpec extends GraftSuite {
     // properties — the URL must never carry them.
     import org.apache.spark.sql.functions.lit
     val creds = Some(("app_loader", "s3cr3t"))
-    val url = JdbcIO.freshEmbeddedDerby("graft_spec_unified")
+    val url = JdbcIO.freshEmbeddedDerby("spec_unified")
     assert(!url.contains("s3cr3t") && !url.contains("app_loader"))
     def lakeFor(tag: String, rows: Int): String = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_lake_$tag").toString
+      val dir = Scratch.fresh(s"lake_$tag")
       T.nation(spark, sf).limit(rows)
         .select(col("n_nationkey").as("way_id"), col("n_name").as("name"),
                 lit(tag).as("batch"))
@@ -222,7 +222,7 @@ class JdbcSpec extends GraftSuite {
   }
 
   test("deleteSlice validates identifiers and parameterizes the value") {
-    val url = JdbcIO.freshEmbeddedDerby("graft_spec_delsafe")
+    val url = JdbcIO.freshEmbeddedDerby("spec_delsafe")
     // missing table is a first-load no-op, not an error
     assert(JdbcIO.deleteSlice(url, "no_such_table", "load_region", "x") === 0)
     // injection-shaped identifiers are rejected before any SQL is built
@@ -240,7 +240,7 @@ class JdbcSpec extends GraftSuite {
   }
 
   test("writeTable rejects truncate without overwrite; truncate-overwrite keeps indexes") {
-    val url = JdbcIO.freshEmbeddedDerby("graft_spec_trunc")
+    val url = JdbcIO.freshEmbeddedDerby("spec_trunc")
     val src = T.nation(spark, sf).select(col("n_nationkey"), col("n_name"))
     intercept[IllegalArgumentException] {
       JdbcIO.writeTable(src, url, "nation_t", truncate = true) // append+truncate no-ops in Spark
@@ -266,7 +266,7 @@ class JdbcSpec extends GraftSuite {
   }
 
   test("partitioned jdbc read stripes across numPartitions connections") {
-    val url = JdbcIO.freshEmbeddedDerby("graft_spec_derby_p")
+    val url = JdbcIO.freshEmbeddedDerby("spec_derby_p")
     val src = T.customer(spark, sf).select(col("c_custkey"), col("c_acctbal"))
     JdbcIO.writeTable(src, url, "customer_rt")
     val back = JdbcIO.readTable(spark, url, "customer_rt",
@@ -276,7 +276,7 @@ class JdbcSpec extends GraftSuite {
     // stripes are a partition of the key space: nothing lost or duplicated
     assert(back.count() === src.count())
     // first/last stripes are unbounded, so out-of-range keys still arrive
-    val urlEdge = JdbcIO.freshEmbeddedDerby("graft_spec_derby_e")
+    val urlEdge = JdbcIO.freshEmbeddedDerby("spec_derby_e")
     JdbcIO.writeTable(src, urlEdge, "customer_rt")
     val edge = JdbcIO.readTable(spark, urlEdge, "customer_rt",
       partitionColumn = Some(("c_custkey", 40L, 60L, 4)))

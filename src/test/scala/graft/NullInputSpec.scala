@@ -19,7 +19,7 @@ class NullInputSpec extends GraftSuite {
   // lane and the oracle-parity lane (DegradedCorpus main -> Verify ->
   // tools/check.py) degrade the corpus IDENTICALLY
   private lazy val nulledDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nulls").toString
+    val dir = Scratch.fresh("nulls")
     DegradedCorpus.write(spark, sf, dir)
     dir
   }

@@ -41,7 +41,7 @@ class OsmChangeSpec extends GraftSuite {
     node("delete", 3L, 9L, 0L, 0L))
 
   test("render -> parse round trip is identity, plain and gzipped") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_osc_spec").toString
+    val tmp = Scratch.fresh("osc_spec")
     OsmChange.write(s"$tmp/a.osc", fixture)
     OsmChange.write(s"$tmp/b.osc.gz", fixture, gzip = true)
     val plain = OsmChange.parse(
@@ -123,7 +123,7 @@ class OsmChangeSpec extends GraftSuite {
     assert(ops("modify") == (1L to 50L).count(i => i % 3 == 0 && i != 7L), s"edits: $ops")
 
     // the diff survives the WIRE FORMAT: render -> file -> parse -> apply
-    val tmp = java.nio.file.Files.createTempDirectory("graft_osc_diff").toString
+    val tmp = Scratch.fresh("osc_diff")
     OsmChange.write(s"$tmp/diff.osc.gz",
       delta.as[OscRow].collect().sortBy(e => (e.elem_type, e.id)).toSeq, gzip = true)
     val applied = OsmChange.applySnapshot(prev, OsmChange.read(spark, tmp))

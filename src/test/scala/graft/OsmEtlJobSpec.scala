@@ -30,7 +30,7 @@ class OsmEtlJobSpec extends GraftSuite {
   }
 
   test("OsmEtlJob writes a partition-pruned, reconcilable lake") {
-    val out = java.nio.file.Files.createTempDirectory("graft_etl").toString
+    val out = Scratch.fresh("etl")
     // run the stages in-process (main would spawn its own session)
     val refs = T.lineitem(spark, sf).select(
       col("l_orderkey").as("way_id"), col("l_linenumber").as("pos"),
@@ -94,8 +94,7 @@ class OsmEtlJobSpec extends GraftSuite {
     val under = plans.OsmEtlJob.assembleWays(refs, nodes)
     assert(under.queryExecution.executedPlan.toString().contains("BroadcastHashJoin"),
            "under the budget the node resolve must broadcast")
-    withConf("spark.sql.graft.broadcastGateBytes" -> "1",
-             "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val over = plans.OsmEtlJob.assembleWays(refs, nodes)
       assert(!over.queryExecution.executedPlan.toString().contains("BroadcastHashJoin"),
              "above the budget the node resolve must shuffle, not broadcast")
@@ -113,8 +112,7 @@ class OsmEtlJobSpec extends GraftSuite {
     assert(underPlan.contains("BroadcastHashJoin") &&
            !underPlan.contains("SortMergeJoin") && !underPlan.contains("ShuffledHashJoin"),
            "under the budget all three dim joins must broadcast")
-    withConf("spark.sql.graft.broadcastGateBytes" -> "1",
-             "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val over = plans.OsmEtlJob.regionOfWay(o, c, n, r)
       val overPlan = over.queryExecution.executedPlan.toString()
       assert(overPlan.contains("SortMergeJoin") || overPlan.contains("ShuffledHashJoin"),
@@ -128,11 +126,11 @@ class OsmEtlJobSpec extends GraftSuite {
     // the lake, the terminal load ships it to the serving database. Derby
     // stands in for PostGIS; the load path (relational flattening, DDL
     // pins, overwrite semantics) is identical.
-    val out = java.nio.file.Files.createTempDirectory("graft_e2e").toString
+    val out = Scratch.fresh("e2e")
     val counts = plans.OsmEtlJob.run(spark, sf, out, "2024-07-25").toMap
     assert(counts.keySet === Set("ways", "relations", "areas", "layers"))
     assert(counts.values.forall(_ > 0), s"empty lake table: $counts")
-    val url = operators.JdbcIO.freshEmbeddedDerby("graft_e2e_load")
+    val url = operators.JdbcIO.freshEmbeddedDerby("e2e_load")
     val loaded = plans.PostgisLoadJob.load(spark, out, url).toMap
     assert(loaded === counts, "load must report exactly the lake's row counts")
     // idempotency: a retried load (the DAG's retries=2) must not duplicate
@@ -163,7 +161,7 @@ class OsmEtlJobSpec extends GraftSuite {
     // current snapshot, full-rebuild prev, incrementally apply the delta
     // to prev's lake, and require the incremental lake to be row-for-row
     // identical to the full rebuild — including WKB bytes and doubles.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_inc").toString
+    val tmp = Scratch.fresh("inc")
     val prevDir = s"$tmp/prev"
     val li = T.lineitem(spark, sf)
     val orders = T.orders(spark, sf)
@@ -209,7 +207,7 @@ class OsmEtlJobSpec extends GraftSuite {
     // to the full rebuild (WKB bytes and doubles included).
     import spark.implicits._
     import graft.sources.OsmChange
-    val tmp = java.nio.file.Files.createTempDirectory("graft_osc_etl").toString
+    val tmp = Scratch.fresh("osc_etl")
     val part = T.part(spark, sf)
     val ghost = 900000001L // prev-only node → the feed deletes it
     val firstKey = part.agg(min("p_partkey")).head.getLong(0)
@@ -262,7 +260,7 @@ class OsmEtlJobSpec extends GraftSuite {
     // the written ways table. The reference composes the assemblies
     // directly over the in-memory ways, one write per table, and goes
     // through the same parquet round trip.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_etl_eq").toString
+    val tmp = Scratch.fresh("etl_eq")
     val date = "2024-08-01"
     val (counts, stages) = plans.OsmEtlJob.runTimed(spark, sf, s"$tmp/lake", date)
     assert(stages.map(_._1).toSet === Set("ways", "relations", "areas", "layers"))
@@ -289,7 +287,7 @@ class OsmEtlJobSpec extends GraftSuite {
     // One order's customer is missing from the current snapshot's
     // customer table, so its way routes to no region. Both modes must
     // then leave it out of ways, areas and every relation's stats alike.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_inc_unrouted").toString
+    val tmp = Scratch.fresh("inc_unrouted")
     val curr = s"$tmp/curr"
     val lost = T.lineitem(spark, sf).agg(min("l_orderkey")).head.getLong(0)
     T.orders(spark, sf)
@@ -315,7 +313,7 @@ class OsmEtlJobSpec extends GraftSuite {
     // A style whose rule casts the non-numeric brand tag to int fails at
     // run time (ANSI cast) inside the `layers` write, which runs beside
     // the ways -> relations/areas branch.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_etl_fail").toString
+    val tmp = Scratch.fresh("etl_fail")
     val style = java.nio.file.Paths.get(s"$tmp/bad_style.json")
     java.nio.file.Files.write(style,
       """{"layers":[{"name":"bad","where":{"tag":"brand","type":"int","op":">=","value":"25"}}]}"""

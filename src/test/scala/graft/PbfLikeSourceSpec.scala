@@ -24,7 +24,7 @@ class PbfLikeSourceSpec extends GraftSuite {
   /** Same layout as the registered query's staged file: nodes, then
     * ways, then relations, ids ascending within each kind, 1000/blob. */
   private lazy val file: String = {
-    val f = java.nio.file.Files.createTempDirectory("graft_pbf_spec")
+    val f = java.nio.file.Paths.get(Scratch.fresh("pbf_spec"))
       .resolve("elements.osm.pbf").toString
     def tags(i: Long) = Array("name" -> s"n${i % 97}")
     val nodes = (0L until 10000L).filter(_ % 3 == 0).iterator.map(i =>

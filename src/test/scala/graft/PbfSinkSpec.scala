@@ -51,7 +51,7 @@ class PbfSinkSpec extends GraftSuite {
   }
 
   test("a failing task leaves no visible file; temps are aborted away") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pbf_abort").toString
+    val dir = Scratch.fresh("pbf_abort")
     val rows = T.part(spark, sf).limit(50).select(
       col("p_partkey").as("element_id"),
       // one poison row deep in the partition: the writer has already
@@ -84,7 +84,7 @@ class PbfSinkSpec extends GraftSuite {
   }
 
   test("a node with NULL lon/lat fails loudly instead of landing at (0,0)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pbf_nullcoord").toString
+    val dir = Scratch.fresh("pbf_nullcoord")
     val ex = intercept[Exception] {
       nodeRows(50, poisonNullCoord = true).write
         .format("graft.sources.OsmPbfSource")
@@ -100,7 +100,7 @@ class PbfSinkSpec extends GraftSuite {
   }
 
   test("a failed overwrite preserves the PREVIOUS generation intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pbf_gen").toString
+    val dir = Scratch.fresh("pbf_gen")
     // generation 1: a clean committed write
     nodeRows(40).write.format("graft.sources.OsmPbfSource")
       .option("path", s"$dir/out").mode("overwrite").save()

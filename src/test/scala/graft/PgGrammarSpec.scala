@@ -76,7 +76,7 @@ class PgGrammarSpec extends GraftSuite {
       new ProcessBuilder("python3", "--version").start().waitFor() == 0
     } catch { case _: java.io.IOException => false }
     assume(have, "python3 not on PATH — grammar lane skipped")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pgsql")
+    val dir = java.nio.file.Paths.get(Scratch.fresh("pgsql"))
     val files = artifacts.map { case (name, sql) =>
       val p = dir.resolve(name)
       java.nio.file.Files.write(p, sql.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -125,7 +125,7 @@ class PgGrammarSpec extends GraftSuite {
       "INSERT INTO t (a, b) VALUES (?, ?) ON DUPLICATE KEY UPDATE b = 1", // MySQL form
       "INSERT INTO t (a, b) VALUES (?, ?) ON CONFLICT (z) DO UPDATE SET b = EXCLUDED.b", // bad target
       "DELETE FROM t WHERE \"c\" = 'eu'")              // inlined value, not a bind
-    val dir = java.nio.file.Files.createTempDirectory("graft_pgbad")
+    val dir = java.nio.file.Paths.get(Scratch.fresh("pgbad"))
     bad.zipWithIndex.foreach { case (sql, i) =>
       val p = dir.resolve(s"bad_$i.sql")
       java.nio.file.Files.write(p, sql.getBytes(java.nio.charset.StandardCharsets.UTF_8))

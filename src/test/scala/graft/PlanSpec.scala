@@ -112,7 +112,7 @@ class PlanSpec extends GraftSuite {
     // through a JOIN — the selected partitions are only known at runtime
     // from the filtered dim, so static pruning can't help; DPP must inject
     // the dim's keys into the fact scan's PartitionFilters.
-    val out = s"${sys.props("java.io.tmpdir")}/graft_dpp_lake"
+    val out = Scratch.fresh("dpp_lake")
     T.orders(spark, sf)
       .join(broadcast(T.customer(spark, sf)), col("o_custkey") === col("c_custkey"))
       .join(broadcast(T.nation(spark, sf)), col("c_nationkey") === col("n_nationkey"))
@@ -133,11 +133,9 @@ class PlanSpec extends GraftSuite {
     val withBcast = run(spark, sf)
     assert(withBcast.queryExecution.executedPlan.toString().contains("BroadcastHashJoin"),
            "under the budget the dictionary join must broadcast")
-    // the planner may still choose to broadcast on its own estimates; the
-    // gate's job is only to stop FORCING it — so also floor Spark's
-    // auto-broadcast to prove the shuffle path exists and agrees.
-    withConf("spark.sql.graft.broadcastGateBytes" -> "1",
-             "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    // one threshold decides every broadcast: floor Spark's auto-broadcast
+    // to prove the shuffle path exists and agrees.
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val sheared = run(spark, sf)
       assert(!sheared.queryExecution.executedPlan.toString().contains("BroadcastHashJoin"),
              "above the budget the dictionary join must not broadcast")
@@ -145,6 +143,45 @@ class PlanSpec extends GraftSuite {
       val b = sheared.collect().map(_.toSeq)
       assert(a.toSeq === b.toSeq, "gate must never change results")
     }
+  }
+
+  test("Gate.bcast hints a side only while Spark's broadcast threshold covers its estimate") {
+    val side = T.customer(spark, sf)
+    val est = side.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    def hinted(threshold: String): Boolean =
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+        Gate.bcast(side).queryExecution.analyzed.collectFirst {
+          case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
+        }.nonEmpty
+      }
+    assert(hinted((est + 1).toString), s"a threshold above the $est-byte estimate must broadcast")
+    assert(hinted("1g"), "the threshold parses as Spark parses it")
+    assert(!hinted((est - 1).toString), s"a threshold below the $est-byte estimate must not broadcast")
+    assert(!hinted("-1"), "-1 must never broadcast")
+  }
+
+  test("source guard: one broadcast policy") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // split literal, so this file does not match its own needle
+    val knob = "broadcastGate" + "Bytes"
+    val knobHits = Seq("src", "tools", "dags").flatMap { d =>
+      Files.walk(Paths.get(d)).iterator().asScala.filter(Files.isRegularFile(_))
+        .filter(p => new String(Files.readAllBytes(p), "ISO-8859-1").contains(knob)).map(_.toString)
+    }
+    assert(knobHits.isEmpty, knobHits)
+    // every raw broadcast( names its bound on its own line or the line above
+    val raw = "(?<![.\\w])broadcast\\(".r
+    val unbounded = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        val lines = Files.readAllLines(p).asScala.toIndexedSeq
+        lines.indices.collect {
+          case i if raw.findFirstIn(lines(i)).nonEmpty && !lines(i).trim.startsWith("//")
+              && !lines(i).trim.startsWith("*")
+              && !(lines(i) + (if (i > 0) lines(i - 1) else "")).contains("bound:") => s"$p:${i + 1}"
+        }
+      }
+    assert(unbounded.isEmpty, unbounded)
   }
 
   test("event_sessionize: one data exchange feeds both windows and the session roll-up") {

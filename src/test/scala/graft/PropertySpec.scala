@@ -365,7 +365,7 @@ class PropertySpec extends GraftSuite {
       (5L, "2024-01-01 09:00:00", 8L, "purchase", 0.0)  // user with no quote
     ).toDF("event_id", "ts_s", "user_id", "event_type", "value")
       .withColumn("ts", $"ts_s".cast("timestamp")).drop("ts_s")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_asof").toString
+    val tmp = Scratch.fresh("asof")
     events.write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val out = SparkEntry.queries("join_asof")(spark, tmp)
       .collect().map(r => (r.getLong(0), r.getDouble(3))).toMap

@@ -16,7 +16,7 @@ package graft
 class RoadGraphSpec extends GraftSuite {
 
   test("osm_road_graph: interior junctions split runs; chains cover each way; lengths add up") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_roadgraph").toString
+    val dir = Scratch.fresh("roadgraph")
     import spark.implicits._
     Seq((1L, 0, 0.0), (2L, 1, 0.0), (3L, 2, 0.0), (4L, 3, 0.0), (5L, 4, 0.0),
         (10L, 2, -1.0), (11L, 2, 1.0),

@@ -44,7 +44,7 @@ class Round11OpsSpec extends GraftSuite {
   test("dedup_containment: detects a planted contained doc that Jaccard misses") {
     // doc 1 = a 12-token text; doc 2 = doc 1 embedded in 3x boilerplate.
     // Containment(1 in 2) = 1.0 while Jaccard is far below 0.8.
-    val dir = java.nio.file.Files.createTempDirectory("graft_contain").toString
+    val dir = Scratch.fresh("contain")
     val small = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     val filler = (1 to 30).map(i => s"pad$i word$i more$i").mkString(" ")
     import spark.implicits._

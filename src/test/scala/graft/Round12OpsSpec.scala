@@ -15,7 +15,7 @@ class Round12OpsSpec extends GraftSuite {
   private val K = 619667.12
 
   test("osm_relation_area_m2: planted outer+hole nets shell minus hole; flipped roles net negative") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_relarea").toString
+    val dir = Scratch.fresh("relarea")
     import spark.implicits._
     // nodes: outer square side 1000 centi-units (ids 1-4), inner square
     // side 500 (ids 5-8). lon_c = p_size*100, lat_c = round(p_retailprice*100).
@@ -48,7 +48,7 @@ class Round12OpsSpec extends GraftSuite {
 
   test("osm_way_area_m2: planted square has the exact hand-computed area") {
     // reuse the sf fixture path only for schema; plant the same square
-    val dir = java.nio.file.Files.createTempDirectory("graft_wayarea").toString
+    val dir = Scratch.fresh("wayarea")
     import spark.implicits._
     Seq((1L, 0, 0.0), (2L, 10, 0.0), (3L, 10, 10.0), (4L, 0, 10.0))
       .toDF("p_partkey", "p_size", "p_retailprice")
@@ -63,7 +63,7 @@ class Round12OpsSpec extends GraftSuite {
   }
 
   test("text_bigram_lm: predictable text outscores token salad, exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bigram").toString
+    val dir = Scratch.fresh("bigram")
     import spark.implicits._
     // doc 1: 'a' always followed by 'b' (and back) — high P(next|prev);
     // doc 2: 'a' fans out to c/d/e/f — each continuation is 1-of-8.
@@ -81,7 +81,7 @@ class Round12OpsSpec extends GraftSuite {
   }
 
   test("sim_knn_graph: planted blocks rank by cosine with id tie-break; singleton blocks emit nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_knn").toString
+    val dir = Scratch.fresh("knn")
     import spark.implicits._
     // label 1: two axis-aligned pairs — vec 2 is vec 1's perfect match,
     // vecs 3/4 are orthogonal to it (cosine 0, a TIE broken by vec_b).
@@ -104,7 +104,7 @@ class Round12OpsSpec extends GraftSuite {
   }
 
   test("text_span_dedup: cross-doc spans flag, within-doc repeats don't, short docs drop") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_span").toString
+    val dir = Scratch.fresh("span")
     import spark.implicits._
     val w10 = (1 to 10).map(i => s"w$i").mkString(" ")
     val q10 = (1 to 10).map(i => s"q$i").mkString(" ")
@@ -126,7 +126,7 @@ class Round12OpsSpec extends GraftSuite {
   }
 
   test("event_rfm: monotone users land one per quintile; rfm code composes the scores") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rfm").toString
+    val dir = Scratch.fresh("rfm")
     import spark.implicits._
     // user u: u events, last event at day u, value 2.5 each — recency,
     // frequency, and monetary all strictly increase with u, so ntile(5)
@@ -146,7 +146,7 @@ class Round12OpsSpec extends GraftSuite {
   }
 
   test("multimodal_resize_plan: hand-computed letterbox geometry, including the w=0 guard") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_resize").toString
+    val dir = Scratch.fresh("resize")
     import spark.implicits._
     // n_chars=100 -> 100x220 (portrait): scale bound by height.
     // n_chars=640 -> src_w = 640%640 = 0: greatest(w,1) keeps the DIV legal.
@@ -164,7 +164,7 @@ class Round12OpsSpec extends GraftSuite {
   }
 
   test("graph_pagerank: hand-computed 3-iteration ranks on a planted 3-host chain") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr").toString
+    val dir = Scratch.fresh("pr")
     import spark.implicits._
     // one doc -> chain s.example.com -> a.example.com -> src0.example.com
     // (the last hop from lang host to the n_chars%20 content host).
@@ -182,7 +182,7 @@ class Round12OpsSpec extends GraftSuite {
   }
 
   test("dedup_semantic: lower-id tau-neighbor drops, blocks isolate, survivors carry null dup_cos") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_semdedup").toString
+    val dir = Scratch.fresh("semdedup")
     import spark.implicits._
     // label 1: vec 2 duplicates vec 1 (cos 1.0 >= tau), vec 3 orthogonal;
     // label 2: vec 4 is IDENTICAL to vec 1 but in another block -> kept.
@@ -200,7 +200,7 @@ class Round12OpsSpec extends GraftSuite {
   }
 
   test("graph_triangle_count: planted triangle counts once per corner; dangling edge contributes nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tri").toString
+    val dir = Scratch.fresh("tri")
     import spark.implicits._
     // edge (a,b) <- doc_id = a + 50*b: triangle 1-2-3 plus dangling 3-4
     Seq(101L, 152L, 151L, 203L).map((_, "t", "en", "s", 1L))

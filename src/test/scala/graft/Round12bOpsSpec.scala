@@ -36,7 +36,7 @@ class Round12bOpsSpec extends GraftSuite {
   }
 
   test("graph_shortest_path: planted chain distances; unreachable and beyond-horizon nodes absent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bfs").toString
+    val dir = Scratch.fresh("bfs")
     import spark.implicits._
     // edge (a, b) is planted by doc_id = 50*b + a (the %50 / DIV 50
     // derivation). Chain 0-1-2-…-8 puts nodes 7, 8 past the depth-6
@@ -52,7 +52,7 @@ class Round12bOpsSpec extends GraftSuite {
   }
 
   test("graph_shortest_path: min wins when a shortcut exists") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bfs2").toString
+    val dir = Scratch.fresh("bfs2")
     import spark.implicits._
     // chain 0-1-2-3 plus direct edge 0-3: dist(3) must be 1, not 3
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 3L))
@@ -68,7 +68,7 @@ class Round12bOpsSpec extends GraftSuite {
     // the oracled key asserts dynamic KEEPS O/P; this pins the contrast —
     // the same reload under default static overwrite loses every slice
     // not present in the incoming batch (the bug the key exists to avoid)
-    val dir = java.nio.file.Files.createTempDirectory("graft_staticover").toString
+    val dir = Scratch.fresh("staticover")
     val o = T.orders(spark, sf)
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(dir)
     o.where(col("o_orderstatus") === "F")

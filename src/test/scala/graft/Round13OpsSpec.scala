@@ -106,9 +106,9 @@ class Round13OpsSpec extends GraftSuite {
         |     {"tag":"brand","op":"like","value":"Brand#4%"},
         |     {"tag":"size","type":"int","op":">=","value":"40"}]}}],
         | "promote": []}""".stripMargin
-    val specFile = java.nio.file.Files.createTempFile("graft_style", ".json")
+    val out = Scratch.fresh("etl_style")
+    val specFile = java.nio.file.Paths.get(out, "style.json")
     java.nio.file.Files.write(specFile, style.getBytes("UTF-8"))
-    val out = java.nio.file.Files.createTempDirectory("graft_etl_style").toString
     val counts = plans.OsmEtlJob.run(spark, sf, out, "2024-08-01",
                                      Some(specFile.toString)).toMap
     val lake = spark.read.parquet(s"$out/layers")

@@ -194,7 +194,7 @@ class Round15OpsSpec extends GraftSuite {
   }
 
   test("osm_geometry_qa: planted zero-length, illegal-repeat, and degenerate-ring ways flag") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qa_fixture").toString
+    val dir = Scratch.fresh("qa_fixture")
     // nodes: 1..3 distinct coords; 4 and 5 COINCIDENT
     Seq((1L, 10, 900.0), (2L, 20, 900.0), (3L, 20, 910.0),
         (4L, 30, 950.0), (5L, 30, 950.0))
@@ -385,7 +385,7 @@ class Round15OpsSpec extends GraftSuite {
       "JSD is bounded by ln 2 (modulo per-token nanonats rounding slop)")
     // planted: two sources with IDENTICAL token distributions diverge by ~0;
     // a disjoint-vocabulary pair sits at the ln 2 ceiling
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsd_fixture").toString
+    val dir = Scratch.fresh("jsd_fixture")
     Seq((1L, "x y z x", "en", "sA", 7L), (2L, "x y z x", "en", "sB", 7L),
         (3L, "q r s q", "en", "sC", 7L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -490,7 +490,7 @@ class Round15OpsSpec extends GraftSuite {
     // planted: every user behaves IDENTICALLY pre and post (y = x), but
     // arm 1 got the heavier users — raw lift is pure imbalance noise,
     // CUPED (theta = 1) must cancel it
-    val dir = java.nio.file.Files.createTempDirectory("graft_cuped_fixture").toString
+    val dir = Scratch.fresh("cuped_fixture")
     val base = 1700000000000L
     val half = 50L * 86400000L
     val rows = (1L to 40L).flatMap { u =>
@@ -515,7 +515,7 @@ class Round15OpsSpec extends GraftSuite {
     // weekdays 10 events/day, Saturdays 30 — regular rhythm; ONE
     // Saturday at 100 is the real incident. A global median+MAD would
     // flag every Saturday; the seasonal baseline must flag only the 100.
-    val dir = java.nio.file.Files.createTempDirectory("graft_season_fixture").toString
+    val dir = Scratch.fresh("season_fixture")
     val day0 = 19700L // epoch day; (day+4)%7 gives its dow
     val rows = (0 until 35).flatMap { d =>
       val day = day0 + d
@@ -540,7 +540,7 @@ class Round15OpsSpec extends GraftSuite {
   test("event_bot_detect: metronomic gaps flag, heavy-tailed gaps pass") {
     // planted fixture: user 1 fires every 5 minutes exactly (scraper),
     // user 2 with the same count but exponential-ish spread (human)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bot_fixture").toString
+    val dir = Scratch.fresh("bot_fixture")
     val base = 1700000000000L
     val humanGaps = (1 to 30).map(i => ((i * 37) % 11 + 1) * 60000L * i) // wildly varying
     val rows =

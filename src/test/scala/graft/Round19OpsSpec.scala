@@ -508,7 +508,7 @@ class Round19OpsSpec extends GraftSuite {
     // 25 (beyond 2-sigma cluster → r3, and with the spike a 4-of-5
     // beyond 1-sigma window → r4), one 40-event spike day (beyond
     // 3-sigma → r1, exactly once).
-    val dir = java.nio.file.Files.createTempDirectory("spc_plant").toString
+    val dir = Scratch.fresh("spc_plant")
     val rows = (0 until 46).flatMap { day =>
       val perDay = if (day < 30) 10 else if (day < 42) 13 else if (day < 45) 25 else 40
       (0 until perDay).map(i => (day.toLong * 100 + i,

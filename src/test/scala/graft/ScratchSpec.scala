@@ -82,15 +82,7 @@ class ScratchSpec extends GraftSuite {
       hits("src/main/scala/graft/operators", confSet))
     assert(hits("src/main", appEnd).isEmpty, hits("src/main", appEnd))
     assert(hits("src/main", tmpProp).forall(_.contains("core.scala")), hits("src/main", tmpProp))
-    val temp = hits("src/main", tempDir)
-    assert(temp.map(h => Paths.get(h.split(':').head).getFileName.toString).sorted ==
-      Seq("Scans.scala", "core.scala"), temp)
-    // the Scans hit is JdbcIO.freshEmbeddedDerby's database dir, kept
-    // outside Scratch because perfbench's osm_chain deletes it itself
-    val scans = temp.find(_.contains("Scans.scala")).get
-    val line = scans.split(':').last.toInt
-    val src = Files.readAllLines(Paths.get(scans.split(':').head))
-    val derby = (0 until src.size).find(i => src.get(i).contains("def freshEmbeddedDerby")).get + 1
-    assert(line > derby && line - derby <= 3, scans)
+    val temp = Seq("src/main", "src/test").flatMap(hits(_, tempDir))
+    assert(temp.map(h => Paths.get(h.split(':').head).getFileName.toString) == Seq("core.scala"), temp)
   }
 }

@@ -92,7 +92,7 @@ class StreamingSpec extends GraftSuite {
   test("batch twins run unchanged as streaming queries (tumbling over a file stream)") {
     // The very same StreamingOps.tumbling plan, driven incrementally from a
     // file source, must reach the batch answer once all data is consumed.
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_twin")
+    val base = java.nio.file.Paths.get(Scratch.fresh("stream_twin"))
     val src = base.resolve("src"); java.nio.file.Files.createDirectories(src)
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(sf, "events.parquet"), src.resolve("events.parquet"))
