@@ -137,6 +137,23 @@ case class AsofJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
+/** Installs a planner strategy on a session once. A session started
+  * with `spark.sql.extensions=graft.GraftExtensions` already carries both
+  * join strategies; every other session (those of `graft.Sessions` and
+  * perfbench's own) gets them here, on first use. The check and the
+  * append hold the session's `experimental` lock, so two joins built on
+  * different threads cannot drop each other's strategy.
+  */
+private[graft] object Strategies {
+  def install(spark: SparkSession, strategy: SparkStrategy): Unit = {
+    val methods = spark.experimental
+    methods.synchronized {
+      if (!methods.extraStrategies.contains(strategy))
+        methods.extraStrategies = methods.extraStrategies :+ strategy
+    }
+  }
+}
+
 /** User-facing entry: `Asof.join(trades, quotes, "user_id", "ms", value)`.
   * Resolves the named columns against the ANALYZED children (so the
   * custom node is born fully resolved) and installs the strategy on the
@@ -146,9 +163,7 @@ object Asof {
   def join(leftDf: DataFrame, rightDf: DataFrame,
            key: String, time: String, valueCol: String, as: String): DataFrame = {
     val spark = leftDf.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofJoinStrategy
+    Strategies.install(spark, AsofJoinStrategy)
     val lPlan = leftDf.queryExecution.analyzed
     // Re-alias every right-side column to FRESH exprIds: when both
     // inputs derive from the same relation (the usual self-asof shape),

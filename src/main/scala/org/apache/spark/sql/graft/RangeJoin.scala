@@ -166,9 +166,7 @@ object Ranged {
            key: String, time: String, valueCol: String, as: String,
            delta: Long): DataFrame = {
     val spark = leftDf.sparkSession
-    if (!spark.experimental.extraStrategies.contains(RangeJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ RangeJoinStrategy
+    Strategies.install(spark, RangeJoinStrategy)
     val lPlan = leftDf.queryExecution.analyzed
     // fresh exprIds on the right — the self-join shape (AsofJoin lesson)
     val rAnalyzed = rightDf.queryExecution.analyzed

@@ -61,4 +61,33 @@ class AsofJoinSpec extends GraftSuite {
              ex.getCause.toString.contains("BIGINT"),
       s"an int key must trip the BIGINT contract require, got: $ex")
   }
+
+  test("Asof.join and Ranged.join racing on a fresh session install each strategy once") {
+    import java.util.concurrent.{Callable, CyclicBarrier, Executors}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.graft.{Asof, AsofJoinStrategy, RangeJoinStrategy, Ranged}
+    val threads = 8
+    val pool = Executors.newFixedThreadPool(threads)
+    try {
+      for (_ <- 1 to 100) {
+        val fresh = spark.newSession()
+        val start = new CyclicBarrier(threads)
+        val joins = (0 until threads).map { i =>
+          pool.submit(new Callable[DataFrame] {
+            def call(): DataFrame = {
+              val df = fresh.range(8).selectExpr("id % 2 AS k", "id AS t", "id AS v")
+              start.await()
+              if (i % 2 == 0) Asof.join(df, df, "k", "t", "v", "w")
+              else Ranged.join(df, df, "k", "t", "v", "w", 1L)
+            }
+          })
+        }
+        joins.foreach(_.get())
+        val installed = fresh.experimental.extraStrategies
+        assert(installed.count(_ == AsofJoinStrategy) == 1 &&
+               installed.count(_ == RangeJoinStrategy) == 1,
+          s"each join strategy must be installed exactly once, got $installed")
+      }
+    } finally pool.shutdown()
+  }
 }

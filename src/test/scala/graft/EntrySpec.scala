@@ -52,25 +52,8 @@ class EntrySpec extends GraftSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  /** One pass over the registry, shared by the two sweeps below: each
-    * key is built once, its schema kept, and its result materialized with
-    * a `noop` write. Under count() Catalyst prunes final Sorts, Windows,
-    * joins and fused kernels; the write runs the whole plan. A key whose
-    * build fails has no schema; a failure keeps the key and its message. */
-  private lazy val sweep: Seq[(String, Option[StructType], Option[String])] =
-    SparkEntry.registry.map { q =>
-      def msg(e: Throwable) = Option(e.getMessage).getOrElse(e.toString).take(120)
-      try {
-        val df = q.run(spark, sf)
-        val error =
-          try { df.write.format("noop").mode("overwrite").save(); None }
-          catch { case e: Throwable => Some(msg(e)) }
-        (q.key, Some(df.schema), error)
-      } catch { case e: Throwable => (q.key, None, Some(msg(e))) }
-    }
-
   test("every registered query executes at sf0.001", Heavy) {
-    val failures = sweep.collect { case (key, _, Some(e)) => key -> e }
+    val failures = RegistrySweep.failures(RegistrySweep.pristine)
     assert(failures.isEmpty, s"queries failed: $failures")
   }
 
@@ -89,7 +72,7 @@ class EntrySpec extends GraftSuite {
       case _                                    => false
     }
     // a key whose build failed has no schema: the previous test reports it
-    val offenders = sweep.flatMap { case (key, schema, _) =>
+    val offenders = RegistrySweep.pristine.flatMap { case Swept(key, schema, _, _, _) =>
       val bad = schema.toSeq.flatMap(_.fields.filter(f => hasFloatArray(f.dataType)))
       if (bad.isEmpty) None else Some(key -> bad.map(_.name))
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Null-payload robustness: at 100 TB the payload columns of a real
   * corpus carry NULLs — scraped text that failed extraction, embeddings
   * the encoder skipped, events with no value. An operator that NPEs on a
@@ -15,44 +13,21 @@ import org.apache.spark.sql.functions._
   */
 class NullInputSpec extends GraftSuite {
 
-  // injection logic lives in graft.DegradedCorpus (r19) so this crash
-  // lane and the oracle-parity lane (DegradedCorpus main -> Verify ->
-  // tools/check.py) degrade the corpus IDENTICALLY
-  private lazy val nulledDir: String = {
-    val dir = Scratch.fresh("nulls")
-    DegradedCorpus.write(spark, sf, dir)
-    dir
-  }
-
-  // same exclusions as EmptyInputSpec (self-driving streaming demos).
-  // The fail-loud keys (tokenizer lanes, multimodal codecs) are NOT
-  // excluded: a null payload row is dropped by their isNotNull guards
-  // before the require() kernels see it, so they run — and pass — in
-  // this lane; only genuinely undecodable non-null bytes trip their
-  // loudness, which is spec-pinned elsewhere. (ADVICE r17: comment
-  // previously claimed a wider skip set than the code had.)
-  private val skip = Set(
-    "stream_watermark_late", "stream_stateful_custom", "stream_stream_join",
-    "stream_transform_with_state",
-    "sink_stream_foreachbatch", "source_stream_file", "source_dsv2")
-
   test("representative null-sensitive keys stay green on the nulled corpus (quick lane)") {
     // single-key sibling of the Heavy sweep below (TagDisciplineSpec):
     // one key per null-divergence class fixed by the degraded-parity
     // lane (r19) — payload-hash sampler, null-quote asof, null-typed
     // event states, null-text doc fan-out
-    for (k <- Seq("sample_split", "join_asof_tolerance", "event_markov",
-                  "text_chunk_overlap"))
-      assert(SparkEntry.queries(k)(spark, nulledDir).count() >= 0, k)
+    val keys = Set("sample_split", "join_asof_tolerance", "event_markov", "text_chunk_overlap")
+    val swept = RegistrySweep.sweep(spark, RegistrySweep.nulledDir,
+      SparkEntry.registry.filter(q => keys(q.key)))
+    assert(swept.map(_.key).toSet == keys)
+    val failures = RegistrySweep.failures(swept)
+    assert(failures.isEmpty, s"queries crashed on null payloads: $failures")
   }
 
   test("every batch query executes on a corpus with 10% null payloads", Heavy) {
-    val failures = SparkEntry.registry
-      .filterNot(q => skip(q.key))
-      .flatMap { q =>
-        try { q.run(spark, nulledDir).count(); None }
-        catch { case e: Throwable => Some(q.key -> e.toString.linesIterator.next()) }
-      }
+    val failures = RegistrySweep.failures(RegistrySweep.nulled)
     assert(failures.isEmpty, s"queries crashed on null payloads: $failures")
   }
 }

@@ -686,20 +686,16 @@ class PlanSpec extends GraftSuite {
   }
 
   test("no query plan contains a CartesianProduct except the declared cross join", Heavy) {
-    // excluded: streaming demos, sink side-effects, and the action-eager
-    // queries (kmeans training loop, embedded-Derby writes) whose plan
-    // construction runs whole jobs — none can form a cartesian product
-    // (kmeans' codebook cross-probe is an intentional broadcast NLJ).
-    for (q <- SparkEntry.registry if q.key != "join_cross"
-         if !q.key.startsWith("stream_") && q.key != "source_stream_file" &&
-            q.key != "sink_stream_foreachbatch" && q.key != "sink_parquet" &&
-            q.key != "sort_partitioned" && q.key != "osm_region_partition_write" &&
-            q.key != "emb_kmeans" && q.key != "sink_jdbc" && q.key != "source_jdbc" &&
-            q.key != "sim_ivf_partitioned" && q.key != "scan_merge_schema" &&
-            q.key != "sink_dynamic_overwrite") {
-      val p = q.run(spark, sf).queryExecution.executedPlan.toString()
-      assert(!p.contains("CartesianProduct"),
-             s"${q.key} has an accidental cartesian product")
+    // the pristine sweep plans every key anyway, so the action-eager keys
+    // (kmeans training, embedded-Derby and lake writes) and the streaming
+    // demos are checked too; kmeans' codebook cross-probe is an
+    // intentional broadcast NLJ, not a cartesian product
+    val swept = RegistrySweep.pristine.filter(_.key != "join_cross")
+    val unplanned = swept.collect { case Swept(key, _, _, None, e) => key -> e.getOrElse("") }
+    assert(unplanned.isEmpty, s"plans the cartesian check could not build: $unplanned")
+    val cartesian = swept.collect {
+      case Swept(key, _, _, Some(plan), _) if plan.toString.contains("CartesianProduct") => key
     }
+    assert(cartesian.isEmpty, s"accidental cartesian products: $cartesian")
   }
 }

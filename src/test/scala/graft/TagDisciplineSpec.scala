@@ -29,6 +29,7 @@ class TagDisciplineSpec extends AnyFunSuite {
   test("every suite with a Heavy-tagged test keeps a quick (non-Heavy) sibling") {
     val suites = suiteClasses
     assert(suites.size >= 10, s"suspiciously few suites scanned: ${suites.map(_.getName)}")
+    val startedBefore = RegistrySweep.started
     var heavySuites = 0
     val offenders = suites.flatMap { cls =>
       val s = cls.getDeclaredConstructor().newInstance().asInstanceOf[org.scalatest.Suite]
@@ -39,6 +40,8 @@ class TagDisciplineSpec extends AnyFunSuite {
         if (s.testNames.exists(t => !heavy(t))) None else Some(cls.getName)
       }
     }
+    assert(RegistrySweep.started == startedBefore,
+      "constructing a suite must not start a registry sweep (read it inside a Heavy test)")
     assert(heavySuites >= 5,
       s"the Heavy lane shrank unexpectedly ($heavySuites suites) — did the tag move?")
     assert(offenders.isEmpty,

@@ -8,12 +8,13 @@ package graft
   * calendar spine, a |langs|-sized remainder table) that is a deliberate,
   * safe device; on a corpus-sized stream it is a 100 TB driver-killer.
   *
-  * This sweep walks every registered query's OPTIMIZED logical plan at
-  * sf0.001 and collects the keys that carry at least one Window node
-  * with an empty partitionSpec. The whitelist below is the audit: every
-  * entry is annotated with the boundedness argument for its global
-  * window(s). A NEW key appearing here fails the suite until its window
-  * is either partitioned or argued bounded in this file.
+  * This audit walks every registered query's OPTIMIZED logical plan at
+  * sf0.001 (the pristine [[RegistrySweep]]) and collects the keys that
+  * carry at least one Window node with an empty partitionSpec. The
+  * whitelist below is the audit: every entry is annotated with the
+  * boundedness argument for its global window(s). A NEW key appearing
+  * here fails the suite until its window is either partitioned or
+  * argued bounded in this file.
   *
   * Limitation, stated: subtrees materialized during query BUILD
   * (localCheckpoint) are opaque to the final plan, so their windows are
@@ -74,15 +75,11 @@ class WindowAuditSpec extends GraftSuite {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     // a key whose plan fails to build hides its windows from the audit,
     // so each such key is collected and reported, never skipped
-    val unplanned = scala.collection.mutable.LinkedHashMap[String, String]()
-    val offenders = SparkEntry.registry.flatMap { q =>
-      try {
-        val plan = q.run(spark, sf).queryExecution.optimizedPlan
-        val globals = plan.collect { case w: LWindow if w.partitionSpec.isEmpty => w }
-        if (globals.isEmpty) None else Some(q.key)
-      } catch {
-        case scala.util.control.NonFatal(t) => unplanned(q.key) = t.toString.take(200); None
-      }
+    val swept = RegistrySweep.pristine
+    val unplanned = swept.collect { case Swept(key, _, None, _, e) => key -> e.getOrElse("") }
+    val offenders = swept.collect {
+      case Swept(key, _, Some(plan), _, _)
+          if plan.collect { case w: LWindow if w.partitionSpec.isEmpty => w }.nonEmpty => key
     }.toSet
     assert(unplanned.isEmpty, s"plans the window audit could not build: $unplanned")
     val undocumented = offenders -- boundedGlobalWindows.keySet
