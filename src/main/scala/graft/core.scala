@@ -60,6 +60,74 @@ object Gate {
   }
 }
 
+/** The one exact global rank: no row passes through a single-task window.
+  * [[apply]] adds `rank`, the running sum of `value` (1 per row by default)
+  * under `order` within each group of `by`, and `total`, the sum of
+  * `value` over the row's group, in three steps:
+  *
+  *  1. range-partition on (`by`, `order`) and persist, so the collect
+  *     below and the final pass read one sampled layout;
+  *  2. collect each partition's partial sum per group (one row per
+  *     partition and group) and prefix-sum them on the driver;
+  *  3. take the running sum inside each partition and add the partition's
+  *     offset, which joins in as a tiny frame, so the plan holds no
+  *     sampled value.
+  *
+  * The window keeps the default RANGE frame, so rows equal on all of
+  * (`by`, `order`) share one sum: a tie group counts as one step. Equal
+  * keys always land in the same range partition, so the sum is the
+  * global one for any order; under a total order `rank` is the 1-based
+  * row number. Cost: the range exchange, the partition-local window's
+  * exchange and one collect of at most partitions × groups rows.
+  */
+object GlobalRank {
+  import org.apache.spark.sql.{Column, Row}
+  import org.apache.spark.sql.expressions.Window
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+
+  def apply(df: DataFrame, order: Seq[Column], by: Seq[String] = Nil,
+            value: Column = lit(1L)): DataFrame = {
+    val s = df.sparkSession
+    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val v = value.cast("long")
+    val grp = col("__pid") +: by.map(col)
+    val ranged = Caches.register(df.repartitionByRange(parts, by.map(col) ++ order: _*)
+      .withColumn("__pid", spark_partition_id()).persist())
+    val partials = ranged.groupBy(grp: _*).agg(coalesce(sum(v), lit(0L))).collect()
+    val offsets = partials.groupBy(r => by.indices.map(i => r.get(1 + i))).values.flatMap { rs =>
+      val sorted = rs.sortBy(_.getInt(0))
+      val sums = sorted.map(_.getLong(by.size + 1))
+      val n = sums.sum
+      sorted.zip(sums.scanLeft(0L)(_ + _))
+        .map { case (r, off) => Row.fromSeq(r.toSeq.init :+ off :+ n) }
+    }
+    val other = by.indices.map(i => s"__by$i")
+    val offs = s.createDataFrame(java.util.Arrays.asList(offsets.toSeq: _*), StructType(
+      StructField("__opid", IntegerType) +:
+        by.zip(other).map { case (b, o) => ranged.schema(b).copy(name = o) } :+
+        StructField("__off", LongType) :+ StructField("total", LongType)))
+    val on = (col("__pid") === col("__opid")) +:
+      by.zip(other).map { case (b, o) => col(b) <=> col(o) }
+    ranged
+      .withColumn("__run", sum(v).over(Window.partitionBy(grp: _*).orderBy(order: _*)))
+      .join(offs, on.reduce(_ && _))
+      .withColumn("rank", col("__off") + col("__run"))
+      .drop(Seq("__pid", "__run", "__opid", "__off") ++ other: _*)
+  }
+
+  /** SQL `NTILE(k)` of a 1-based `rank` among `n` rows: the first n % k
+    * tiles hold one row more than the rest. */
+  def ntile(rank: Column, n: Column, k: Int): Column = {
+    def div(a: Column, b: Column) = call_function("div", a, b)
+    val base = div(n, lit(k.toLong))
+    val rem = n % k
+    val thr = rem * (base + 1)
+    when(rank <= thr, div(rank - 1, base + 1) + 1)
+      .otherwise(rem + div(rank - 1 - thr, greatest(base, lit(1L))) + 1)
+  }
+}
+
 /** Every scratch directory the engine writes lives under
   * java.io.tmpdir as `graft_<tag>_<run nonce>_…` and is deleted when
   * the JVM exits. The per-process nonce isolates runs that share a box.

@@ -253,8 +253,8 @@ object Aggs {
       // distinct at sf0.1), so the original running-weight window
       // `PARTITION BY l_returnflag` was three single-task sorts of the
       // fact — the banned low-cardinality-window shape (2.10 s, grows
-      // unboundedly). A globalRowNumber-style range-repartition +
-      // partial-offset rewrite was exact but paid a range-sampling
+      // unboundedly). A [[graft.GlobalRank]]-style range-repartition +
+      // per-partition offset rewrite was exact but paid a range-sampling
       // pass, a full-fact shuffle + cache, and a collect-offset join
       // (measured 3.0 s with the no-op pre-agg, 1.69 s without). This
       // final shape is the classic TWO-PASS EXACT MEDIAN, and every

@@ -1067,7 +1067,7 @@ object EmbeddingOps {
       // eigenvalues while still sketching at 2ℓ·d ≪ the d² Gram the
       // exact fold would carry at real embedding widths. Corpora with
       // genuine spectral decay (the common case) run ℓ ≪ d.
-      val sketchL = s.conf.get("spark.sql.graft.fd.l", "48").toInt
+      val sketchL = 48
       if (dims.isEmpty) {
         Seq.empty[(Long, Double, Double)].toDF("rank", "sigma2_est", "err_bound")
       } else {

@@ -1,9 +1,10 @@
 package graft.operators
 
-import graft.{Caches, Gate, Q, T}
-import org.apache.spark.sql.DataFrame
+import graft.{Caches, Gate, GlobalRank, Q, T}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
 /** Batch event-analytics operators over the `events` fixture: gap-based
   * sessionization and ordered funnel analysis — the batch counterparts of
@@ -156,237 +157,71 @@ object EventOps {
 
   private val GapMs = 1800000L // 30 min session gap
 
-  /** Exact global ntile(k) WITHOUT a single-partition window (the classic
-    * `Window.orderBy` ntile funnels the whole table through one task —
-    * VERDICT r12 flagged exactly that in event_rfm), computed for
-    * SEVERAL independent orderings in ONE shuffle TOTAL (r13 item 6
-    * collapsed one-shuffle-per-dim to one range shuffle; r14 item 4
-    * profiling showed even that was two exchanges — repartitionByRange
-    * plus the window's own hash exchange — and a hidden range-SAMPLING
-    * job). Now the range bucket is a COLUMN: one job materializes the
-    * caller's persisted input AND collects per-dim COMPOSITE (key,
-    * tie) boundaries from a deterministic bounded sample; each
-    * (tie, dim) row computes its bucket by scanning that
-    * ≤`parts`-element literal array, and the ONLY exchange is the rank
-    * window's own hash on (bucket, dim). The tie column must be
-    * NUMERIC (castable to DECIMAL(28,2)): it participates in the
-    * composite boundaries.
-    * Boundary accuracy affects BALANCE ONLY — exactness comes from the
-    * local row_number + an exact count-offset table (one map-side-
-    * combined ≤ parts×dims aggregate off the cached input, collected
-    * and re-entering the plan as a LITERAL map — join-free scoring),
-    * which never assumes buckets are equal-sized. The per-dim keys
-    * widen to a common exact DECIMAL(28,2) (order-preserving for
-    * integral millis, counts, and 2-dp money); the bucket formula is
-    * SQL ntile's (first n%k buckets one row fatter). Bit-identical to
-    * k ntile windows because each (dim, key, tie) order is total.
-    */
-  private def globalNtileMulti(df: DataFrame, tie: String,
-                               dims: Seq[(String, String)], k: Int,
-                               carry: Seq[String] = Nil): DataFrame = {
-    val s = df.sparkSession
-    val parts = s.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
-    val dec = org.apache.spark.sql.types.DecimalType(28, 2)
-    val entries = dims.zipWithIndex.map { case ((key, _), i) =>
-      // Fail-loud widening (ADVICE r14): under non-ANSI Spark an
-      // overflowing cast yields NULL, and a NULL ranking key would sort
-      // first and silently mis-bucket the whole ntile. Coalesce is
-      // lazy, so raise_error fires only on an actual overflow/NULL key.
-      struct(lit(i).as("dim"),
-             coalesce(
-               col(key).cast(dec),
-               raise_error(concat(
-                 lit(s"globalNtileMulti: ranking key '$key' is NULL or exceeds " +
-                     "DECIMAL(28,2) for tie "), col(tie).cast("string")))
-                 .cast(dec)).as("keyd"))
-    }
-    // One action does double duty: it materializes the caller's persist
-    // of `df` (which every later pass reads from cache) and collects a
-    // deterministic bounded sample of COMPOSITE (key, tie) pairs per
-    // dim — RangePartitioner's algorithm, done by hand so the resulting
-    // boundaries can become a bucket COLUMN instead of a physical
-    // partitioning (which the rank window could not reuse — it would
-    // re-exchange). Boundaries MUST be composite: a key-only split
-    // (e.g. percentile of the key) strands every tie group in one
-    // bucket, and a tie-heavy dim like an event COUNT (power law: a
-    // third of all users at n_events=1) would funnel a third of the
-    // corpus through ONE window task at scale. With the tie in the
-    // boundary, tie runs split exactly like repartitionByRange splits
-    // them. The thin-out sampler is deterministic (stride doubling, no
-    // RNG): sample quality shifts bucket BALANCE only, never a rank.
-    // The same pass also returns the EXACT per-partition row count (one
-    // sentinel tuple per partition, cnt >= 0) — it feeds the size gate
-    // below for free, since the sampler streams every row anyway.
-    import s.implicits._
-    val sampleCap = 128 // per input partition per dim; collected ≤ cap × parts × dims
-    val sampleRows: Array[(Int, BigDecimal, BigDecimal, Long)] = df
-      .select(explode(array(dims.zipWithIndex.map { case ((key, _), i) =>
-        // Same fail-loud widening as `entries` (ADVICE r15): without it a
-        // NULL/overflowing key reaches the driver as a null BigDecimal and
-        // `samples...sorted` dies in an opaque NPE BEFORE the documented
-        // loud error below can fire. All three cast sites now share it.
-        def loud(c: String) = coalesce(
-          col(c).cast(dec),
-          raise_error(concat(
-            lit(s"globalNtileMulti: sampler column '$c' is NULL or exceeds " +
-                "DECIMAL(28,2) for tie "), col(tie).cast("string"))).cast(dec))
-        struct(lit(i).as("d"), loud(key).as("k"), loud(tie).as("t"))
-      }: _*)).as("e"))
-      .select(col("e.d"), col("e.k"), col("e.t"))
-      .as[(Int, BigDecimal, BigDecimal)]
-      .mapPartitions { it =>
-        val bufs = Array.fill(dims.size)(
-          scala.collection.mutable.ArrayBuffer.empty[(Int, BigDecimal, BigDecimal, Long)])
-        val strides = Array.fill(dims.size)(1L)
-        val seen = Array.fill(dims.size)(0L)
-        it.foreach { e =>
-          val d = e._1
-          if (seen(d) % strides(d) == 0L) {
-            bufs(d) += ((e._1, e._2, e._3, -1L))
-            if (bufs(d).size > sampleCap) {
-              val kept = bufs(d).zipWithIndex.collect { case (x, ix) if ix % 2 == 0 => x }
-              bufs(d).clear(); bufs(d) ++= kept
-              strides(d) *= 2
-            }
-          }
-          seen(d) += 1
-        }
-        bufs.iterator.flatten ++ Iterator.single((0, BigDecimal(0), BigDecimal(0), seen(0)))
-      }
-      .collect()
-    val nExact = sampleRows.filter(_._4 >= 0L).map(_._4).sum
-    // Size-gated driver fast path (the Gate.bcast pattern applied to
-    // compute instead of broadcast): below the budget, the whole
-    // scoring input is a small per-entity table — collect it, assign
-    // the k-tiles with the identical formula, and re-enter the plan as
-    // a LocalRelation, skipping the counts job, the rank window, and
-    // the pivot exchange entirely (3 jobs -> 1 tiny local sort). The
-    // distributed path below is byte-identical in result and takes
-    // over silently above the budget — scale behavior is unchanged.
-    val gateRows = s.conf.getOption("spark.sql.graft.ntileDriverGateRows")
-      .map(_.toLong).getOrElse(250000L)
-    if (nExact <= gateRows) return ntileDriver(df, tie, dims, k, carry, nExact)
-    val samples = sampleRows.filter(_._4 < 0L).map(e => (e._1, e._2, e._3))
-    val bucketOf = dims.indices.map { i =>
-      val sorted = samples.filter(_._1 == i).map(e => (e._2, e._3)).sorted
-      val bs: Seq[(BigDecimal, BigDecimal)] =
-        if (sorted.isEmpty) Nil
-        else (1 until parts).map(j => sorted((j * sorted.length / parts)
-          .min(sorted.length - 1))).distinct
-      // bucket = #composite boundaries strictly below (keyd, tie):
-      // lexicographic, so equal keys still spread across buckets by tie
-      if (bs.isEmpty) lit(0)
-      else bs.map { case (bk, bt) =>
-        val bkL = lit(bk.bigDecimal).cast(dec)
-        val btL = lit(bt.bigDecimal).cast(dec)
-        when(col("keyd") > bkL ||
-             (col("keyd") === bkL && col(tie).cast(dec) > btL), 1).otherwise(0)
-      }.reduce(_ + _)
-    }
-    // `carry` columns ride the shuffle so the caller needs NO final
-    // user-keyed join to recover its payload (r14 VERDICT item 4: the
-    // join-back was the residual cost). They are masked onto the dim-0
-    // rows ONLY — the shuffle replicates each tie #dims times, and an
-    // unmasked payload would triple the shuffled bytes for nothing; the
-    // pivot recovers them with the same max() it uses for the scores.
-    val long = df.select(col(tie) +: carry.map(col) :+
-        explode(array(entries: _*)).as("e"): _*)
-      .select(col(tie) +: col("e.dim").as("dim") +: col("e.keyd").as("keyd") +:
-        carry.map(c => when(col("e.dim") === 0, col(c)).as(c)): _*)
-    val bucket = dims.indices.foldLeft(lit(0): org.apache.spark.sql.Column) {
-      (acc, i) => when(col("dim") === i, bucketOf(i)).otherwise(acc)
-    }.cast("int")
-    // Per-(bucket, dim) exact counts, straight off the caller's cached
-    // input: map-side combine collapses each input partition to
-    // ≤ parts×dims rows, so the collected table is O(config²), never
-    // O(data). Bucket ids ascend with key ranges, so the per-dim
-    // running sum of counts IS each bucket's global rank offset.
-    val counts = long.withColumn("__pid", bucket)
-      .groupBy(col("__pid"), col("dim")).agg(count(lit(1)).as("__c"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    val n = counts.filter(_._2 == 0).map(_._3).sum
-    val offMap: Map[Int, Long] = dims.indices.flatMap { dIx =>
-      var acc = 0L
-      counts.filter(_._2 == dIx).sortBy(_._1).map { case (p, _, c) =>
-        val o = acc; acc += c; (p * dims.size + dIx) -> o
-      }
-    }.toMap
-    // Scoring is then join-FREE: the ≤ parts×dims offset table rides
-    // into the plan as a literal map (element_at lookup — every
-    // (bucket, dim) present in the data has an entry by construction),
-    // and the ntile constants are plain literals. The one remaining
-    // exchange before the pivot is the rank window's own.
-    val base = n / k
-    val rem = n % k
-    val thr = rem * (base + 1)
-    val rank = element_at(typedLit(offMap), col("__pid") * dims.size + col("dim")) +
-      col("__rn") // exact 1-based global rank per dim
-    // Integer bucket math; operands are non-negative BIGINTs, so DIV
-    // (truncating) equals floor division. SQL ntile's formula: first
-    // n%k buckets one row fatter.
-    def idiv(a: org.apache.spark.sql.Column, b: Long) =
-      floor(a / lit(b)).cast("long")
-    val scored = long.withColumn("__pid", bucket)
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__pid"), col("dim")).orderBy(col("keyd"), col(tie))))
-      .withColumn("__score",
-        when(rank <= lit(thr), idiv(rank - 1, base + 1) + 1)
-          .otherwise(lit(rem) + idiv(rank - 1 - lit(thr), math.max(base, 1L)) + 1))
-    val aggs = dims.zipWithIndex.map { case ((_, out), i) =>
-      max(when(col("dim") === i, col("__score"))).cast("long").as(out)
-    } ++ carry.map(c => max(col(c)).as(c)) // exactly one non-null per tie
-    scored.groupBy(col(tie)).agg(aggs.head, aggs.tail: _*)
+  /** event_rfm's per-user table, persisted for either scoring arm:
+    * (user_id, n_events, monetary, k0, k1, k2), where k0..k2 are the
+    * recency, frequency and monetary ranking keys widened to one exact
+    * DECIMAL(28,2) (order-preserving for integral millis, counts and
+    * 2-dp money), so that they share one column in long format. A NULL
+    * key would sort first and shift every tile, so it fails loudly with
+    * the user id instead. */
+  private[graft] def rfmUsers(s: SparkSession, d: String): DataFrame = {
+    val dec = DecimalType(28, 2)
+    def key(c: String) = coalesce(col(c).cast(dec), raise_error(concat(
+      lit(s"event_rfm: ranking key '$c' is NULL for user "),
+      col("user_id").cast("string"))).cast(dec))
+    Caches.register(T.events(s, d)
+      .groupBy(col("user_id"))
+      .agg(max(unix_millis(col("ts"))).as("last_ms"),
+           count(lit(1)).as("n_events"),
+           sum(graft.Det.dec2(col("value"))).as("monetary"))
+      .select(col("user_id"), col("n_events"), col("monetary"),
+              key("last_ms").as("k0"), key("n_events").as("k1"), key("monetary").as("k2"))
+      .persist())
   }
 
-  /** The under-budget arm of [[globalNtileMulti]]'s size gate: collect
-    * the per-entity table, assign each dim's k-tiles with the identical
-    * rank formula (so the two arms are bit-interchangeable), re-enter
-    * the plan as a LocalRelation with the exact schema the distributed
-    * pivot would produce: (tie, dim outputs as BIGINT, carry columns).
-    */
-  private def ntileDriver(df: DataFrame, tie: String, dims: Seq[(String, String)],
-                          k: Int, carry: Seq[String], n: Long): DataFrame = {
-    val s = df.sparkSession
-    val dec = org.apache.spark.sql.types.DecimalType(28, 2)
-    val nd = dims.size
-    val rows = df.select(
-      col(tie) +: col(tie).cast(dec).as("__tieOrd") +:
-      (dims.map(dd => col(dd._1).cast(dec)) ++ carry.map(col)): _*).collect()
-    val n2 = rows.length
-    require(n2 == n, s"globalNtileMulti gate: sampler counted $n rows, collect saw $n2")
-    val base = n2.toLong / k; val rem = n2.toLong % k; val thr = rem * (base + 1)
-    def scoreOf(rank: Long): Long =
-      if (rank <= thr) (rank - 1) / (base + 1) + 1
-      else rem + (rank - 1 - thr) / math.max(base, 1L) + 1
-    val scores = Array.ofDim[Long](n2, math.max(nd, 1))
-    for (d <- 0 until nd) {
-      val order = (0 until n2).sortBy { i =>
-        // same fail-loud contract as the distributed arm's raise_error:
-        // a NULL/overflowed key aborts with the tie id, never mis-sorts
-        val kd = rows(i).getDecimal(2 + d)
-        val td = rows(i).getDecimal(1)
-        require(kd != null && td != null,
-          s"globalNtileMulti(driver): NULL ranking key '${dims(d)._1}' or tie " +
-            s"for ${rows(i).get(0)}")
-        (BigDecimal(kd), BigDecimal(td))
-      }
-      var j = 0
-      while (j < n2) { scores(order(j))(d) = scoreOf(j + 1L); j += 1 }
-    }
-    val schema = org.apache.spark.sql.types.StructType(
-      df.schema(tie) +:
-      (dims.map(dd => org.apache.spark.sql.types.StructField(
-         dd._2, org.apache.spark.sql.types.LongType)) ++
-       carry.map(c => df.schema(c))))
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](n2)
-    var i = 0
-    while (i < n2) {
-      val r = rows(i)
-      out.add(org.apache.spark.sql.Row.fromSeq(
-        r.get(0) +: (scores(i).toSeq ++ carry.indices.map(ci => r.get(2 + nd + ci)))))
-      i += 1
-    }
-    s.createDataFrame(out, schema)
+  /** event_rfm's arm for a user table of at most this many rows. Measured
+    * at sf0.1 (4-core box, noop write, 8 interleaved pairs): median 0.69 s
+    * on the driver against 1.08 s distributed. */
+  private val RfmDriverRows = 250000L
+
+  /** Ranks the three keys with driver sorts over the collected user
+    * table and re-enters the plan as a local relation. */
+  private[graft] def rfmOnDriver(u: DataFrame): DataFrame = {
+    val rows = u.collect()
+    val ranks = Array.ofDim[Long](rows.length, 3)
+    for (k <- 0 until 3)
+      rows.indices.sortBy(i => (BigDecimal(rows(i).getDecimal(3 + k)), rows(i).getLong(0)))
+        .zipWithIndex.foreach { case (i, r) => ranks(i)(k) = r + 1L }
+    val ranked = rows.indices.map(i =>
+      Row.fromSeq(rows(i).toSeq.take(3) ++ ranks(i) :+ rows.length.toLong))
+    rfmScores(u.sparkSession.createDataFrame(java.util.Arrays.asList(ranked: _*),
+      StructType(u.schema.take(3) ++
+        Seq("rank0", "rank1", "rank2", "n").map(StructField(_, LongType)))))
+  }
+
+  /** Ranks the three keys in long format, one [[graft.GlobalRank]] group
+    * per key, and pivots back to one row per user. n_events and monetary
+    * ride on key 0's rows only, so the shuffles do not carry them 3×. */
+  private[graft] def rfmDistributed(u: DataFrame): DataFrame = {
+    val long = u.select(col("user_id"), col("n_events"), col("monetary"),
+        posexplode(array(col("k0"), col("k1"), col("k2"))).as(Seq("key", "v")))
+      .withColumn("n_events", when(col("key") === 0, col("n_events")))
+      .withColumn("monetary", when(col("key") === 0, col("monetary")))
+    val pivot = Seq(max(col("n_events")).as("n_events"), max(col("monetary")).as("monetary")) ++
+      (0 to 2).map(k => max(when(col("key") === k, col("rank"))).as(s"rank$k")) :+
+      max(col("total")).as("n")
+    rfmScores(GlobalRank(long, Seq(col("v"), col("user_id")), by = Seq("key"))
+      .groupBy(col("user_id")).agg(pivot.head, pivot.tail: _*))
+  }
+
+  /** The output of both arms: each key's quintile, and the 3-digit code. */
+  private def rfmScores(ranked: DataFrame): DataFrame = {
+    def tile(k: Int) = GlobalRank.ntile(col(s"rank$k"), col("n"), 5)
+    ranked.select(col("user_id"), col("n_events"),
+        round(col("monetary").cast("double"), 2).as("monetary"),
+        tile(0).as("r_score"), tile(1).as("f_score"), tile(2).as("m_score"))
+      .withColumn("rfm", col("r_score") * 100 + col("f_score") * 10 + col("m_score"))
+      .orderBy(col("user_id"))
   }
 
   val all: Seq[Q] = Seq(
@@ -586,39 +421,19 @@ object EventOps {
       // CONCURRENT-INTERVAL depth (occupancy / queue-depth) — the
       // classic sweep-line: ±1 edges at window starts/ends, running sum
       // in time order, max per serving hour. The global running sum is
-      // the textbook single-task-window trap; here it rides the
-      // partial-offset device (the weighted-prefix-sum form of
-      // TrainingOps.globalRowNumber): range-repartition the edge
-      // stream on (t, dlt), per-partition edge sums collect as ≤ P
-      // metadata rows, driver prefix-sums them, and the only window is
-      // LOCAL per partition — no task ever sorts more than ~1/P of the
-      // edges at any scale. Tie semantics are the half-open contract:
-      // at equal t the −1 sorts first (a window ending at t does not
-      // overlap one starting at t), and the default RANGE frame applies
-      // each (t, dlt) tie group as one step. Tie groups MAY straddle a
-      // range boundary: the partial cums a split produces always lie
-      // BETWEEN the adjacent full depths (monotone within a group), so
-      // max-per-bucket is split-independent and the hash cannot drift.
-      import org.apache.spark.sql.expressions.Window
+      // the textbook single-task-window trap; here it is
+      // [[graft.GlobalRank]] summing dlt over the edge stream in (t, dlt)
+      // order — no task ever sorts more than ~1/P of the edges at any
+      // scale. Tie semantics are the half-open contract: at equal t the
+      // −1 sorts first (a window ending at t does not overlap one
+      // starting at t), and the device's RANGE frame applies each
+      // (t, dlt) tie group as one step.
       val w = T.events(s, d).where(col("event_type") === "purchase")
         .select(unix_millis(col("ts")).as("t0"))
       val edges = w.select(col("t0").as("t"), lit(1L).as("dlt"))
         .unionByName(w.select((col("t0") + 7200000L).as("t"), lit(-1L).as("dlt")))
-      val parts = s.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
-      val ranged = graft.Caches.register(
-        edges.repartitionByRange(parts, col("t"), col("dlt"))
-          .withColumn("_pid", spark_partition_id()).persist())
-      val partials = ranged.groupBy(col("_pid")).agg(sum(col("dlt")).as("pd"))
-        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      val offsets = partials.map(_._2).scanLeft(0L)(_ + _).init
-      val offExpr = partials.map(_._1).zip(offsets).foldLeft(lit(0L)) {
-        case (acc, (pid, off)) => when(col("_pid") === pid, lit(off)).otherwise(acc)
-      }
-      ranged
-        .withColumn("lcum", sum(col("dlt")).over(
-          Window.partitionBy(col("_pid")).orderBy(col("t"), col("dlt"))))
-        .select(expr("t DIV 3600000").as("hour_bucket"),
-                (col("lcum") + offExpr).as("depth"))
+      GlobalRank(edges, Seq(col("t"), col("dlt")), value = col("dlt"))
+        .select(expr("t DIV 3600000").as("hour_bucket"), col("rank").as("depth"))
         .groupBy(col("hour_bucket"))
         .agg(max(col("depth")).as("max_concurrent"))
         .orderBy(col("hour_bucket"))
@@ -772,34 +587,14 @@ object EventOps {
       // n_events is a count, monetary orders by the EXACT DECIMAL sum
       // (never the rounded double — equal-to-2dp users must not swap
       // quintiles on float noise), and user_id breaks all ties. The
-      // quintiles come from [[globalNtileMulti]] — a range-partitioned
-      // two-phase rank that reproduces `ntile(5) OVER (ORDER BY ...)`
-      // bit-for-bit WITHOUT the single-task global window (the r12 scale
-      // defect): every stage is parallel at any user count, and the only
-      // driver-side state is one row-count per (range, dimension). All
-      // THREE dimensions ride one composite range shuffle in long format
-      // (r13 VERDICT item 6 — previously 3× repartition+persist+collect);
-      // n_events/monetary ride the same shuffle as dim-0-masked carry
-      // columns, so the pivot emits the finished wide row and the old
-      // user-keyed join-back (the r14 residual cost) is gone entirely.
-      val u = Caches.register(T.events(s, d)
-        .groupBy(col("user_id"))
-        .agg(max(unix_millis(col("ts"))).as("last_ms"),
-             count(lit(1)).as("n_events"),
-             sum(graft.Det.dec2(col("value"))).as("monetary"))
-        .persist())
-      globalNtileMulti(u.toDF(), "user_id",
-          Seq("last_ms" -> "r_score", "n_events" -> "f_score",
-              "monetary" -> "m_score"), 5,
-          carry = Seq("n_events", "monetary"))
-        .select(col("user_id"), col("n_events"),
-                round(col("monetary").cast("double"), 2).as("monetary"),
-                col("r_score").cast("long").as("r_score"),
-                col("f_score").cast("long").as("f_score"),
-                col("m_score").cast("long").as("m_score"),
-                (col("r_score") * 100 + col("f_score") * 10 + col("m_score"))
-                  .cast("long").as("rfm"))
-        .orderBy(col("user_id"))
+      // quintiles reproduce `ntile(5) OVER (ORDER BY ...)` bit-for-bit
+      // WITHOUT the single-task global window (the r12 scale defect):
+      // a user table that fits the driver is ranked there
+      // ([[rfmOnDriver]]), a larger one by [[graft.GlobalRank]]
+      // ([[rfmDistributed]]); both arms tile with the one
+      // [[graft.GlobalRank.ntile]].
+      val u = rfmUsers(s, d)
+      if (u.count() <= RfmDriverRows) rfmOnDriver(u) else rfmDistributed(u)
     },
 
     Q(
@@ -1070,8 +865,8 @@ object EventOps {
       // Plan: one shuffle to per-user counts, one bounded-domain
       // group-by (≤ max purchases/user rows), and the cumulative window
       // runs over that BOUNDED table (the k-bounded window exception —
-      // an unbounded metric would ride the partial-offset rank device
-      // instead, as text_quality_buckets does).
+      // an unbounded metric would ride [[graft.GlobalRank]] instead, as
+      // text_quality_buckets does).
       val u = T.events(s, d)
         .groupBy(col("user_id"))
         .agg(sum(when(col("event_type") === "purchase", 1).otherwise(0))
@@ -2129,7 +1924,7 @@ object EventOps {
       // (variant, dollars) counts table - quantile value at rank r is
       // the row where below < r <= below + c, no corpus-sized window
       // (the event_ab_mwu bounded-domain discipline; cent-resolution
-      // would ride the partial-offset device instead). Quartile q =
+      // would ride [[graft.GlobalRank]] instead). Quartile q =
       // midpoint of the order statistics at floor/ceil of q(n-1)/4 -
       // pure integer ranks, one IEEE halving spliced identically, so
       // both engines agree bit-for-bit.

@@ -145,7 +145,7 @@ object LlmOps {
     var it = 0
     var nE = e.count()
     // Size-gated driver fast path (the Gate.bcast pattern applied to
-    // compute, same as globalNtileMulti's ntileDriver arm): the component
+    // compute, same as event_rfm's driver arm): the component
     // structure is fully determined by the EDGE set alone — corpus-shrunk
     // (near-dup pairs, not documents) and already counted for the loop
     // below, so the gate is free. Under the budget, collect the canonical

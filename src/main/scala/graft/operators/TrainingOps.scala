@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Gate, Q, T}
+import graft.{Gate, GlobalRank, Q, T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -2110,12 +2110,12 @@ object TrainingOps {
       // a ~2.5% spread on the fixture; alternating direction cancels it
       // per band PAIR (measured spread < 0.2%; hash-mod sharding
       // balances only in expectation). Still pure rank arithmetic. The
-      // global rank rides [[globalRowNumber]] — never a single-task
+      // global rank comes from [[graft.GlobalRank]] — never a single-task
       // window.
       val t = T.documents(s, d).select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      globalRowNumber(t, Seq(col("n_tokens").desc, col("doc_id").asc))
-        .withColumn("rk", col("rn") - 1)
+      GlobalRank(t, Seq(col("n_tokens").desc, col("doc_id").asc))
+        .withColumn("rk", col("rank") - 1)
         .select(col("doc_id"), col("n_tokens"),
           expr("CASE WHEN (rk DIV 8) % 2 = 0 THEN rk % 8 ELSE 7 - rk % 8 END").as("shard"))
         .orderBy(col("doc_id"))
@@ -2135,15 +2135,15 @@ object TrainingOps {
       // sample_* lesson: a partitioning-dependent RNG makes the epoch
       // unreproducible): key = md5 of a seed-prefixed doc id, position =
       // exact global rank under (key, doc_id). Reshuffling is free — a
-      // new epoch is a new prefix, nothing re-reads state. Rank rides
-      // [[globalRowNumber]] (range-partitioned local row_number + exact
-      // collected offsets), so no task ever sorts more than ~1/P of the
-      // corpus; the md5 hex compares identically in both engines
-      // (split_leakage_safe's cross-engine device).
+      // new epoch is a new prefix, nothing re-reads state. Rank comes
+      // from [[graft.GlobalRank]] (range-partitioned local running count
+      // plus exact collected offsets), so no task ever sorts more than
+      // ~1/P of the corpus; the md5 hex compares identically in both
+      // engines (split_leakage_safe's cross-engine device).
       val k = T.documents(s, d).select(col("doc_id"),
         md5(concat(lit("epoch1:"), col("doc_id").cast("string"))).as("shuffle_key"))
-      globalRowNumber(k, Seq(col("shuffle_key").asc, col("doc_id").asc))
-        .select(col("doc_id"), col("shuffle_key"), col("rn").as("pos"))
+      GlobalRank(k, Seq(col("shuffle_key").asc, col("doc_id").asc))
+        .select(col("doc_id"), col("shuffle_key"), col("rank").as("pos"))
         .orderBy(col("doc_id"))
     },
 
@@ -2403,17 +2403,16 @@ object TrainingOps {
       // global rank, ntile's arithmetic applied directly
       // (stage = ⌊10·rk/n⌋ — sizes differ by ≤ 1 by construction), so
       // membership is deterministic under any partitioning/engine.
-      // Scale shape: [[globalRowNumber]]'s two bounded exchanges plus
-      // one 1-row count action; never a single-task window.
+      // Scale shape: [[graft.GlobalRank]]'s two bounded exchanges, whose
+      // per-row total is n; never a single-task window.
       val sc = T.documents(s, d)
         .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
         .withColumn("stop_hits",
           expr("size(filter(split(lower(text), ' '), t -> t IN ('the','a','of','and','to','is','in')))").cast("long"))
         .select(col("doc_id"), expr("(1000000 * stop_hits) DIV n_tokens").as("score_ppm"))
-      val n = sc.count()
-      globalRowNumber(sc, Seq(col("score_ppm").desc, col("doc_id").asc))
+      GlobalRank(sc, Seq(col("score_ppm").desc, col("doc_id").asc))
         .select(col("doc_id"), col("score_ppm"),
-          expr(s"((rn - 1) * 10) DIV $n").as("stage"))
+          expr("((rank - 1) * 10) DIV total").as("stage"))
         .orderBy(col("doc_id"))
     },
 
@@ -2974,14 +2973,10 @@ object TrainingOps {
       // (shared bit-deterministic ln template, integer mean). The
       // tercile assignment is EXACT SQL NTILE semantics — but computed
       // WITHOUT the |langs|-partition window over the corpus-sized doc
-      // table (the anti-pattern agg_weighted_median was cured of):
-      // range-repartition by (lang, nll, doc_id), collect the ≤
-      // parts×|langs| per-(partition, lang) counts as metadata, and
-      // rebuild each doc's global per-lang rank as offset + LOCAL
-      // row_number — the globalNtileMulti/partial-offset device with a
-      // partition key. doc_id breaks nll ties, so the rank (and hash)
-      // is boundary-placement-independent; the localCheckpoint pins one
-      // sampled range layout across the counts job and the rank job.
+      // table (the anti-pattern agg_weighted_median was cured of): the
+      // per-lang rank comes from [[graft.GlobalRank]] with lang as its
+      // group. doc_id breaks nll ties, so the rank (and hash) does not
+      // depend on where the range boundaries fall.
       // r19 A/B (negative result): persisting the exploded bigram stream
       // here measured 2.20 s → 2.42 s in same-batch runs (a solo run
       // showed 1.94 s — solo timings flatter the persist because nothing
@@ -2994,42 +2989,12 @@ object TrainingOps {
         .groupBy(col("doc_id"))
         .agg(expr(s"CAST((-sum(CAST(round(${lnProbTpl("(CAST(c12 AS DOUBLE) / CAST(c1 AS DOUBLE))")} * 1000.0) AS BIGINT))) DIV count(1) AS BIGINT)").as("nll"))
       val scored = T.documents(s, d).select(col("doc_id"), col("lang"), col("n_chars"))
-        // no language id → no language bucket (CCNet drops them too);
-        // a null key would NPE the literal-map rank lookup (NullInputSpec)
+        // no language id → no language bucket (CCNet drops them too, and
+        // so does the oracle)
         .where(col("lang").isNotNull)
         .join(nll, Seq("doc_id")) // inner: <2-token docs score nothing (oracle's len≥2)
-      // NOT checkpointed before the range exchange: measured A/B at sf0.1
-      // (4-sweep mins) put an extra pre-exchange localCheckpoint at
-      // 2.15 s vs 1.74 s without — the eager materialization costs more
-      // than RangePartitioner's sampling re-run saves here, because the
-      // broadcast model joins replay cheaply under AQE
-      val parted = scored
-        .repartitionByRange(32, col("lang"), col("nll"), col("doc_id"))
-        .withColumn("__pid", spark_partition_id())
-        .localCheckpoint() // pin ONE sampled range layout for both jobs below
-      val counts = parted.groupBy(col("__pid"), col("lang"))
-        .agg(count(lit(1)).as("c"))
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-      val offMap: Map[String, Long] = counts.map(_._2).distinct.flatMap { lang =>
-        var acc = 0L
-        counts.filter(_._2 == lang).sortBy(_._1).map { case (p, _, c) =>
-          val o = acc; acc += c; s"$p#$lang" -> o
-        }
-      }.toMap
-      val totMap: Map[String, Long] =
-        counts.groupBy(_._2).map { case (l, cs) => l -> cs.map(_._3).sum }
-      val rank = element_at(typedLit(offMap), concat_ws("#", col("__pid"), col("lang"))) +
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__pid"), col("lang")).orderBy(col("nll"), col("doc_id")))
-      parted
-        .withColumn("__rank", rank)
-        .withColumn("__n", element_at(typedLit(totMap), col("lang")))
-        // exact SQL NTILE: first n%k buckets are one row fatter
-        .withColumn("bucket", expr(
-          """CASE WHEN __rank <= (__n % 3) * (__n DIV 3 + 1)
-            |     THEN (__rank - 1) DIV (__n DIV 3 + 1) + 1
-            |     ELSE (__n % 3) + (__rank - 1 - (__n % 3) * (__n DIV 3 + 1))
-            |            DIV greatest(__n DIV 3, 1) + 1 END""".stripMargin).cast("long"))
+      GlobalRank(scored, Seq(col("nll"), col("doc_id")), by = Seq("lang"))
+        .withColumn("bucket", GlobalRank.ntile(col("rank"), col("total"), 3))
         .groupBy(col("lang"), col("bucket"))
         .agg(count(lit(1)).cast("long").as("n_docs"),
              sum(col("n_chars")).cast("long").as("sum_chars"),
@@ -3117,40 +3082,6 @@ object TrainingOps {
         .orderBy(col("doc_id"))
     }
   )
-
-  /** Exact 1-based global row number under a TOTAL order, without a
-    * single-task WindowExec: range-repartition on the order keys, local
-    * `row_number` per physical partition, then an exact per-partition
-    * count-offset table — ≤ shuffle-partitions rows, collected once and
-    * re-entering the plan as a literal when-chain (globalNtileMulti's
-    * offset device in single-dim form; the offsets make the result
-    * exact no matter how unevenly the sampled range boundaries split).
-    * RangePartitioner assigns ascending key ranges to ascending
-    * partition ids, so rank = offset(earlier pids) + local row_number
-    * IS the global rank — provided the order is total (callers must
-    * include a unique tie-break column; equal composite keys could
-    * straddle a boundary and break the invariant). Cost: two exchanges
-    * (range + the window's hash on _pid), no task ever sorting more
-    * than ~1/P of the input at any scale.
-    */
-  private def globalRowNumber(df: org.apache.spark.sql.DataFrame,
-                              order: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.DataFrame = {
-    val s = df.sparkSession
-    val parts = s.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
-    val ranged = graft.Caches.register(
-      df.repartitionByRange(parts, order: _*)
-        .withColumn("_pid", spark_partition_id()).persist())
-    val counts = ranged.groupBy(col("_pid")).agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts.map(_._2).scanLeft(0L)(_ + _).init
-    val offExpr = counts.map(_._1).zip(offsets).foldLeft(lit(0L)) {
-      case (acc, (pid, off)) => when(col("_pid") === pid, lit(off)).otherwise(acc)
-    }
-    ranged.withColumn("rn",
-        row_number().over(Window.partitionBy(col("_pid")).orderBy(order: _*)).cast("long")
-          + offExpr)
-      .drop("_pid")
-  }
 
   /** Frontier-delta single-source BFS, iterated TO CONVERGENCE: each
     * round expands only the nodes first reached last round (the delta,

@@ -75,39 +75,30 @@ object StreamingOps {
 
   final case class Ev(ts: java.sql.Timestamp, user_id: Long, value: Double)
 
-  /** Run `body` with a single shuffle partition. The in-process demos
-    * feed a handful of rows through real micro-batches; at the session
-    * default (32) every batch instantiates 32 HDFS-backed state stores,
-    * which is pure fixed cost here (measured 12.8s → ~1s for the watermark
-    * demo; 2 → 1 partition shaves the remaining per-batch store
-    * commit+snapshot in half). A real cluster job sizes this to its state
-    * volume instead. Streaming queries capture the conf at start, so
-    * scoping the override around query start + processAllAvailable is
-    * sound.
+  /** A new session for one in-process demo, with a single shuffle
+    * partition. The demos feed a handful of rows through real
+    * micro-batches; at the session default every batch instantiates one
+    * HDFS-backed state store per partition, which is pure fixed cost
+    * here (measured 12.8s → ~1s for the watermark demo at 32 → 1). A
+    * real cluster job sizes this to its state volume instead. The confs
+    * live on the demo's own session, so they never reach the caller's
+    * session or a query another thread plans on it.
+    *
+    * `noIdleBatches` also disables no-data micro-batches. ONLY for demos
+    * whose emitted set does not depend on watermark-driven window
+    * closure: the inner stream-stream join emits on match, and the
+    * stateful counters (NoTimeout, update mode) emit on data, so the
+    * empty batch fired after each watermark advance is pure fixed cost
+    * for them. The watermark-late demo must NOT use it — its append-mode
+    * emission and the late-drop both require the no-data batch that
+    * closes the window (verified: disabling it leaks the late event).
     */
-  private def withFewPartitions[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "1")
-    try body finally spark.conf.set(key, prev)
+  private def demoSession(spark: SparkSession, noIdleBatches: Boolean = false): SparkSession = {
+    val own = spark.newSession()
+    own.conf.set("spark.sql.shuffle.partitions", "1")
+    if (noIdleBatches) own.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    own
   }
-
-  /** Additionally disables no-data micro-batches. ONLY for demos whose
-    * emitted set does not depend on watermark-driven window closure: the
-    * inner stream-stream join emits on match, and the stateful counter
-    * (NoTimeout, update mode) emits on data, so the empty batch fired
-    * after each watermark advance is pure fixed cost for both. The
-    * watermark-late demo must NOT use this — its append-mode emission and
-    * the late-drop both require the no-data batch that closes the window
-    * (verified: disabling it leaks the late event).
-    */
-  private def withFewPartitionsNoIdleBatches[A](spark: SparkSession)(body: => A): A =
-    withFewPartitions(spark) {
-      val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val ndPrev = spark.conf.get(ndKey)
-      spark.conf.set(ndKey, "false")
-      try body finally spark.conf.set(ndKey, ndPrev)
-    }
 
   private def ts(minute: Int): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(f"2024-01-01 ${10 + minute / 60}%02d:${minute % 60}%02d:00")
@@ -116,7 +107,8 @@ object StreamingOps {
     * second contains an event older than the advanced watermark, which
     * append mode must drop from the emitted windows.
     */
-  def runWatermarkLateDemo(spark: SparkSession): DataFrame = withFewPartitions(spark) {
+  def runWatermarkLateDemo(caller: SparkSession): DataFrame = {
+    val spark = demoSession(caller)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
@@ -152,7 +144,8 @@ object StreamingOps {
     * per-user counters via flatMapGroupsWithState (the
     * mapGroupsWithState/flatMapGroupsWithState surface of §2.I).
     */
-  def runStatefulCounterDemo(spark: SparkSession): DataFrame = withFewPartitionsNoIdleBatches(spark) {
+  def runStatefulCounterDemo(caller: SparkSession): DataFrame = {
+    val spark = demoSession(caller, noIdleBatches = true)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
@@ -198,11 +191,11 @@ object StreamingOps {
     * StreamingSpec pins batch-split invariance and equality with a
     * driver-side fold.
     */
-  def runEwmaDemo(spark: SparkSession,
+  def runEwmaDemo(caller: SparkSession,
                   batches: Seq[Seq[Ev]] = Seq(
                     Seq(Ev(ts(0), 1L, 2.0), Ev(ts(1), 1L, 6.0), Ev(ts(0), 2L, 10.0)),
-                    Seq(Ev(ts(2), 1L, 4.0), Ev(ts(1), 2L, 20.0), Ev(ts(2), 2L, 30.0)))): DataFrame =
-    withFewPartitionsNoIdleBatches(spark) {
+                    Seq(Ev(ts(2), 1L, 4.0), Ev(ts(1), 2L, 20.0), Ev(ts(2), 2L, 30.0)))): DataFrame = {
+      val spark = demoSession(caller, noIdleBatches = true)
       import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
       val mem = MemoryStream[Ev]
@@ -260,36 +253,29 @@ object StreamingOps {
     }
   }
 
-  def runTransformWithStateDemo(spark: SparkSession): DataFrame = withFewPartitionsNoIdleBatches(spark) {
+  def runTransformWithStateDemo(caller: SparkSession): DataFrame = {
+    val spark = demoSession(caller, noIdleBatches = true)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store; scope the
-    // provider to this query and restore the session's default after
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
+    // transformWithState requires the RocksDB state store
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val mem = MemoryStream[Ev]
+    val counts = mem.toDS()
+      .groupByKey(_.user_id)
+      .transformWithState(new RunningCounter,
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+    val q = counts.writeStream.format("memory").queryName("tws_counts")
+      .outputMode(OutputMode.Update).start()
     try {
-      val mem = MemoryStream[Ev]
-      val counts = mem.toDS()
-        .groupByKey(_.user_id)
-        .transformWithState(new RunningCounter,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-      val q = counts.writeStream.format("memory").queryName("tws_counts")
-        .outputMode(OutputMode.Update).start()
-      try {
-        mem.addData(Ev(ts(0), 1L, 2.0), Ev(ts(1), 2L, 3.0))
-        q.processAllAvailable()
-        mem.addData(Ev(ts(2), 1L, 5.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      spark.table("tws_counts")
-        .groupBy(col("user_id"))
-        .agg(max(col("n_events")).as("n_events"), max(col("total")).as("total"))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+      mem.addData(Ev(ts(0), 1L, 2.0), Ev(ts(1), 2L, 3.0))
+      q.processAllAvailable()
+      mem.addData(Ev(ts(2), 1L, 5.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    spark.table("tws_counts")
+      .groupBy(col("user_id"))
+      .agg(max(col("n_events")).as("n_events"), max(col("total")).as("total"))
   }
 
   /** Stream-stream interval join (`stream_stream_join`): views joined to
@@ -298,8 +284,8 @@ object StreamingOps {
     * pair of constraints is what lets Spark expire buffered state; an
     * unbounded stream-stream join buffers both streams forever at 100 TB.
     */
-  def runStreamStreamJoinDemo(spark: SparkSession): org.apache.spark.sql.DataFrame =
-    withFewPartitionsNoIdleBatches(spark) {
+  def runStreamStreamJoinDemo(caller: SparkSession): org.apache.spark.sql.DataFrame = {
+      val spark = demoSession(caller, noIdleBatches = true)
       import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
       val views = MemoryStream[Ev]
@@ -342,7 +328,8 @@ object StreamingOps {
     * spec (and the smoke row count) pin est_stream == est_batch exactly,
     * plus the one-sided est ≥ true bound.
     */
-  def runCountMinMergeDemo(spark: SparkSession): DataFrame = withFewPartitions(spark) {
+  def runCountMinMergeDemo(caller: SparkSession): DataFrame = {
+    val spark = demoSession(caller)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val batches: Seq[Seq[Long]] = Seq(
@@ -378,9 +365,9 @@ object StreamingOps {
     * dump-then-load pattern (`osm_etl.py:88-91`) as a checkpointed
     * foreachBatch pipeline. Runs one real micro-batch over a staged dir.
     */
-  def runFileStreamDemo(spark: SparkSession, srcDir: String, outDir: String,
-                        checkpoint: String, schema: org.apache.spark.sql.types.StructType): Unit = withFewPartitions(spark) {
-    val stream = spark.readStream.schema(schema).parquet(srcDir)
+  def runFileStreamDemo(caller: SparkSession, srcDir: String, outDir: String,
+                        checkpoint: String, schema: org.apache.spark.sql.types.StructType): Unit = {
+    val stream = demoSession(caller).readStream.schema(schema).parquet(srcDir)
     val q = stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

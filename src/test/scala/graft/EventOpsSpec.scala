@@ -211,17 +211,15 @@ class EventOpsSpec extends GraftSuite {
   }
 
   test("event_rfm: the gated driver arm and the distributed arm are bit-interchangeable") {
-    // The size gate (globalNtileMulti) picks the driver fast path under
-    // the row budget and the bucket-column + rank-window dataflow above
-    // it; the DuckDB oracle only ever sees one arm (whichever the
-    // fixture size selects), so pin the equivalence engine-side by
-    // forcing BOTH and diffing row-for-row.
-    val key = "spark.sql.graft.ntileDriverGateRows"
-    def rows() = SparkEntry.queries("event_rfm")(spark, sf)
-      .collect().map(_.toSeq).toSeq
-    val dist = withConf(key -> "0")(rows()) // force the distributed arm
-    val drv = withConf(key -> s"${Long.MaxValue}")(rows()) // force the driver arm
+    // The row-count gate picks the driver arm for a small user table and
+    // the GlobalRank arm above it; the DuckDB oracle only ever sees one
+    // arm (whichever the fixture size selects), so pin the equivalence
+    // engine-side by running BOTH and diffing row-for-row.
+    val u = operators.EventOps.rfmUsers(spark, sf)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    val dist = rows(operators.EventOps.rfmDistributed(u))
+    val drv = rows(operators.EventOps.rfmOnDriver(u))
     assert(dist.nonEmpty && dist == drv,
-      "both globalNtileMulti arms must produce identical rows, schema order included")
+      "both event_rfm arms must produce identical rows, schema order included")
   }
 }

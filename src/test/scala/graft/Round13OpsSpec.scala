@@ -17,14 +17,13 @@ class Round13OpsSpec extends GraftSuite {
     // deliberately does NOT use a global Spark window — the r12 defect
     // was exactly that single-task plan, and this suite must stay free
     // of `WindowExec: No Partition Defined` warnings.
-    // Force the DISTRIBUTED arm: at fixture scale the size gate would
-    // pick the driver fast path, and this pin exists precisely to hold
-    // the scale path to the textbook formula.
-    val got = withConf("spark.sql.graft.ntileDriverGateRows" -> "0") {
-      SparkEntry.queries("event_rfm")(spark, sf).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))))
-        .toMap
-    }
+    // Call the DISTRIBUTED arm: at fixture scale the row-count gate
+    // picks the driver arm, and this pin exists precisely to hold the
+    // scale path to the textbook formula.
+    val got = operators.EventOps.rfmDistributed(operators.EventOps.rfmUsers(spark, sf))
+      .collect()
+      .map(r => r.getLong(0) -> ((r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))))
+      .toMap
     val u = T.events(spark, sf)
       .groupBy(col("user_id"))
       .agg(max(unix_millis(col("ts"))).as("last_ms"),

@@ -68,6 +68,30 @@ class StreamingSpec extends GraftSuite {
     assert(b(2L)._2 > 20.0, "ewma must tilt toward recent values vs the plain mean")
   }
 
+  test("two streaming keys on one session from two threads leave its confs untouched") {
+    // Each demo sets its confs on a session of its own; the caller's
+    // session must read the same values throughout and afterwards.
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.streaming.stateStore.providerClass")
+    def confs() = keys.map(spark.conf.getOption)
+    val before = confs()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val runs = try {
+      val fs = Seq("stream_transform_with_state", "stream_watermark_late").map { key =>
+        pool.submit(new java.util.concurrent.Callable[Long] {
+          def call(): Long = (1 to 2).map(_ => SparkEntry.queries(key)(spark, sf).count()).sum
+        })
+      }
+      val seen = scala.collection.mutable.Set.empty[Seq[Option[String]]]
+      while (!fs.forall(_.isDone)) { seen += confs(); Thread.sleep(5) }
+      assert(seen.forall(_ == before), s"caller confs changed mid-run: $seen vs $before")
+      fs.map(_.get())
+    } finally pool.shutdown()
+    assert(runs.forall(_ > 0))
+    assert(confs() == before, s"caller confs changed: ${confs()} vs $before")
+  }
+
   test("stream_count_min: micro-batch-merged sketch is bit-identical to the batch sketch") {
     val rows = streaming.StreamingOps.runCountMinMergeDemo(spark).collect()
     assert(rows.length == 60)

@@ -62,12 +62,6 @@ object RegistrySweep {
     "stream_transform_with_state",
     "sink_stream_foreachbatch", "source_stream_file", "source_dsv2")
 
-  /** The StreamOps keys scope session-wide confs (shuffle partitions,
-    * no-data batches, the state store) around their streaming queries,
-    * so each runs on its own `newSession()`: those confs never reach a
-    * key that plans on another thread. */
-  private lazy val ownSession: Set[String] = operators.StreamOps.all.map(_.key).toSet
-
   /** Degraded clone of sf0.001 (DegradedCorpus, shared with the
     * oracle-parity lane). */
   lazy val nulledDir: String = {
@@ -110,8 +104,7 @@ object RegistrySweep {
   def sweep(spark: SparkSession, dir: String, qs: Seq[Q]): Seq[Swept] = {
     val pool = Executors.newFixedThreadPool(threads)
     try qs.toVector.map { q =>
-        val session = if (ownSession(q.key)) spark.newSession() else spark
-        pool.submit(new Callable[Swept] { def call(): Swept = one(session, dir, q) })
+        pool.submit(new Callable[Swept] { def call(): Swept = one(spark, dir, q) })
       }.map(_.get())
     finally pool.shutdown()
   }

@@ -9,10 +9,8 @@ Each dir holds one `<key>.txt` per key, as written by
 is masked of what changes from run to run without changing the plan:
 expression ids (`#123`, `#45L`), plan ids, `graft_*` scratch dirs and
 other java.io.tmpdir paths, lambda and anonymous-function class names,
-object hash codes, the RDD ids and call sites of `ExistingRDD` scans, and
-the per-partition row offsets that `globalRowNumber` folds into its plan
-as literals (they come from a range-partition sample). With `-v` it
-also prints a unified diff of each differing key.
+object hash codes, and the RDD ids and call sites of `ExistingRDD` scans.
+With `-v` it also prints a unified diff of each differing key.
 Exits 1 when any key differs or is missing on one side.
 """
 import difflib
@@ -29,7 +27,6 @@ MASKS = [
     (re.compile(r"\$anonfun\$[\w$]*"), "$anonfun"),
     (re.compile(r"@[0-9a-f]{5,}\b"), "@H"),
     (re.compile(r"RDD\[\d+\]( at [^,\]\n]*)?"), "RDD[N]"),
-    (re.compile(r"(_pid#N = \d+\) THEN )\d+"), r"\1<offset>"),
 ]
 
 
